@@ -165,8 +165,8 @@ def etl_batch_post(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Globally-indexed distributed sink: batch boundaries follow a
     global id-order row numbering (bucketed two-level cumsum — no
-    repartition(1) funnel), one POST per batch_id group, posts spread
-    across executors.  Receipts are identical to a sequential
+    repartition(1) funnel), a batch_id shuffle so each task posts whole
+    batches, posts spread across executors.  Receipts are identical to a sequential
     single-writer chunking, which is what the oracle describes.
     """
     root = _fixture_dir(spark, sf_dir)

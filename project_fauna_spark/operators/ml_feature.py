@@ -153,12 +153,6 @@ def ml_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # twice per invocation (and the fitted-model UDF defeats the
     # cross-invocation plan-identity cache, so every warm run pays it
     # again).  The pin carries doc_id + the binary sparse vector only —
-    # int indices, no text, no shingle strings (r13; guide §5).
-    # approxSimilarityJoin(slim, slim) transforms BOTH sides separately,
-    # so without a pin the shingle build + CountVectorizer transform run
-    # twice per invocation (and the fitted-model UDF defeats the
-    # cross-invocation plan-identity cache, so every warm run pays it
-    # again).  The pin carries doc_id + the binary sparse vector only —
     # int indices, no text, no shingle strings (r13; guide §5).  A
     # pre-transformed (features + hashes) pin was ALSO measured and
     # lost (6.39 vs 5.77 s): the wider pin costs more to materialize

@@ -2,10 +2,18 @@
 
 Reference lifecycle (SURVEY.md §3, cli.py:40-43): enumerate ids →
 fetch details → transform → batch-post, with hard barriers and full
-driver-memory materialization between stages.  Spark collapses that
-into a single pipelined plan: stage boundaries become plan nodes; no
-driver materialization anywhere; the only barriers left are the ones
-the data requires (none — every stage is narrow over ids).
+driver-memory materialization between stages.  Here the stages are
+plan nodes and the driver never holds the data.  The plan's shape:
+
+* the listing pages and the listed ids are spread over executors by
+  two round-robin repartitions, so pages and detail GETs fan out;
+* the sink's global row numbering shuffles by id bucket (plus a tiny
+  broadcast table of bucket offsets), and its posting shuffles by
+  batch id so each task posts whole batches;
+* one pin (``cache.cached``) holds the transformed records, because
+  the sink reads them twice — for the bucket row numbers and for the
+  bucket counts.  The pin is what makes the fetch exactly-once: each
+  listed id is GET once (plus retries), never once per sink branch.
 """
 
 from __future__ import annotations
@@ -88,7 +96,10 @@ def run_pipeline(
     """End-to-end: ids → details → transform → batch-post receipts.
 
     Returns the receipts DataFrame; nothing executes until it is
-    consumed (the whole ETL is one lazy plan).
+    consumed (the whole ETL is one lazy plan).  The sink pins the
+    transformed records with ``cache.cached``; a long-lived session
+    frees the pin with ``cache.release_cached()`` once the receipts
+    are consumed.
     """
     ids = paginated_ids_df(spark, transport_factory, policy=policy)
     details = fetch_details_df(ids, transport_factory, policy=policy)

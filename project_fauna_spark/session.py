@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import re
 import tempfile
 import zipfile
 
@@ -42,14 +43,18 @@ def _env_bool(name: str, default: bool) -> str:
     return "true" if default else "false"
 
 
-def _env_bytes(name: str, default: str) -> str:
-    """Validated byte-size env knob (Spark size syntax, e.g. '64m')."""
-    import re
+# Spark's byte-string grammar (JavaUtils.byteStringAs): a whole number
+# with an optional, case-insensitive unit suffix.
+_SPARK_BYTES = re.compile(r"\d+(?:[bkmgtp]|[kmgtp]b)?", re.IGNORECASE)
 
+
+def _env_bytes(name: str, default: str) -> str:
+    """Validated byte-size env knob in Spark's size syntax ('64m',
+    '64mb', '1t', '512KB', '1048576')."""
     raw = os.environ.get(name)
     if raw is None:
         return default
-    if re.fullmatch(r"\d+[bkmgBKMG]?", raw.strip()):
+    if _SPARK_BYTES.fullmatch(raw.strip()):
         return raw.strip()
     import logging
 

@@ -22,10 +22,12 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
+from project_fauna_spark.cache import cached
 from project_fauna_spark.sources.http import (
     RetryPolicy,
     TransportFactory,
     request_with_retry,
+    transport_takes_headers,
 )
 
 
@@ -40,10 +42,21 @@ def chunked(seq: Sequence, size: int) -> Iterable[list]:
         yield list(seq[i : i + size])
 
 
+RECEIPT_SCHEMA = "batch_index long, n_records long, status long"
+
+
+def _receipts_frame(receipts: list[tuple[int, int, int]]) -> pd.DataFrame:
+    return pd.DataFrame(receipts, columns=["batch_index", "n_records", "status"]).astype("int64")
+
+
+def _record(rec: dict) -> dict:
+    """T6: null fields are omitted, not serialized as null."""
+    return {k: v for k, v in rec.items() if not pd.isna(v)}
+
+
 def post_batches_with_receipts(
     df: DataFrame,
     transport_factory: TransportFactory,
-    sink_path: str = "/animals/v1/home",
     batch_size: int = 100,
     policy: RetryPolicy = RetryPolicy(),
 ) -> DataFrame:
@@ -55,33 +68,27 @@ def post_batches_with_receipts(
     an action consumes the receipts, keeping it composable in a plan.
     """
     size = clamp_batch_size(batch_size)
-    columns = df.columns
 
     def post_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         transport = transport_factory()
+        hdrs = transport_takes_headers(transport)
         rows: list[dict] = []
         for pdf in batches:
-            for rec in pdf.to_dict(orient="records"):
-                # T6: null fields are omitted, not serialized as null.
-                rows.append({k: v for k, v in rec.items() if not pd.isna(v)})
+            rows.extend(_record(rec) for rec in pdf.to_dict(orient="records"))
         receipts = []
         for i, chunk in enumerate(chunked(rows, size)):
             body = json.dumps(chunk, default=str)
-            status, _ = request_with_retry(transport, "POST", body, policy)
-            receipts.append({"batch_index": i, "n_records": len(chunk), "status": status})
-        yield pd.DataFrame(receipts, columns=["batch_index", "n_records", "status"]).astype(
-            {"batch_index": "int64", "n_records": "int64", "status": "int64"}
-        )
+            status, _ = request_with_retry(transport, "POST", body, policy, takes_headers=hdrs)
+            receipts.append((i, len(chunk), status))
+        yield _receipts_frame(receipts)
 
-    _ = columns
-    return df.mapInPandas(post_partition, schema="batch_index long, n_records long, status long")
+    return df.mapInPandas(post_partition, schema=RECEIPT_SCHEMA)
 
 
 def post_batches_globally_indexed(
     df: DataFrame,
     transport_factory: TransportFactory,
     order_col: str,
-    sink_path: str = "/animals/v1/home",
     batch_size: int = 100,
     policy: RetryPolicy = RetryPolicy(),
     bucket_rows: int = 1024,
@@ -92,25 +99,29 @@ def post_batches_globally_indexed(
     Rows get a global row number in ``order_col`` order via a bucketed
     two-level cumsum (local window per ``order_col div bucket_rows``
     bucket + a tiny broadcast offset table — never one task for the
-    whole sink), then ``batch_id = row_number div batch_size`` keys an
-    ``applyInPandas`` group: one POST per batch, batches spread across
-    executors by the batch_id shuffle.  Receipts are identical to a
-    sequential single-writer chunking of the ``order_col``-sorted
-    rows, so re-runs (and the oracle) see the same batch set
-    regardless of input partitioning.
+    whole sink), then ``batch_id = row_number div batch_size`` keys a
+    shuffle: each partition receives whole batches, sorted, and posts
+    each one as its run of rows ends, through one transport per
+    partition.  Receipts are identical to a sequential single-writer
+    chunking of the ``order_col``-sorted rows, so re-runs (and the
+    oracle) see the same batch set regardless of input partitioning.
+
+    The row numbers and the bucket counts both read ``df``, so it is
+    pinned with :func:`~project_fauna_spark.cache.cached`: without the
+    pin each branch recomputes ``df`` and repeats whatever side effects
+    produced it (the pipeline's detail GETs), and a non-idempotent
+    source could then feed the two branches different rows.
     """
     from pyspark.sql import Window as W, functions as F
 
     size = clamp_batch_size(batch_size)
+    data_cols = df.columns
 
-    bkt = F.expr(f"{order_col} div {bucket_rows}")
     w_local = W.partitionBy("__bkt").orderBy(order_col)
     w_off = W.partitionBy(F.lit(1)).orderBy("__bkt").rowsBetween(
         W.unboundedPreceding, W.currentRow
     )
-    rows = df.withColumn("__bkt", bkt).withColumn(
-        "__local_rn", F.row_number().over(w_local)
-    )
+    rows = cached(df).withColumn("__bkt", F.expr(f"{order_col} div {bucket_rows}"))
     offsets = (
         rows.groupBy("__bkt")
         .agg(F.count("*").alias("__n"))
@@ -118,26 +129,38 @@ def post_batches_globally_indexed(
         .select("__bkt", "__offset")
     )
     keyed = (
-        rows.join(F.broadcast(offsets), "__bkt")
+        rows.withColumn("__local_rn", F.row_number().over(w_local))
+        .join(F.broadcast(offsets), "__bkt")
         .withColumn("__rn", F.col("__local_rn") + F.col("__offset") - 1)
         .withColumn("__batch_id", F.expr(f"__rn div {size}"))
         .drop("__bkt", "__local_rn", "__offset")
     )
-    data_cols = [c for c in df.columns]
 
-    def post_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    def post_partition(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         transport = transport_factory()
-        pdf = pdf.sort_values("__rn")
-        batch_id = int(pdf["__batch_id"].iloc[0])
-        recs = []
-        for rec in pdf[data_cols].to_dict(orient="records"):
-            recs.append({k: v for k, v in rec.items() if not pd.isna(v)})
-        body = json.dumps(recs, default=str)
-        status, _ = request_with_retry(transport, "POST", body, policy)
-        return pd.DataFrame(
-            [{"batch_index": batch_id, "n_records": len(recs), "status": status}]
-        ).astype({"batch_index": "int64", "n_records": "int64", "status": "int64"})
+        hdrs = transport_takes_headers(transport)
+        receipts: list[tuple[int, int, int]] = []
+        batch_id, recs = -1, []
 
-    return keyed.groupBy("__batch_id").applyInPandas(
-        post_group, schema="batch_index long, n_records long, status long"
+        def post() -> None:
+            body = json.dumps(recs, default=str)
+            status, _ = request_with_retry(transport, "POST", body, policy, takes_headers=hdrs)
+            receipts.append((batch_id, len(recs), status))
+
+        for pdf in frames:
+            records = pdf[data_cols].to_dict(orient="records")
+            for bid, rec in zip(pdf["__batch_id"].tolist(), records):
+                if bid != batch_id:
+                    if recs:
+                        post()
+                    batch_id, recs = bid, []
+                recs.append(_record(rec))
+        if recs:
+            post()
+        yield _receipts_frame(receipts)
+
+    return (
+        keyed.repartition("__batch_id")
+        .sortWithinPartitions("__batch_id", "__rn")
+        .mapInPandas(post_partition, schema=RECEIPT_SCHEMA)
     )

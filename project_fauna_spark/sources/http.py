@@ -28,10 +28,13 @@ connection pool, and the driver never proxies data.
 
 from __future__ import annotations
 
+import inspect
 import json
 import os
 import random
+import sys
 import time
+import uuid
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
 
@@ -85,10 +88,13 @@ class RetryPolicy:
 SCRIPT_RETRY_PROFILE = RetryPolicy(retries=6, backoff_base=0.5, backoff_cap=8.0)
 
 
-def _transport_takes_headers(transport: Transport) -> bool:
-    """True if the transport callable accepts a third (headers) arg."""
-    import inspect
+def transport_takes_headers(transport: Transport) -> bool:
+    """True if the transport callable accepts a third (headers) arg.
 
+    ``inspect.signature`` costs more than a file-backed request, so a
+    task resolves this once for the transport it owns and passes the
+    answer to every :func:`request_with_retry` call it makes.
+    """
     try:
         sig = inspect.signature(transport)
     except (TypeError, ValueError):
@@ -102,6 +108,10 @@ def _transport_takes_headers(transport: Transport) -> bool:
     return has_var or len(positional) >= 3
 
 
+def _log_stderr(msg: str) -> None:
+    print(msg, file=sys.stderr)
+
+
 def request_with_retry(
     transport: Transport,
     method: str,
@@ -110,6 +120,7 @@ def request_with_retry(
     sleep: Callable[[float], None] = time.sleep,
     req_id: str | None = None,
     log: Callable[[str], None] | None = None,
+    takes_headers: bool | None = None,
 ) -> Response:
     """One logical request with the full reliability taxonomy applied.
 
@@ -118,14 +129,14 @@ def request_with_retry(
     transports that accept a headers argument; 2-arg transports keep
     working), and retry / give-up / fatal transitions emit structured
     ``[req#<id>]`` stderr lines in the reference's format.
+    ``takes_headers`` is :func:`transport_takes_headers` of
+    ``transport``; when omitted it is worked out on this call.
     """
-    import sys
-    import uuid
-
     rid = req_id or str(uuid.uuid4())
     headers = {"X-Request-Id": rid}
-    emit = log or (lambda msg: print(msg, file=sys.stderr))
-    takes_headers = _transport_takes_headers(transport)
+    emit = log or _log_stderr
+    if takes_headers is None:
+        takes_headers = transport_takes_headers(transport)
 
     attempt = 0
     while True:
@@ -178,8 +189,6 @@ def _safe_json(body: str, default: dict) -> dict:
         parsed = json.loads(body)
         return parsed if isinstance(parsed, dict) else default
     except ValueError:
-        import sys
-
         print("warning: non-JSON response; substituting empty value", file=sys.stderr)
         return default
 
@@ -222,10 +231,13 @@ def paginated_ids_df(
 
     def fetch_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         t = transport_factory()
+        hdrs = transport_takes_headers(t)
         for pdf in batches:
             ids: list[int] = []
             for page in pdf["page"]:
-                _, pbody = request_with_retry(t, "GET", f"{base_path}?page={int(page)}", policy)
+                _, pbody = request_with_retry(
+                    t, "GET", f"{base_path}?page={int(page)}", policy, takes_headers=hdrs
+                )
                 payload = _safe_json(pbody, {"items": []})
                 ids.extend(int(item["id"]) for item in payload.get("items", []))
             yield pd.DataFrame({"id": pd.Series(ids, dtype="int64")})
@@ -246,11 +258,14 @@ def fetch_details_df(
 
     def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         t = transport_factory()
+        hdrs = transport_takes_headers(t)
         for pdf in batches:
             rows: list[dict] = []
             for rid in pdf["id"]:
                 try:
-                    _, body = request_with_retry(t, "GET", f"{base_path}/{int(rid)}", policy)
+                    _, body = request_with_retry(
+                        t, "GET", f"{base_path}/{int(rid)}", policy, takes_headers=hdrs
+                    )
                 except HttpError:
                     continue  # P3: drop failed id, keep going
                 detail = _safe_json(body, {})

@@ -190,6 +190,15 @@ def test_transform_golden_rows(spark, api_dir):
     assert_output_contract(transform_details(details, AS_OF))
 
 
+def _posted_bodies(root):
+    posts_dir = os.path.join(root, "posts")
+    bodies = []
+    for name in os.listdir(posts_dir):
+        with open(os.path.join(posts_dir, name)) as f:
+            bodies.append(json.load(f))
+    return bodies
+
+
 def test_end_to_end_pipeline_batching(spark, api_dir):
     receipts = run_pipeline(
         spark, lambda: FileBackedTransport(api_dir), batch_size=30, as_of=AS_OF, policy=FAST
@@ -198,11 +207,7 @@ def test_end_to_end_pipeline_batching(spark, api_dir):
     assert sum(r["n_records"] for r in rows) == 100
     assert all(r["n_records"] <= 30 for r in rows)
     assert all(r["status"] == 200 for r in rows)
-    posts_dir = os.path.join(api_dir, "posts")
-    posted = []
-    for name in os.listdir(posts_dir):
-        with open(os.path.join(posts_dir, name)) as f:
-            posted.extend(json.load(f))
+    posted = [rec for body in _posted_bodies(api_dir) for rec in body]
     assert len(posted) == 100
     by_id = {p["id"]: p for p in posted}
     assert "born_at" not in by_id[1]  # T6: null omitted from JSON
@@ -214,3 +219,83 @@ def test_batch_size_clamp(spark, api_dir):
         spark, lambda: FileBackedTransport(api_dir), batch_size=500, as_of=AS_OF, policy=FAST
     )
     assert all(r["n_records"] <= 100 for r in receipts.collect())
+
+
+def test_pipeline_fetches_each_detail_once(spark, api_dir, tmp_path):
+    """S2 exactly once: every listed id is GET once, plus one retry per
+    injected failure — not once per consumer of the fetched frame."""
+    counters = str(tmp_path / "counters")
+    os.makedirs(counters)
+
+    class CountingTransport:
+        """Fails each path's first call with a retryable 500 and logs
+        every detail GET to a per-process file: Spark's Python workers
+        are separate processes, so in-memory counters never reach the
+        driver."""
+
+        def __init__(self):
+            self.inner = FlakyTransport(FileBackedTransport(api_dir), n_failures=1)
+
+        def __call__(self, method, path):
+            status, body = self.inner(method, path)
+            if method == "GET" and "?page=" not in path:
+                with open(os.path.join(counters, f"{os.getpid()}.log"), "a") as f:
+                    f.write(f"{status}\n")
+            return status, body
+
+    receipts = run_pipeline(spark, CountingTransport, batch_size=30, as_of=AS_OF, policy=FAST)
+    assert sum(r["n_records"] for r in receipts.collect()) == 100
+    statuses = []
+    for name in os.listdir(counters):
+        with open(os.path.join(counters, name)) as f:
+            statuses.extend(int(line) for line in f)
+    injected = statuses.count(500)
+    assert injected == 100  # one injected failure per listed id
+    assert len(statuses) == 100 + injected
+
+
+def _inmemory_relations(plan) -> int:
+    n, stack = 0, [plan]
+    while stack:
+        node = stack.pop()
+        n += node.getClass().getSimpleName() == "InMemoryRelation"
+        cs = node.children()
+        stack.extend(cs.apply(i) for i in range(cs.size()))
+    return n
+
+
+@pytest.mark.parametrize("batch_size", [7, 100])
+def test_globally_indexed_batches_span_buckets(spark, tmp_path, batch_size):
+    """Batch boundaries follow the global id order across many row-number
+    buckets (and straddle them), whatever the input partitioning."""
+    from project_fauna_spark.cache import release_cached
+    from project_fauna_spark.sinks.batch_post import post_batches_globally_indexed
+
+    # 150 ids over 10 buckets of 16 ids; every 4th name is NULL (T6).
+    rows = [(3 * i + 1, None if i % 4 == 0 else f"n{i}") for i in range(150)]
+    expected = [
+        {"id": rid, **({"name": name} if name is not None else {})} for rid, name in rows
+    ]
+    base = spark.createDataFrame(list(reversed(rows)), "id long, name string")
+    seen = {}
+    for n_parts in (1, 7):
+        root = str(tmp_path / f"sink-{n_parts}")
+        os.makedirs(root)
+        receipts_df = post_batches_globally_indexed(
+            base.repartition(n_parts),
+            lambda: FileBackedTransport(root),
+            order_col="id",
+            batch_size=batch_size,
+            policy=FAST,
+            bucket_rows=16,
+        )
+        # The pinned input is read by both the bucket row numbers and
+        # the bucket counts; no other node reads it.
+        assert _inmemory_relations(receipts_df._jdf.queryExecution().optimizedPlan()) == 2
+        receipts = sorted(tuple(r) for r in receipts_df.collect())
+        release_cached()
+        chunks = [expected[i : i + batch_size] for i in range(0, len(expected), batch_size)]
+        assert sorted(_posted_bodies(root), key=lambda b: b[0]["id"]) == chunks
+        assert receipts == [(i, len(c), 200) for i, c in enumerate(chunks)]
+        seen[n_parts] = receipts
+    assert seen[1] == seen[7]
