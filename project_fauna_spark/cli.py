@@ -5,6 +5,9 @@ same user-experience contract (cli.py:46-53): a config banner before
 work starts, ``Validation error: <detail>`` + exit code 2 on a 422,
 ``Aborted.`` on Ctrl-C.  The execution substrate is a SparkSession
 instead of an asyncio loop; concurrency maps to partition fan-out.
+Both modes configure the session with
+:func:`~project_fauna_spark.session.configure_session`, so timestamps
+format in UTC whatever the host timezone.
 """
 
 from __future__ import annotations
@@ -36,6 +39,7 @@ def run_query(args) -> int:
     from pyspark.sql import SparkSession
 
     from project_fauna_spark.plans import QUERIES
+    from project_fauna_spark.session import configure_session
 
     if args.list_queries:
         for name in QUERIES:
@@ -44,10 +48,8 @@ def run_query(args) -> int:
     if args.query not in QUERIES:
         print(f"Unknown query: {args.query}", file=sys.stderr)
         return 2
-    spark = (
-        SparkSession.builder.master(args.master)
-        .appName("fauna-spark-query")
-        .getOrCreate()
+    spark = configure_session(
+        SparkSession.builder.master(args.master).appName("fauna-spark-query").getOrCreate()
     )
     df = QUERIES[args.query](spark, args.sf_dir)
     if args.explain:
@@ -64,6 +66,7 @@ def run(args) -> int:
     from pyspark.sql import SparkSession
 
     from project_fauna_spark.pipeline import run_pipeline
+    from project_fauna_spark.session import configure_session
 
     print(
         f"""
@@ -77,10 +80,16 @@ def run(args) -> int:
         =================================
         """
     )
-    spark = SparkSession.builder.master(args.master).appName("fauna-spark-etl").getOrCreate()
+    spark = configure_session(
+        SparkSession.builder.master(args.master).appName("fauna-spark-etl").getOrCreate()
+    )
     policy = RetryPolicy(retries=args.retries)
     receipts = run_pipeline(
-        spark, _transport_factory(args), batch_size=args.batch_size, policy=policy
+        spark,
+        _transport_factory(args),
+        batch_size=args.batch_size,
+        policy=policy,
+        partitions=args.concurrency,
     ).collect()
     n_batches = len(receipts)
     n_records = sum(r["n_records"] for r in receipts)

@@ -25,10 +25,6 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-import os
-import warnings
-from functools import reduce
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions as F
 
 from project_fauna_spark.functions.shingles import (
@@ -267,12 +263,6 @@ def _lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle array.  The wide sketch table is persisted once and joined
     back BY ID for just the distinct surviving candidates, so sketch
     width never multiplies the band shuffle.
-
-    Spill bounding: FAUNA_LSH_BANDS_IN_FLIGHT=B stages the band join
-    into ceil(N_BANDS/B) sequential passes (identical candidate set —
-    pinned by tests/test_round9_properties.py); peak in-flight shuffle
-    is B/N_BANDS of the single-pass footprint.  See SCALING.md round-9
-    addendum for the measured 1000× datapoint this enables locally.
     """
     from pyspark.storagelevel import StorageLevel
 
@@ -293,74 +283,32 @@ def _lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sig = cached(sig, StorageLevel.MEMORY_AND_DISK)
 
-    def band_table(band_ids):
-        """Narrow band table for a subset of bands: ids + band key only."""
-        return sig.select(
-            "doc_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band_id"),
-                            F.hash(F.slice("sig", b * BAND_SIZE + 1, BAND_SIZE)).alias("band_hash"),
-                        )
-                        for b in band_ids
-                    ]
-                )
-            ).alias("band"),
-        ).select("doc_id", "band.band_id", "band.band_hash")
-
-    def bucket_pairs(bands):
-        a, b = bands.alias("a"), bands.alias("b")
-        return (
-            a.join(
-                b,
-                (F.col("a.band_id") == F.col("b.band_id"))
-                & (F.col("a.band_hash") == F.col("b.band_hash"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
+    # Narrow band table: ids + band key only.
+    bands = sig.select(
+        "doc_id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(band).alias("band_id"),
+                        F.hash(F.slice("sig", band * BAND_SIZE + 1, BAND_SIZE)).alias("band_hash"),
+                    )
+                    for band in range(N_BANDS)
+                ]
             )
-            .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-            .dropDuplicates(["doc_a", "doc_b"])
+        ).alias("band"),
+    ).select("doc_id", "band.band_id", "band.band_hash")
+    a, b = bands.alias("a"), bands.alias("b")
+    ids = (
+        a.join(
+            b,
+            (F.col("a.band_id") == F.col("b.band_id"))
+            & (F.col("a.band_hash") == F.col("b.band_hash"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
-
-    # Band-staged execution (VERDICT r8 item 5): FAUNA_LSH_BANDS_IN_FLIGHT=B
-    # processes the bands in ceil(N_BANDS/B) sequential passes, each
-    # materializing only its own candidate ids (16-byte rows) to executor
-    # disk before the next pass's band shuffle starts — peak in-flight
-    # shuffle footprint is B/N_BANDS of the single-pass plan.  The
-    # candidate SET is identical (union over bands of bucket collisions,
-    # deduped) so results never depend on B.  Default: all bands in one
-    # declarative plan — Catalyst sees the whole union and local[32]/a
-    # cluster overlaps the band shuffles; staging is the spill-bounding
-    # mode for disk-tight single nodes (the local 1000× probe) and for
-    # capping concurrent shuffle spill per executor at cluster scale.
-    # Validate/clamp the knob (ADVICE r9): non-integer → warn + single-pass
-    # fallback; values < 1 clamp to 1 (0 would be a zero range-step, a
-    # negative an empty passes list → confusing tracebacks mid-query).
-    _bif_raw = os.environ.get("FAUNA_LSH_BANDS_IN_FLIGHT", str(N_BANDS))
-    try:
-        bif = max(1, int(_bif_raw))
-    except ValueError:
-        warnings.warn(
-            f"FAUNA_LSH_BANDS_IN_FLIGHT={_bif_raw!r} is not an integer; "
-            "falling back to single-pass execution",
-            stacklevel=2,
-        )
-        bif = N_BANDS
-    if bif >= N_BANDS:
-        ids = bucket_pairs(band_table(range(N_BANDS)))
-    else:
-        passes = []
-        for lo in range(0, N_BANDS, bif):
-            ids_g = cached(
-                bucket_pairs(band_table(range(lo, min(lo + bif, N_BANDS)))),
-                StorageLevel.DISK_ONLY,
-            )
-            ids_g.count()  # run this pass to completion before the next
-            passes.append(ids_g)
-        ids = reduce(DataFrame.unionByName, passes).dropDuplicates(
-            ["doc_a", "doc_b"]
-        )
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .dropDuplicates(["doc_a", "doc_b"])
+    )
     # Fetch sketches by id for survivors only.
     cands = ids.join(
         sig.select(
@@ -408,8 +356,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(32 perms) + LSH(8 bands × 4 rows) near-dup candidates.
 
     Composes the production path (:func:`_lsh_verified_pairs` — see its
-    docstring for the sketch/band/verify design and the
-    FAUNA_LSH_BANDS_IN_FLIGHT spill-bounding knob) with the graded edge.
+    docstring for the sketch/band/verify design) with the graded edge.
 
     Graded edge (bound-style, agg_hll_sketch_merge pattern): the band
     assignments are xxhash64-seeded — Spark-deterministic but not

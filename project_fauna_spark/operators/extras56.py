@@ -107,26 +107,13 @@ def dq_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-round gap ulp-scale; rounding alone would not be safe after an
     engine-ordered sum).  The ``_r9`` suffix flags the rounding.
 
-    Scale: edges are exact per-group deciles by default (one sort of
-    the baseline per 5-value group key — fine at current group
-    cardinality); ``FAUNA_PSI_APPROX_EDGES=<accuracy>`` (e.g. 10000)
-    switches edge estimation to the GK sketch ``percentile_approx`` —
-    the 100 TB spelling: no per-group sort, one map-combined sketch
-    pass.  PSI is bin-robust by construction (the statistic compares
-    RELATIVE frequencies in whatever bins are chosen; sketch-shifted
-    edges are still a valid binning), so the approx path changes bucket
-    boundaries by ≤ rank-error N/accuracy but keeps the monitor's
-    semantics; n_base/n_cur are bucket-sums and provably invariant to
-    edge placement.  The GRADED form stays exact because the driver
-    oracle's ``quantile_cont`` must see bit-identical edges; the
-    invariants of the approx path are pinned by
-    ``tests/test_round12_properties.py`` instead (VERDICT r11 item 5).
+    Scale: edges are exact per-group deciles (one sort of the baseline
+    per 5-value group key — fine at current group cardinality); the
+    DuckDB oracle's ``quantile_cont`` must see bit-identical edges.
     Everything after the edges is a broadcast of ≤9 edge values per
     group + one map-combined count aggregate over
     (type, bucket ≤ 10·|types| groups).
     """
-    import os
-    import warnings
     # ts IS NOT NULL symmetrically on BOTH sides (ADVICE r11): Spark's
     # (ts >= cut).cast('int') is NULL for NULL ts (row silently leaves
     # both n_base and n_cur), while a CASE ... ELSE 0 oracle would call
@@ -138,28 +125,11 @@ def dq_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cut = F.lit(_CUT).cast("timestamp")
     qarr = ", ".join(f"{q:.1f}D" for q in _QS)
-    # Validate/clamp the scale knob the FAUNA_LSH_BANDS_IN_FLIGHT way:
-    # non-integer → warn + exact-edge fallback; values < 10 clamp to 10
-    # (accuracy is a rank-error divisor; percentile_approx requires a
-    # positive int and tiny values make the deciles collapse).
-    _acc_raw = os.environ.get("FAUNA_PSI_APPROX_EDGES", "").strip()
-    acc = 0
-    if _acc_raw:
-        try:
-            acc = max(10, int(_acc_raw))
-        except ValueError:
-            warnings.warn(
-                f"FAUNA_PSI_APPROX_EDGES={_acc_raw!r} is not an integer; "
-                "falling back to exact decile edges",
-                stacklevel=2,
-            )
-    base = e.filter(F.col("ts") < cut).groupBy("event_type")
-    if acc:
-        edges = base.agg(
-            F.percentile_approx("value", list(_QS), acc).alias("eg")
-        )
-    else:
-        edges = base.agg(F.expr(f"percentile(value, array({qarr}))").alias("eg"))
+    edges = (
+        e.filter(F.col("ts") < cut)
+        .groupBy("event_type")
+        .agg(F.expr(f"percentile(value, array({qarr}))").alias("eg"))
+    )
     bucket = sum(
         (F.col("value") >= F.col("eg")[i]).cast("int") for i in range(9)
     ).alias("bucket")

@@ -34,6 +34,17 @@ from project_fauna_spark.sources.http import (
 )
 
 
+def _transform_columns(as_of: str | None) -> list:
+    """The transform's output columns, shared by both transform entry
+    points so they cannot drift apart."""
+    return [
+        F.col("id").cast("long").alias("id"),
+        F.col("name"),
+        split_friends("friends").alias("friends"),
+        epoch_to_iso8601_utc("born_at", as_of).alias("born_at"),
+    ]
+
+
 def transform_details(details: DataFrame, as_of: str | None = None) -> DataFrame:
     """Reference transform stage (pipeline.py:57-86) as expressions.
 
@@ -41,12 +52,7 @@ def transform_details(details: DataFrame, as_of: str | None = None) -> DataFrame
     unit auto-detect + guards.  ``born_at`` stays a nullable column
     (T6 null-vs-omitted collapses at the JSON sink).
     """
-    return details.select(
-        F.col("id").cast("long").alias("id"),
-        F.col("name"),
-        split_friends("friends").alias("friends"),
-        epoch_to_iso8601_utc("born_at", as_of).alias("born_at"),
-    )
+    return details.select(*_transform_columns(as_of))
 
 
 def assert_output_contract(transformed: DataFrame) -> None:
@@ -69,11 +75,7 @@ def transform_with_metrics(
     from pyspark.sql import Observation
 
     staged = details.select(
-        F.col("id").cast("long").alias("id"),
-        F.col("name"),
-        split_friends("friends").alias("friends"),
-        epoch_to_iso8601_utc("born_at", as_of).alias("born_at"),
-        F.col("born_at").alias("_raw_born_at"),
+        *_transform_columns(as_of), F.col("born_at").alias("_raw_born_at")
     )
     obs = Observation("quality")
     observed = staged.observe(
@@ -92,17 +94,20 @@ def run_pipeline(
     batch_size: int = 100,
     as_of: str | None = None,
     policy: RetryPolicy = RetryPolicy(),
+    partitions: int = 8,
 ) -> DataFrame:
     """End-to-end: ids → details → transform → batch-post receipts.
 
     Returns the receipts DataFrame; nothing executes until it is
-    consumed (the whole ETL is one lazy plan).  The sink pins the
+    consumed (the whole ETL is one lazy plan).  ``partitions`` is the
+    fan-out of the listing and detail fetches — the Spark form of the
+    reference's request concurrency.  The sink pins the
     transformed records with ``cache.cached``; a long-lived session
     frees the pin with ``cache.release_cached()`` once the receipts
     are consumed.
     """
-    ids = paginated_ids_df(spark, transport_factory, policy=policy)
-    details = fetch_details_df(ids, transport_factory, policy=policy)
+    ids = paginated_ids_df(spark, transport_factory, partitions=partitions, policy=policy)
+    details = fetch_details_df(ids, transport_factory, partitions=partitions, policy=policy)
     transformed = transform_details(details, as_of)
     # Serialize arrays for the JSON sink the way the reference does.
     serializable = transformed.withColumn("friends", F.to_json("friends"))

@@ -70,3 +70,22 @@ def global_windows(analyzed) -> tuple[int, int]:
         for i in range(cs.size()):
             stack.append(cs.apply(i))
     return total, unbounded
+
+
+def physical_nodes(plan):
+    """Yield every node of a physical plan, looking through AQE
+    wrappers (their initial plan) and into each cached relation's plan
+    (once per scan of it)."""
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            stack.append(node.inputPlan())
+            continue
+        if kind == "InMemoryTableScanExec":
+            stack.append(node.relation().cachedPlan())
+        yield node
+        cs = node.children()
+        for i in range(cs.size()):
+            stack.append(cs.apply(i))

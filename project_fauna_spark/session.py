@@ -19,50 +19,10 @@ from __future__ import annotations
 
 import hashlib
 import os
-import re
 import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
-
-def _env_bool(name: str, default: bool) -> str:
-    """Validated boolean env knob: 'true'/'false' (any case) accepted;
-    anything else warns and falls back to the default (the
-    FAUNA_LSH_BANDS_IN_FLIGHT validate-and-clamp convention)."""
-    raw = os.environ.get(name)
-    if raw is None:
-        return "true" if default else "false"
-    v = raw.strip().lower()
-    if v in ("true", "false"):
-        return v
-    import logging
-
-    logging.getLogger(__name__).warning(
-        "%s=%r is not a boolean; using default %s", name, raw, default
-    )
-    return "true" if default else "false"
-
-
-# Spark's byte-string grammar (JavaUtils.byteStringAs): a whole number
-# with an optional, case-insensitive unit suffix.
-_SPARK_BYTES = re.compile(r"\d+(?:[bkmgtp]|[kmgtp]b)?", re.IGNORECASE)
-
-
-def _env_bytes(name: str, default: str) -> str:
-    """Validated byte-size env knob in Spark's size syntax ('64m',
-    '64mb', '1t', '512KB', '1048576')."""
-    raw = os.environ.get(name)
-    if raw is None:
-        return default
-    if _SPARK_BYTES.fullmatch(raw.strip()):
-        return raw.strip()
-    import logging
-
-    logging.getLogger(__name__).warning(
-        "%s=%r is not a size; using default %s", name, raw, default
-    )
-    return default
-
 
 # Confs that are safe (and necessary) to set on an externally-built
 # session at runtime.  All are documented public Spark SQL confs.
@@ -77,33 +37,22 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # --- r13 scale-adaptive shuffle knobs (guide §2.1/§2.2, measured
-    # A/B in OPTIMIZATION_r13.md).  All three are env-parameterised
-    # with validated fallbacks so a cluster deployment can retune them
-    # without code edits; the defaults below are the measured local
-    # winners AND the scale-sane choice (partition sizing follows data
-    # volume via AQE instead of a fixed partition count).
+    # --- r13 scale-adaptive shuffle confs (guide §2.1/§2.2, measured
+    # A/B in OPTIMIZATION_r13.md): partition sizing follows data volume
+    # via AQE instead of a fixed partition count.
     # Cached-plan AQE: without it every cached() pin materialises with
     # the full static shuffle-partition count — dozens of micro-tasks
     # per tiny pinned frame at 32 cores, and a missed coalesce at any
     # scale.  Output-partitioning changes inside cached plans are safe
     # here: no operator relies on a pin's physical partitioning.
-    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": _env_bool(
-        "FAUNA_CACHED_PLAN_AQE", True
-    ),
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     # parallelismFirst stays at Spark's default (true): the measured
     # A/B (OPTIMIZATION_r13.md) showed parallelismFirst=false regresses
     # the window/sort family locally (window_moving_corr 0.95->1.85 s,
     # agg_pricing_summary 1.41->2.40 s) because sub-advisory-size local
-    # shuffles collapse to 1-2 tasks.  A cluster deployment working
-    # with real 100 MB-1 GB post-shuffle partitions can flip it and set
-    # the advisory size (guide §2.2) without code edits.
-    "spark.sql.adaptive.coalescePartitions.parallelismFirst": _env_bool(
-        "FAUNA_COALESCE_PARALLELISM_FIRST", True
-    ),
-    "spark.sql.adaptive.advisoryPartitionSizeInBytes": _env_bytes(
-        "FAUNA_ADVISORY_PARTITION_BYTES", "64m"
-    ),
+    # shuffles collapse to 1-2 tasks.
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst": "true",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64m",
 }
 
 

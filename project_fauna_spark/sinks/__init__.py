@@ -1,9 +1,5 @@
 """Sink substrate: chunked batch-POST with retry (reference S3/X1/X2)."""
 
-from project_fauna_spark.sinks.batch_post import (
-    chunked,
-    post_batches_globally_indexed,
-    post_batches_with_receipts,
-)
+from project_fauna_spark.sinks.batch_post import post_batches_globally_indexed
 
-__all__ = ["chunked", "post_batches_globally_indexed", "post_batches_with_receipts"]
+__all__ = ["post_batches_globally_indexed"]

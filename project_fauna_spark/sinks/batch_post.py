@@ -1,13 +1,14 @@
-"""Batch-POST sink: ≤100-record chunks, per-partition, with retry.
+"""Batch-POST sink: ≤100-record chunks with global batch boundaries.
 
 Reference parity: S3 (pipeline.py:88-99) posts transformed records in
 chunks of ``max(1, min(100, batch_size))`` (clamp pipeline.py:93);
-T7 ``chunked`` (utils.py:9-12); X1/X2 reliability via
+T7 ``chunked`` (utils.py:9-12) becomes a global row number divided by
+the batch size; X1/X2 reliability via
 :func:`project_fauna_spark.sources.http.request_with_retry`.
 
-Spark rendering: ``mapPartitions``-style batching via ``mapInPandas``
-so every partition posts its own chunks in parallel and emits a
-receipt row per batch — the driver never materializes the data
+Spark rendering: a ``batch_id`` shuffle hands each partition whole
+batches, which it posts through ``mapInPandas`` in parallel, emitting
+a receipt row per batch — the driver never materializes the data
 (the reference's sequential driver-side loop, pipeline.py:96-99,
 becomes N-way parallel).  Null-vs-omitted T6: JSON bodies drop null
 fields, matching pipeline.py:78-79.
@@ -16,31 +17,20 @@ fields, matching pipeline.py:78-79.
 from __future__ import annotations
 
 import json
-from collections.abc import Iterable, Iterator, Sequence
+from collections.abc import Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 
 from project_fauna_spark.cache import cached
+from project_fauna_spark.functions.reference import clamp_batch_size
 from project_fauna_spark.sources.http import (
     RetryPolicy,
     TransportFactory,
     request_with_retry,
     transport_takes_headers,
 )
-
-
-def clamp_batch_size(size: int) -> int:
-    """Reference clamp to [1, 100] (pipeline.py:93)."""
-    return max(1, min(100, size))
-
-
-def chunked(seq: Sequence, size: int) -> Iterable[list]:
-    """Successive ≤size slices (reference utils.py:9-12)."""
-    for i in range(0, len(seq), size):
-        yield list(seq[i : i + size])
-
 
 RECEIPT_SCHEMA = "batch_index long, n_records long, status long"
 
@@ -52,37 +42,6 @@ def _receipts_frame(receipts: list[tuple[int, int, int]]) -> pd.DataFrame:
 def _record(rec: dict) -> dict:
     """T6: null fields are omitted, not serialized as null."""
     return {k: v for k, v in rec.items() if not pd.isna(v)}
-
-
-def post_batches_with_receipts(
-    df: DataFrame,
-    transport_factory: TransportFactory,
-    batch_size: int = 100,
-    policy: RetryPolicy = RetryPolicy(),
-) -> DataFrame:
-    """POST ``df`` in ≤100-record JSON batches; returns receipt rows.
-
-    One transport per partition (connection reuse), chunks sized by the
-    reference clamp, each POST wrapped in retry/backoff.  The returned
-    DataFrame (one row per posted batch) is lazy — the sink runs when
-    an action consumes the receipts, keeping it composable in a plan.
-    """
-    size = clamp_batch_size(batch_size)
-
-    def post_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        transport = transport_factory()
-        hdrs = transport_takes_headers(transport)
-        rows: list[dict] = []
-        for pdf in batches:
-            rows.extend(_record(rec) for rec in pdf.to_dict(orient="records"))
-        receipts = []
-        for i, chunk in enumerate(chunked(rows, size)):
-            body = json.dumps(chunk, default=str)
-            status, _ = request_with_retry(transport, "POST", body, policy, takes_headers=hdrs)
-            receipts.append((i, len(chunk), status))
-        yield _receipts_frame(receipts)
-
-    return df.mapInPandas(post_partition, schema=RECEIPT_SCHEMA)
 
 
 def post_batches_globally_indexed(

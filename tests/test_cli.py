@@ -18,6 +18,8 @@ import pytest
 from project_fauna_spark import cli
 from project_fauna_spark.sources.http import ValidationHttpError
 
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 @pytest.fixture()
 def api_dir(tmp_path):
@@ -69,6 +71,60 @@ def test_python_m_end_to_end(api_dir):
     assert "====== Animals ETL (Spark) ======" in proc.stdout
     posts = os.listdir(os.path.join(api_dir, "posts"))
     assert len(posts) == 4
+
+
+def test_python_m_formats_born_at_in_utc_under_any_host_timezone(api_dir):
+    """``born_at`` ends in ``Z``, so it must be UTC even when the host
+    timezone is not: the CLI configures its session like the library
+    does."""
+    env = dict(os.environ, PYTHONPATH=REPO_ROOT, TZ="America/New_York")
+    proc = subprocess.run(
+        [sys.executable, "-m", "project_fauna_spark", "--fixture-dir", api_dir,
+         "--master", "local[2]"],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        env=env,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    born = {}
+    for name in os.listdir(os.path.join(api_dir, "posts")):
+        with open(os.path.join(api_dir, "posts", name)) as f:
+            born.update((r["id"], r["born_at"]) for r in json.load(f))
+    assert born[1] == "2017-07-14T02:40:01Z"
+
+
+def test_concurrency_sets_fetch_fan_out(spark, monkeypatch, api_dir):
+    """``--concurrency N`` is the partition count of the exchange that
+    feeds the detail fetch."""
+    from project_fauna_spark import pipeline
+    from project_fauna_spark.cache import release_cached
+    from project_fauna_spark.config import parse_args
+    from project_fauna_spark.plans.lint import physical_nodes
+
+    built, real_run_pipeline = [], pipeline.run_pipeline
+
+    def recording_run_pipeline(*args, **kwargs):
+        built.append(real_run_pipeline(*args, **kwargs))
+        return built[-1]
+
+    monkeypatch.setattr(pipeline, "run_pipeline", recording_run_pipeline)
+    try:
+        assert cli.run(parse_args(["--fixture-dir", api_dir, "--concurrency", "3"])) == 0
+        (receipts,) = built
+        # The pinned records are read twice, so the fetch shows up once
+        # per read of the pin.
+        fan_outs = {
+            n.child().outputPartitioning().numPartitions()
+            for n in physical_nodes(receipts._jdf.queryExecution().executedPlan())
+            if n.getClass().getSimpleName() == "MapInPandasExec"
+            and n.child().getClass().getSimpleName() == "ShuffleExchangeExec"
+            and [n.output().apply(i).name() for i in range(n.output().size())]
+            == ["id", "name", "friends", "born_at"]
+        }
+    finally:
+        release_cached()
+    assert fan_outs == {3}
 
 
 def test_validation_error_exits_2(monkeypatch, api_dir):

@@ -1,4 +1,4 @@
-"""Round-12 properties (ADVICE r11 + VERDICT r11 item 5):
+"""Round-12 properties (ADVICE r11):
 
 - ``semi_percentile_approx`` on a group whose values are ALL NULL must
   emit (n_values=0, TRUE, TRUE, TRUE) like the oracle's literal TRUEs —
@@ -7,16 +7,9 @@
 - ``dq_psi_drift`` must exclude NULL-ts rows from BOTH halves on BOTH
   engines (Spark's ``(ts >= cut).cast('int')`` silently NULLs them out
   of the sums; a ``CASE ... ELSE 0`` oracle would call them baseline).
-- ``dq_psi_drift``'s 100 TB scale spelling (``FAUNA_PSI_APPROX_EDGES``
-  → GK-sketch decile edges, no per-group sort) keeps the monitor's
-  structural invariants: same group set, identical n_base/n_cur
-  (bucket-sums are edge-placement-invariant), finite psi near the
-  exact-edge value; an invalid knob warns and falls back to exact.
 """
 
 from __future__ import annotations
-
-import warnings
 
 import duckdb
 import pytest
@@ -137,55 +130,6 @@ def test_psi_null_ts_both_engines_agree(spark, tmp_path):
     finally:
         _release()
     assert got == via_drop
-
-
-def test_psi_approx_edges_scale_path(spark, monkeypatch):
-    """VERDICT r11 item 5: the GK-sketch edge path must keep the group
-    set and the exact n_base/n_cur (bucket-sums don't depend on where
-    the edges fall) and land psi within 20% of the exact-edge value
-    (floor 0.05) — percentile_approx returns an ELEMENT while exact
-    percentile INTERPOLATES, so at sf0.001's few-hundred-row groups an
-    edge can sit one rank off and move ~1 row per bucket; PSI compares
-    relative frequencies in whatever bins are chosen, so a rank-bounded
-    edge shift perturbs the statistic proportionally, never breaks it
-    (at N ≥ accuracy the rank error is ≤ N/accuracy and the paths
-    converge)."""
-    monkeypatch.delenv("FAUNA_PSI_APPROX_EDGES", raising=False)
-    try:
-        exact = {r[0]: r for r in QUERIES["dq_psi_drift"](spark, SF_SMOKE).collect()}
-    finally:
-        _release()
-    monkeypatch.setenv("FAUNA_PSI_APPROX_EDGES", "10000")
-    try:
-        approx = {r[0]: r for r in QUERIES["dq_psi_drift"](spark, SF_SMOKE).collect()}
-    finally:
-        _release()
-    assert set(exact) == set(approx)
-    for t in exact:
-        assert approx[t]["n_base"] == exact[t]["n_base"], t
-        assert approx[t]["n_cur"] == exact[t]["n_cur"], t
-        pa, pe = approx[t]["psi_r9"], exact[t]["psi_r9"]
-        assert pa is not None and pa == pa, t  # finite, not NULL/NaN
-        assert abs(pa - pe) <= max(0.05, 0.2 * abs(pe)), (t, pa, pe)
-
-
-def test_psi_approx_edges_knob_validation(spark, monkeypatch):
-    """A non-integer knob must warn and fall back to exact edges (same
-    contract as FAUNA_LSH_BANDS_IN_FLIGHT, ADVICE r9)."""
-    monkeypatch.delenv("FAUNA_PSI_APPROX_EDGES", raising=False)
-    try:
-        exact = _typed(QUERIES["dq_psi_drift"](spark, SF_SMOKE).collect())
-    finally:
-        _release()
-    monkeypatch.setenv("FAUNA_PSI_APPROX_EDGES", "not-a-number")
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        try:
-            got = _typed(QUERIES["dq_psi_drift"](spark, SF_SMOKE).collect())
-        finally:
-            _release()
-    assert got == exact
-    assert any("FAUNA_PSI_APPROX_EDGES" in str(w.message) for w in caught)
 
 
 def _plan_of(spark, name):

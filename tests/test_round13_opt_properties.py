@@ -26,6 +26,7 @@ import duckdb
 from pyspark.sql import functions as F
 
 from project_fauna_spark.plans import QUERIES
+from project_fauna_spark.plans.lint import physical_nodes
 from project_fauna_spark.plans.registry import ORACLE
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -78,15 +79,36 @@ def test_survivorship_null_text_group_both_engines(spark, tmp_path):
     assert got == want
 
 
+def _pins(df) -> list:
+    """One InMemoryRelation per distinct cached frame in ``df``'s
+    physical plan, pins nested inside other pins included (a pin read
+    by several consumers is scanned once per read, all sharing one
+    cache builder)."""
+    pins = []
+    for node in physical_nodes(df._jdf.queryExecution().executedPlan()):
+        if node.getClass().getSimpleName() == "InMemoryTableScanExec":
+            rel = node.relation()
+            if not any(rel.cacheBuilder().equals(p.cacheBuilder()) for p in pins):
+                pins.append(rel)
+    return pins
+
+
+def _output_names(node) -> list[str]:
+    out = node.output()
+    return [out.apply(i).name() for i in range(out.size())]
+
+
 def test_survivorship_single_pin_is_ints_only(spark):
-    """Exactly one cached frame (the exploded shingle index), and no
-    InMemoryTableScan may carry the corpus text column — the r12
-    corpus-TEXT pin is the scale defect this round removed."""
-    plan = _plan_of(spark, "llm_dedup_survivorship_report")
-    assert "InMemoryTableScan" in plan
-    for line in plan.splitlines():
-        if "InMemoryTableScan" in line:
-            assert "text" not in line, line
+    """Exactly one cached frame (the exploded shingle index), and it
+    must not carry the corpus text column — the r12 corpus-TEXT pin is
+    the scale defect this round removed."""
+    df = QUERIES["llm_dedup_survivorship_report"](spark, SF_SMOKE)
+    try:
+        pins = _pins(df)
+        assert len(pins) == 1, [_output_names(p) for p in pins]
+        assert "text" not in _output_names(pins[0]), _output_names(pins[0])
+    finally:
+        _release()
 
 
 def test_survivorship_ratio_prune_in_join_condition(spark):

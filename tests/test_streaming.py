@@ -88,34 +88,50 @@ def test_stateful_user_profile(spark):
 
 
 def test_foreach_batch_to_post_sink(spark, tmp_path):
-    """Stream → foreachBatch → chunked batch-POST sink end-to-end."""
+    """Stream → foreachBatch → globally-indexed batch-POST sink
+    end-to-end: within each micro-batch every body but the last holds
+    exactly 100 records, and the bodies chunk the event_id order."""
+    from project_fauna_spark.cache import release_cached
     from project_fauna_spark.streaming import events_file_stream
     from project_fauna_spark.streaming.pipelines import stream_to_batch_sink
-    from project_fauna_spark.sinks.batch_post import post_batches_with_receipts
+    from project_fauna_spark.sinks.batch_post import post_batches_globally_indexed
     from project_fauna_spark.sources.http import FileBackedTransport, RetryPolicy
     import json, os
 
     api_dir = str(tmp_path / "api")
-    os.makedirs(api_dir)
+    posts_dir = os.path.join(api_dir, "posts")
+    os.makedirs(posts_dir)
     fast = RetryPolicy(retries=1, backoff_base=0.0, backoff_cap=0.0, jitter_max=0.0)
     received = []
 
     def sink_batch(df, batch_id):
-        receipts = post_batches_with_receipts(
-            df.select("event_id", "event_type", "value"),
+        rows = df.select("event_id", "event_type", "value")
+        before = set(os.listdir(posts_dir))
+        receipts = post_batches_globally_indexed(
+            rows,
             lambda: FileBackedTransport(api_dir),
+            order_col="event_id",
             batch_size=100,
             policy=fast,
+        ).collect()
+        release_cached()
+        bodies = []
+        for name in set(os.listdir(posts_dir)) - before:
+            with open(os.path.join(posts_dir, name)) as f:
+                bodies.append([r["event_id"] for r in json.load(f)])
+        bodies.sort(key=lambda ids: ids[0])
+        assert all(len(ids) == 100 for ids in bodies[:-1]), [len(ids) for ids in bodies]
+        assert [i for ids in bodies for i in ids] == sorted(
+            r["event_id"] for r in rows.collect()
         )
-        received.append(sum(r["n_records"] for r in receipts.collect()))
+        received.append(sum(r["n_records"] for r in receipts))
 
     stream = events_file_stream(spark, SF)
     stream_to_batch_sink(stream, sink_batch, str(tmp_path / "ckpt"))
     assert sum(received) == 1000  # all sf0.001 events delivered
-    posts = os.listdir(os.path.join(api_dir, "posts"))
     total = 0
-    for name in posts:
-        with open(os.path.join(api_dir, "posts", name)) as f:
+    for name in os.listdir(posts_dir):
+        with open(os.path.join(posts_dir, name)) as f:
             batch = json.load(f)
             assert len(batch) <= 100
             total += len(batch)

@@ -19,7 +19,6 @@ from __future__ import annotations
 
 import io
 import os
-import re
 import sys
 from contextlib import redirect_stdout
 
@@ -28,52 +27,27 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from project_fauna_spark.session import get_spark
 from project_fauna_spark.cache import release_cached
 from project_fauna_spark.plans import QUERIES
+from dump_plans import summarize
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else os.environ.get(
     "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
 )
 
-PATTERNS = [
-    (r"\bExchange\b", "Exchange"),
-    (r"\bReusedExchange\b", "ReusedExchange"),
-    (r"\bBroadcastExchange\b", "BroadcastExchange"),
-    (r"\bSortMergeJoin\b", "SMJ"),
-    (r"\bBroadcastHashJoin\b", "BHJ"),
-    (r"\bShuffledHashJoin\b", "SHJ"),
-    (r"\bBroadcastNestedLoopJoin\b", "BNLJ"),
-    (r"\bCartesianProduct\b", "Cartesian"),
-    (r"\bBatchEvalPython\b", "BatchEvalPython"),
-    (r"\bArrowEvalPython\b", "ArrowEvalPython"),
-    (r"\bMapInArrow\b|\bMapInPandas\b|\bPythonMapInArrow\b", "MapInArrow"),
-    (r"\bWindowGroupLimit\b", "WindowGroupLimit"),
-    (r"\bWindow\b", "Window"),
-    (r"\bSort\b", "Sort"),
-    (r"\bInMemoryTableScan\b", "InMemoryScan"),
-]
-
 
 def main() -> None:
     spark = get_spark(app_name="fauna-audit-plans")
-    rows = []
     for name in QUERIES:
         try:
             df = QUERIES[name](spark, SF_DIR)
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")
-            text = buf.getvalue()
-            counts = {}
-            for pat, label in PATTERNS:
-                n = len(re.findall(pat, text))
-                if n:
-                    counts[label] = n
-            rows.append((name, counts))
+            summary = summarize(buf.getvalue())
         except Exception as exc:  # noqa: BLE001
-            rows.append((name, {"PLAN_FAILED": str(exc)[:120]}))
+            summary = f"PLAN_FAILED={str(exc)[:120]}"
         finally:
             release_cached()
-        c = rows[-1][1]
-        print(f"{name}: " + ", ".join(f"{k}={v}" for k, v in c.items()), flush=True)
+        print(f"{name}: {summary}", flush=True)
     spark.stop()
 
 
