@@ -5,9 +5,10 @@ same user-experience contract (cli.py:46-53): a config banner before
 work starts, ``Validation error: <detail>`` + exit code 2 on a 422,
 ``Aborted.`` on Ctrl-C.  The execution substrate is a SparkSession
 instead of an asyncio loop; concurrency maps to partition fan-out.
-Both modes configure the session with
-:func:`~project_fauna_spark.session.configure_session`, so timestamps
-format in UTC whatever the host timezone.
+Both modes build their session with
+:func:`~project_fauna_spark.session.get_spark`, so timestamps format in
+UTC whatever the host timezone, and a session that runs the same code
+again reuses its generated classes.
 """
 
 from __future__ import annotations
@@ -36,10 +37,8 @@ def run_query(args) -> int:
     lines (bounded by --limit; the full result never collects)."""
     import json
 
-    from pyspark.sql import SparkSession
-
     from project_fauna_spark.plans import QUERIES
-    from project_fauna_spark.session import configure_session
+    from project_fauna_spark.session import get_spark
 
     if args.list_queries:
         for name in QUERIES:
@@ -48,9 +47,7 @@ def run_query(args) -> int:
     if args.query not in QUERIES:
         print(f"Unknown query: {args.query}", file=sys.stderr)
         return 2
-    spark = configure_session(
-        SparkSession.builder.master(args.master).appName("fauna-spark-query").getOrCreate()
-    )
+    spark = get_spark(app_name="fauna-spark-query", master=args.master)
     df = QUERIES[args.query](spark, args.sf_dir)
     if args.explain:
         df.explain("formatted")
@@ -63,10 +60,8 @@ def run_query(args) -> int:
 
 
 def run(args) -> int:
-    from pyspark.sql import SparkSession
-
     from project_fauna_spark.pipeline import run_pipeline
-    from project_fauna_spark.session import configure_session
+    from project_fauna_spark.session import get_spark
 
     print(
         f"""
@@ -80,9 +75,7 @@ def run(args) -> int:
         =================================
         """
     )
-    spark = configure_session(
-        SparkSession.builder.master(args.master).appName("fauna-spark-etl").getOrCreate()
-    )
+    spark = get_spark(app_name="fauna-spark-etl", master=args.master)
     policy = RetryPolicy(retries=args.retries)
     receipts = run_pipeline(
         spark,

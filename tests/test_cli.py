@@ -17,6 +17,7 @@ import pytest
 
 from project_fauna_spark import cli
 from project_fauna_spark.sources.http import ValidationHttpError
+from tests.conftest import SF_SMOKE
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -94,7 +95,40 @@ def test_python_m_formats_born_at_in_utc_under_any_host_timezone(api_dir):
     assert born[1] == "2017-07-14T02:40:01Z"
 
 
-def test_concurrency_sets_fetch_fan_out(spark, monkeypatch, api_dir):
+@pytest.fixture()
+def cli_spark(spark):
+    """The test session, with the shuffle partition count that an
+    in-process CLI call resets through ``get_spark`` put back after."""
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    yield spark
+    spark.conf.set("spark.sql.shuffle.partitions", partitions)
+
+
+def test_cli_builds_its_session_with_get_spark(cli_spark, monkeypatch, api_dir):
+    """Both CLI modes take their session from ``session.get_spark``, so
+    they get its static confs (the generated-class cache) as well as
+    the runtime ones."""
+    from project_fauna_spark import session
+    from project_fauna_spark.cache import release_cached
+    from project_fauna_spark.config import parse_args
+
+    calls, real_get_spark = [], session.get_spark
+
+    def recording_get_spark(*args, **kwargs):
+        calls.append(kwargs.get("app_name"))
+        return real_get_spark(*args, **kwargs)
+
+    monkeypatch.setattr(session, "get_spark", recording_get_spark)
+    try:
+        query = ["--query", "agg_count_distinct", "--sf-dir", SF_SMOKE, "--explain"]
+        assert cli.run_query(parse_args(query)) == 0
+        assert cli.run(parse_args(["--fixture-dir", api_dir])) == 0
+    finally:
+        release_cached()
+    assert calls == ["fauna-spark-query", "fauna-spark-etl"]
+
+
+def test_concurrency_sets_fetch_fan_out(cli_spark, monkeypatch, api_dir):
     """``--concurrency N`` is the partition count of the exchange that
     feeds the detail fetch."""
     from project_fauna_spark import pipeline

@@ -179,21 +179,12 @@ def build() -> None:
 
 build()
 
-from pyspark.sql import SparkSession
+from project_fauna_spark.session import get_spark
 
-spark = (
-    SparkSession.builder.master("local[32]")
-    .config("spark.ui.enabled", "false")
-    .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
-    .config("spark.sql.shuffle.partitions", "32")
-    .getOrCreate()
-)
+spark = get_spark(master="local[32]", shuffle_partitions=32)
 spark.sparkContext.setLogLevel("ERROR")
 
 from project_fauna_spark.plans import QUERIES
-from project_fauna_spark.session import configure_session
-
-configure_session(spark)
 
 
 def _run_full(df) -> None:
