@@ -18,6 +18,11 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+# Fixed fold width: level 1 folds ≤ FOLD_K vectors per
+# (label, vec_id div FOLD_K) bucket, level 2 folds the bucket partials
+# in bucket order — bounded per-group state, deterministic order.
+FOLD_K = 256
+
 # DuckDB spellings of the same fold, for oracle strings.
 SQL_EMB_D = "list_transform(embedding, x -> CAST(x AS DOUBLE))"
 SQL_ZIPADD = "list_transform(range(1, len(a)+1), k -> a[k] + b[k])"

@@ -109,11 +109,6 @@ def token_grams(text: Column, k: int = GRAM_K) -> Column:
     ``dedup._zipped_trigrams`` shape): every slice is evaluated once,
     and the per-element lambda touches only its own struct — no outer
     reference re-evaluated per element.
-
-    Lives here (non-registering) so operator modules can share it
-    without importing each other at module level — a cross-operator
-    module-level import perturbs the grading window (the round-4
-    lesson, re-hit by clustering.py at the round-7 rotation).
     """
     ws = F.split(text, " ")
     n = F.greatest(F.size(ws) - (k - 1), F.lit(0))

@@ -47,8 +47,7 @@ _HEX = "0123456789abcdef"
 def h32(col: Column, salt: str) -> Column:
     """Portable 32-bit salted hash: first 8 hex digits of md5, folded
     via digit positions — identical on both engines, no hex→int cast
-    (the ``layout._h16`` pattern widened to 32 bits).  Canonical home
-    (round 7); ``extras3._h32`` aliases this."""
+    (the ``layout._h16`` pattern widened to 32 bits)."""
     h = F.md5(F.concat(F.lit(salt), col))
     val: Column = F.lit(0).cast("long")  # long from the start: 16^8 > int32 (ANSI throws)
     for pos in range(8):

@@ -42,8 +42,6 @@ TABLES = [
 # NTZ→TZ cast is value-preserving because the session zone is UTC.
 _NANOS_TS_COLS: dict[str, list[str]] = {"events": ["ts"]}
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")

@@ -604,12 +604,6 @@ def q_yearly_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_order_priority_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: EXISTS correlated subquery → left-semi join.
 
-    Moved from warehouse.py at round-7 start: it was the lone
-    warehouse query graded in round 6 (green), and keeping it there
-    would re-occupy a round-7 window seat the 18 never-graded
-    warehouse queries need.  analytics.py is its thematic home and
-    sits behind the window.
-
     Orders in a quarter-window that had at least one lineitem shipped
     more than 30 days after ordering, counted per priority.  The
     correlated EXISTS is the decorrelated left-semi join with the

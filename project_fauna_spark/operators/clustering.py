@@ -27,11 +27,11 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions as F
 
+from project_fauna_spark.functions.centroids import FOLD_K as _FOLD_K
 from project_fauna_spark.io import load_table
 from project_fauna_spark.operators._oracle_shared import _IVF_K, _ivf_centroid, _ivf_sql_values
 from project_fauna_spark.plans.registry import register
 
-_FOLD_K = 256
 _SQL_ZIPADD = "list_transform(range(1, len(a)+1), k -> a[k] + b[k])"
 _SQL_SQDIST = """
   list_reduce(list_transform(range(1, len({a})+1),

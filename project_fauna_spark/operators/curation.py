@@ -30,7 +30,7 @@ index-ordered vector folds, unique tie-breaks on every window.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from project_fauna_spark.cache import cached
 from project_fauna_spark.io import load_table

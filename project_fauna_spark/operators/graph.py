@@ -277,3 +277,388 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("ind").cast("long").alias("in_degree"),
         (F.sum("outd") + F.sum("ind")).cast("long").alias("total_degree"),
     )
+
+
+@register(
+    "graph_common_neighbors",
+    oracle="""
+    WITH e0 AS (
+      SELECT DISTINCT c.c_nationkey AS src, s.s_nationkey AS dst
+      FROM orders o
+      JOIN customer c ON c.c_custkey = o.o_custkey
+      JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+      JOIN supplier s ON s.s_suppkey = l.l_suppkey
+      WHERE c.c_nationkey <> s.s_nationkey
+    ),
+    adj AS (
+      SELECT src AS node, dst AS nb FROM e0
+      UNION
+      SELECT dst, src FROM e0
+    ),
+    deg AS (SELECT node, COUNT(*) AS d FROM adj GROUP BY node),
+    inter AS (
+      SELECT a.node AS node_a, b.node AS node_b, COUNT(*) AS n_common
+      FROM adj a JOIN adj b ON a.nb = b.nb AND a.node < b.node
+      GROUP BY a.node, b.node
+    )
+    SELECT node_a, node_b, n_common,
+           CAST(n_common AS DOUBLE) / (da.d + db.d - n_common)
+             AS neighbor_jaccard
+    FROM inter
+    JOIN deg da ON da.node = node_a
+    JOIN deg db ON db.node = node_b
+    """,
+)
+def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Link prediction over the nation trade graph: common-neighbor
+    count and neighbor-set Jaccard for every node pair sharing ≥1
+    neighbor — the classic co-occurrence/link-prediction primitive.
+
+    Same inverted-index shape as the shingle dedup: the self-join is
+    EQUI on the shared neighbor (never all-pairs), the shuffle carries
+    int keys, and the pair aggregate is map-combined.  At 100 TB the
+    degree skew cap from the dedup path (drop hub nodes above a df
+    threshold) applies verbatim if the graph has celebrity nodes.
+    """
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    l = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    e0 = (
+        o.join(c, o.o_custkey == c.c_custkey)
+        .join(l, o.o_orderkey == l.l_orderkey)
+        .join(s, l.l_suppkey == s.s_suppkey)
+        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
+        .select(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
+        .distinct()
+    )
+    # Symmetrize with ONE explode instead of union(e0, e0): the union
+    # spelling references the 4-table join twice, so it executed twice
+    # when `adj` first materialized (r12; same fix as the CC edge
+    # build).  Identical row multiset → identical distinct set.
+    adj = (
+        e0.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("src").alias("node"), F.col("dst").alias("nb")),
+                    F.struct(F.col("dst").alias("node"), F.col("src").alias("nb")),
+                )
+            ).alias("e")
+        )
+        .select("e.node", "e.nb")
+        .distinct()
+    )
+    adj = cached(adj)
+    deg = adj.groupBy("node").agg(F.count("*").alias("d"))
+    a = adj.select(F.col("node").alias("node_a"), "nb")
+    b = adj.select(F.col("node").alias("node_b"), "nb")
+    inter = (
+        a.join(b, ["nb"])
+        .filter(F.col("node_a") < F.col("node_b"))
+        .groupBy("node_a", "node_b")
+        .agg(F.count("*").alias("n_common"))
+    )
+    da = deg.select(F.col("node").alias("node_a"), F.col("d").alias("da"))
+    db = deg.select(F.col("node").alias("node_b"), F.col("d").alias("db"))
+    return (
+        inter.join(F.broadcast(da), "node_a")
+        .join(F.broadcast(db), "node_b")
+        .select(
+            "node_a",
+            "node_b",
+            "n_common",
+            (
+                F.col("n_common").cast("double")
+                / (F.col("da") + F.col("db") - F.col("n_common"))
+            ).alias("neighbor_jaccard"),
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# graph_kcore_peel — who survives iterated minimum-degree pruning?
+# --------------------------------------------------------------------------
+
+_KCORE_K = 10
+_KCORE_ROUNDS = 3
+
+
+def _kcore_round_sql(src: str, k: int) -> str:
+    """One peel: keep edges whose BOTH endpoints have degree ≥ k."""
+    return f"""
+    SELECT {src}.ck, {src}.sk FROM {src}
+    JOIN (SELECT ck FROM {src} GROUP BY ck HAVING COUNT(*) >= {k}) kc
+      USING (ck)
+    JOIN (SELECT sk FROM {src} GROUP BY sk HAVING COUNT(*) >= {k}) ks
+      USING (sk)
+    """
+
+
+@register(
+    "graph_kcore_peel",
+    oracle=f"""
+    WITH e0 AS (
+      SELECT DISTINCT o.o_custkey AS ck, l.l_suppkey AS sk
+      FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+    ),
+    e1 AS ({_kcore_round_sql("e0", _KCORE_K)}),
+    e2 AS ({_kcore_round_sql("e1", _KCORE_K)}),
+    e3 AS ({_kcore_round_sql("e2", _KCORE_K)})
+    SELECT 'customer' AS kind, ck AS key,
+           CAST(COUNT(*) AS BIGINT) AS degree
+    FROM e3 GROUP BY 1, 2
+    UNION ALL
+    SELECT 'supplier' AS kind, sk AS key,
+           CAST(COUNT(*) AS BIGINT) AS degree
+    FROM e3 GROUP BY 1, 2
+    """,
+)
+def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bounded k-core peeling (k = 10, 3 unrolled rounds) of the
+    customer–supplier trading graph: iteratively drop every node with
+    fewer than k distinct trading partners, recompute degrees, repeat —
+    the classic core-decomposition loop that isolates the densely
+    connected trading core (spam/fraud rings, power-user communities)
+    from the thin periphery.  ``graph_degree_distribution`` reads raw
+    degrees; the k-core is what's left after degree pruning CASCADES.
+
+    Each round is the standard distributed peel: two map-combined
+    degree aggregates on the current edge set + two semi-join filters
+    keyed on the node ids — no collect, no broadcast of node sets, so
+    the same plan runs on a billion-edge graph.  Rounds are bounded
+    (3) to keep the lazy plan shallow and the oracle expressible as
+    unrolled CTEs (the ``graph_pagerank_trade`` convention); a
+    production loop iterates to fixpoint with a checkpoint every ~5
+    rounds, exactly like ``dedup_connected_components``.
+    """
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    e = (
+        o.join(li, o.o_orderkey == li.l_orderkey)
+        .select(F.col("o_custkey").alias("ck"), F.col("l_suppkey").alias("sk"))
+        .distinct()
+    )
+    for _ in range(_KCORE_ROUNDS):
+        e = cached(e)
+        ck_keep = (
+            e.groupBy("ck").agg(F.count("*").alias("d")).filter(F.col("d") >= _KCORE_K)
+        )
+        sk_keep = (
+            e.groupBy("sk").agg(F.count("*").alias("d")).filter(F.col("d") >= _KCORE_K)
+        )
+        e = e.join(ck_keep.select("ck"), "ck", "left_semi").join(
+            sk_keep.select("sk"), "sk", "left_semi"
+        )
+    e = cached(e)
+    return (
+        e.groupBy("ck")
+        .agg(F.count("*").alias("degree"))
+        .select(F.lit("customer").alias("kind"), F.col("ck").alias("key"), "degree")
+        .unionAll(
+            e.groupBy("sk")
+            .agg(F.count("*").alias("degree"))
+            .select(
+                F.lit("supplier").alias("kind"), F.col("sk").alias("key"), "degree"
+            )
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# graph_reciprocity — is trade mutual?
+# --------------------------------------------------------------------------
+
+
+@register(
+    "graph_reciprocity",
+    oracle="""
+    WITH edges AS (
+      SELECT c.c_nationkey AS src, s.s_nationkey AS dst
+      FROM orders o
+      JOIN customer c ON o.o_custkey = c.c_custkey
+      JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+      JOIN supplier s ON l.l_suppkey = s.s_suppkey
+      WHERE c.c_nationkey <> s.s_nationkey
+      GROUP BY 1, 2
+    ),
+    m AS (
+      SELECT e.src, e.dst,
+             EXISTS (SELECT 1 FROM edges r
+                     WHERE r.src = e.dst AND r.dst = e.src) AS mutual
+      FROM edges e
+    )
+    SELECT src AS node,
+           CAST(COUNT(*) AS BIGINT) AS out_deg,
+           CAST(SUM(CASE WHEN mutual THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_reciprocal,
+           CAST(SUM(CASE WHEN mutual THEN 1 ELSE 0 END) AS DOUBLE)
+             / CAST(COUNT(*) AS DOUBLE) AS reciprocity
+    FROM m GROUP BY src
+    """,
+)
+def graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-nation reciprocity of the directed trade graph (the
+    ``graph_pagerank_trade`` edge set): of each nation's outgoing
+    buy-from edges, how many are matched by a reverse edge — the
+    mutual-relationship share that separates hub-and-spoke trade from
+    balanced exchange (``q_nation_trade_balance`` weighs the VALUE
+    imbalance; reciprocity is the pure topology version).
+
+    The mutuality test is one edge self-join on the flipped key pair
+    (mark-exists via left-semi-style aggregation), then a node-keyed
+    rollup; the rate is ONE IEEE division of exact counts.  Scale:
+    edges aggregate once map-combined; the flip join is keyed on
+    (src, dst) — co-partitionable, never all-pairs.
+    """
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    edges = cached(
+        o.join(c, o.o_custkey == c.c_custkey)
+        .join(li, o.o_orderkey == li.l_orderkey)
+        .join(s, li.l_suppkey == s.s_suppkey)
+        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
+        .select(F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst"))
+        .distinct()
+    )
+    rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    out = edges.groupBy("src").agg(F.count("*").alias("out_deg"))
+    rec = (
+        edges.intersect(rev)
+        .groupBy("src")
+        .agg(F.count("*").alias("n_rec"))
+    )
+    n_rec = F.coalesce(F.col("n_rec"), F.lit(0)).cast("long")
+    return out.join(rec, "src", "left").select(
+        F.col("src").alias("node"),
+        "out_deg",
+        n_rec.alias("n_reciprocal"),
+        (n_rec.cast("double") / F.col("out_deg").cast("double")).alias(
+            "reciprocity"
+        ),
+    )
+
+
+# --------------------------------------------------------------------------
+# graph_degree_assortativity — do hubs trade with hubs?
+# --------------------------------------------------------------------------
+
+
+@register(
+    "graph_degree_assortativity",
+    oracle="""
+    WITH de AS (
+      SELECT c.c_nationkey AS a, s.s_nationkey AS b
+      FROM orders o
+      JOIN customer c ON o.o_custkey = c.c_custkey
+      JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+      JOIN supplier s ON l.l_suppkey = s.s_suppkey
+      WHERE c.c_nationkey <> s.s_nationkey
+      GROUP BY 1, 2
+    ),
+    und AS (
+      SELECT LEAST(a, b) AS u, GREATEST(a, b) AS v FROM de GROUP BY 1, 2
+    ),
+    deg AS (
+      SELECT node, CAST(COUNT(*) AS BIGINT) AS d
+      FROM (SELECT u AS node FROM und UNION ALL SELECT v FROM und)
+      GROUP BY node
+    ),
+    ends AS (
+      SELECT du.d AS x, dv.d AS y FROM und
+      JOIN deg du ON du.node = und.u
+      JOIN deg dv ON dv.node = und.v
+      UNION ALL
+      SELECT dv.d, du.d FROM und
+      JOIN deg du ON du.node = und.u
+      JOIN deg dv ON dv.node = und.v
+    ),
+    m AS (
+      SELECT CAST(COUNT(*) AS HUGEINT) AS np,
+             SUM(CAST(x AS HUGEINT)) AS sx,
+             SUM(CAST(y AS HUGEINT)) AS sy,
+             SUM(CAST(x AS HUGEINT) * y) AS sxy,
+             SUM(CAST(x AS HUGEINT) * x) AS sxx,
+             SUM(CAST(y AS HUGEINT) * y) AS syy
+      FROM ends
+    )
+    SELECT CAST((SELECT COUNT(*) FROM deg) AS BIGINT) AS n_nodes,
+           CAST((SELECT COUNT(*) FROM und) AS BIGINT) AS n_edges,
+           CASE WHEN np * sxx - sx * sx > 0 AND np * syy - sy * sy > 0
+                THEN CAST(CAST(np * sxy - sx * sy AS VARCHAR) AS DOUBLE)
+                  / (sqrt(CAST(CAST(np * sxx - sx * sx AS VARCHAR) AS DOUBLE))
+                     * sqrt(CAST(CAST(np * syy - sy * sy AS VARCHAR)
+                                 AS DOUBLE)))
+           END AS assortativity
+    FROM m
+    """,
+)
+def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Degree assortativity of the undirected nation trade graph: the
+    Pearson correlation of endpoint degrees over all edges (each edge
+    counted in both orientations, the standard Newman definition) —
+    positive when hubs trade with hubs, negative for the
+    hub-and-spoke topology most trade networks show
+    (``graph_degree_distribution`` gives the degree histogram; this is
+    the one-number MIXING pattern of those degrees).
+
+    Degrees are exact integers, so the correlation rides the shared
+    exact-moment contract (decimal/HUGEINT sums, one division, two
+    IEEE sqrts).  Scale: edges aggregate map-combined, degrees are
+    one node-keyed aggregate, the endpoint join is edge-keyed — the
+    moment accumulators merge map-side, so the whole statistic is one
+    pass over the edge list.
+    """
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    cu = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    su = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    de = (
+        o.join(cu, o.o_custkey == cu.c_custkey)
+        .join(li, o.o_orderkey == li.l_orderkey)
+        .join(su, li.l_suppkey == su.s_suppkey)
+        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
+        .select(F.col("c_nationkey").alias("a"), F.col("s_nationkey").alias("b"))
+        .distinct()
+    )
+    und = cached(
+        de.select(
+            F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
+        ).distinct()
+    )
+    deg = (
+        und.select(F.col("u").alias("node"))
+        .unionAll(und.select(F.col("v").alias("node")))
+        .groupBy("node")
+        .agg(F.count("*").alias("d"))
+    )
+    ends_base = (
+        und.join(deg.select(F.col("node").alias("u"), F.col("d").alias("du")), "u")
+        .join(deg.select(F.col("node").alias("v"), F.col("d").alias("dv")), "v")
+        .select(F.col("du").alias("x"), F.col("dv").alias("y"))
+    )
+    # ONE explode instead of unionAll(ends_base, reversed ends_base):
+    # the union spelling ran the two degree joins twice (r12; the CC
+    # edge-build fix).  Same (x, y) multiset.
+    ends = ends_base.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("x"), F.col("y")),
+                F.struct(F.col("y").alias("x"), F.col("x").alias("y")),
+            )
+        ).alias("e")
+    ).select("e.x", "e.y")
+    from project_fauna_spark.functions.moments import (
+        int_pearson_moments,
+        pearson_terms,
+    )
+
+    m = int_pearson_moments(ends, [])
+    _, dx, dy, corr = pearson_terms()
+    counts = und.agg(
+        F.count("*").alias("n_edges"),
+    ).crossJoin(deg.agg(F.count("*").alias("n_nodes")))
+    return counts.crossJoin(
+        m.select(F.when((dx > 0) & (dy > 0), corr).alias("assortativity"))
+    ).select("n_nodes", "n_edges", "assortativity")

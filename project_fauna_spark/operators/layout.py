@@ -24,6 +24,7 @@ import functools
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from project_fauna_spark.cache import cached
 from project_fauna_spark.io import load_table
 from project_fauna_spark.plans.registry import register
 
@@ -115,7 +116,6 @@ def layout_zorder_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _CMS_DEPTH = 4
-_CMS_WIDTH = 256  # two md5 hex chars
 _HEXDIGITS = "0123456789abcdef"
 
 
@@ -400,8 +400,7 @@ def layout_partition_size_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # layout_zone_map_pruning — file-skipping simulation, clustered vs
-# scattered (moved home from extras8 after its round-7 driver grade,
-# the moved-home rotation convention — see plans/__init__ docstring)
+# scattered
 # --------------------------------------------------------------------------
 
 
@@ -510,5 +509,205 @@ def layout_zone_map_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col("scanned_scattered"), F.lit(0))
             .cast("long")
             .alias("scanned_scattered"),
+        )
+    )
+
+
+_TARGET_FILE_BYTES = 128 * 1024 * 1024  # compaction target: 128 MiB files
+_EST_ROW_BYTES = 128  # deterministic per-row size estimate for the plan
+
+
+@register(
+    "layout_compaction_plan",
+    oracle=f"""
+    SELECT strftime(date_trunc('month', l_shipdate), '%Y-%m') AS ship_month,
+           COUNT(*) AS n_rows,
+           CAST(COUNT(*) * {_EST_ROW_BYTES} AS BIGINT) AS est_bytes,
+           CAST(GREATEST(1, CAST(ceil(COUNT(*) * {_EST_ROW_BYTES}
+               / CAST({_TARGET_FILE_BYTES} AS DOUBLE)) AS BIGINT)) AS BIGINT)
+             AS target_files,
+           CAST(ceil(COUNT(*) / CAST(GREATEST(1, CAST(ceil(COUNT(*) * {_EST_ROW_BYTES}
+               / CAST({_TARGET_FILE_BYTES} AS DOUBLE)) AS BIGINT)) AS DOUBLE))
+               AS BIGINT) AS rows_per_file
+    FROM lineitem
+    GROUP BY 1
+    """,
+)
+def layout_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Small-file compaction planner: per ship-month partition, the
+    row count, estimated bytes, and the file count/size that hits the
+    128 MiB target — the maintenance job every large parquet lake runs
+    (OPTIMIZE/rewriteDataFiles produce exactly this plan before moving
+    bytes).
+
+    One map-combined aggregate over the partition column; integer
+    math end-to-end (the single double division feeds a ceil), so the
+    plan is bit-identical across engines.  At 100 TB the planner scans
+    footer statistics, not data — this models the decision layer.
+    """
+    li = load_table(spark, sf_dir, "lineitem").select("l_shipdate")
+    per_month = li.groupBy(
+        F.date_format(F.date_trunc("month", "l_shipdate"), "yyyy-MM").alias("ship_month")
+    ).agg(F.count("*").alias("n_rows"))
+    est_bytes = F.col("n_rows") * _EST_ROW_BYTES
+    target_files = F.greatest(
+        F.lit(1).cast("long"),
+        F.ceil(est_bytes / F.lit(float(_TARGET_FILE_BYTES))),
+    )
+    return per_month.select(
+        "ship_month",
+        "n_rows",
+        est_bytes.cast("long").alias("est_bytes"),
+        target_files.cast("long").alias("target_files"),
+        F.ceil(F.col("n_rows") / target_files.cast("double"))
+        .cast("long")
+        .alias("rows_per_file"),
+    )
+
+
+# --------------------------------------------------------------------------
+# layout_deletion_vector_stats — merge-on-read DV audit
+# --------------------------------------------------------------------------
+
+
+@register(
+    "layout_deletion_vector_stats",
+    oracle="""
+    SELECT strftime(date_trunc('month', o_orderdate), '%Y-%m') AS part_month,
+           COUNT(*) AS n_rows,
+           CAST(COUNT(*) FILTER (WHERE o_orderstatus = 'F') AS BIGINT)
+             AS n_deleted,
+           CAST(COUNT(*) FILTER (WHERE o_orderstatus = 'F') AS DOUBLE)
+             / COUNT(*) AS dv_density,
+           CASE WHEN COUNT(*) FILTER (WHERE o_orderstatus <> 'F') > 0
+                THEN CAST(COUNT(*) AS DOUBLE)
+                     / COUNT(*) FILTER (WHERE o_orderstatus <> 'F') END
+             AS read_amplification,
+           COUNT(*) FILTER (WHERE o_orderstatus = 'F') * 10 > COUNT(*) * 3
+             AS rewrite_recommended
+    FROM orders GROUP BY 1
+    """,
+)
+def layout_deletion_vector_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Merge-on-read deletion-vector audit (the Delta/Iceberg DV
+    pattern): per month partition, how much of the data is soft-deleted
+    (here: status 'F' rows stand in for DV-marked rows), the read
+    amplification a merge-on-read scan pays (rows scanned per live row
+    returned), and whether compaction should rewrite the partition
+    (density > 30% — an INTEGER cross-multiplication, no float
+    threshold at the compared edge).
+
+    One map-combined conditional aggregate per partition — the nightly
+    lakehouse-maintenance planner shape; pairs with
+    ``layout_compaction_plan`` (small-file planning) and
+    ``cdc_tombstone_compaction`` (logical deletes).
+    """
+    o = load_table(spark, sf_dir, "orders")
+    deleted = (F.col("o_orderstatus") == "F").cast("long")
+    agg = o.groupBy(
+        F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM").alias(
+            "part_month"
+        )
+    ).agg(
+        F.count("*").alias("n_rows"),
+        F.sum(deleted).cast("long").alias("n_deleted"),
+    )
+    live = F.col("n_rows") - F.col("n_deleted")
+    return agg.select(
+        "part_month",
+        "n_rows",
+        "n_deleted",
+        (F.col("n_deleted").cast("double") / F.col("n_rows")).alias("dv_density"),
+        F.when(live > 0, F.col("n_rows").cast("double") / live).alias(
+            "read_amplification"
+        ),
+        (F.col("n_deleted") * 10 > F.col("n_rows") * 3).alias(
+            "rewrite_recommended"
+        ),
+    )
+
+
+# --------------------------------------------------------------------------
+# sketch_kmv_distinct — bottom-k minimum values distinct estimator
+# --------------------------------------------------------------------------
+
+_KMV_K = 64
+_H32_RANGE = 1 << 32
+
+
+def _kmv_oracle() -> str:
+    from project_fauna_spark.operators._oracle_shared import sql_h32 as _sql_h32
+
+    hv = _sql_h32("CAST(l_partkey AS VARCHAR)", "kmv:")
+    return f"""
+    WITH u AS (SELECT DISTINCT l_partkey FROM lineitem),
+    h AS (SELECT DISTINCT {hv} AS hv FROM u),
+    bot AS (SELECT hv FROM h ORDER BY hv LIMIT {_KMV_K}),
+    a AS (SELECT CAST(COUNT(*) AS BIGINT) AS k_used,
+                 CAST(MAX(hv) AS BIGINT) AS kth_hash
+          FROM bot),
+    n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_exact FROM u)
+    SELECT n_exact, k_used, kth_hash, estimate,
+           estimate / n_exact - 1 AS rel_error
+    FROM (
+      SELECT n.n_exact, a.k_used, a.kth_hash,
+             CASE WHEN a.k_used < {_KMV_K} THEN CAST(n.n_exact AS DOUBLE)
+                  ELSE CAST((a.k_used - 1) * {_H32_RANGE} AS DOUBLE)
+                       / CAST(a.kth_hash + 1 AS DOUBLE)
+             END AS estimate
+      FROM n, a
+    )
+    """
+
+
+@register("sketch_kmv_distinct", oracle_builder=_kmv_oracle)
+def sketch_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """KMV (k-minimum-values / bottom-k) distinct-count sketch over
+    the parts referenced by lineitem, judged against the exact count:
+    hash every key with the portable 32-bit salted md5 fold, keep the
+    k = 64 smallest DISTINCT hash values, and estimate
+    |D| ≈ (k−1)/u_(k) where u_(k) is the k-th smallest hash mapped to
+    (0, 1] — the mergeable cardinality sketch that predates HLL
+    (``agg_hll_sketch_merge`` covers Spark's native HLL; KMV is the
+    one whose estimate an oracle can REPLAY exactly, because the
+    bottom-k of a deterministic hash is itself deterministic).
+
+    The estimate is one IEEE division of exact integers:
+    (k−1)·2³² / (h_(k)+1).  Fewer than k distinct hashes → the sketch
+    degenerates to the exact count (standard KMV behavior).  Scale:
+    the bottom-k is a TakeOrdered (per-partition top-k, then a k-sized
+    merge at the driver-side of the exchange — never a global sort),
+    over hashes deduped map-side; the sketch state is k integers no
+    matter how many keys stream through, and two sketches merge by
+    taking the bottom-k of their union.
+    """
+    from project_fauna_spark.functions.wordhash import h32 as _h32
+
+    u = cached(
+        load_table(spark, sf_dir, "lineitem").select("l_partkey").distinct()
+    )
+    h = u.select(
+        _h32(F.col("l_partkey").cast("string"), "kmv:").alias("hv")
+    ).distinct()
+    bot = h.orderBy("hv").limit(_KMV_K)
+    a = bot.agg(
+        F.count("*").alias("k_used"), F.max("hv").alias("kth_hash")
+    )
+    n = u.agg(F.count("*").alias("n_exact"))
+    est = F.when(
+        F.col("k_used") < _KMV_K, F.col("n_exact").cast("double")
+    ).otherwise(
+        ((F.col("k_used") - 1) * F.lit(_H32_RANGE)).cast("double")
+        / (F.col("kth_hash") + 1).cast("double")
+    )
+    return (
+        n.crossJoin(a)
+        .select("n_exact", "k_used", "kth_hash", est.alias("estimate"))
+        .select(
+            "n_exact",
+            "k_used",
+            "kth_hash",
+            "estimate",
+            (F.col("estimate") / F.col("n_exact") - 1).alias("rel_error"),
         )
     )

@@ -1,6 +1,10 @@
-"""Additional LLM-training-data operators (round 3).
+"""LLM tokenizer, language-model scoring and data-mixture operators.
 
-Four first-class pipeline primitives beyond the round-2 surface:
+Tokenizer work (BPE pair counts, merges and encoding, OOV rate,
+fertility), cheap LM and classifier scores (bigram / unigram
+likelihood, the linear quality gate and its calibration), and mixture
+and sampling weights (temperature mixes, importance resampling, token
+budgets).  The first four:
 
 * ``llm_bpe_pair_counts`` — the counting step of byte-pair-encoding
   tokenizer training: corpus-weighted adjacent-symbol pair frequencies
@@ -26,11 +30,19 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
+from project_fauna_spark.cache import cached
 from project_fauna_spark.functions.shingles import word_bigrams
 from project_fauna_spark.functions.vectors import cosine_sim
-from project_fauna_spark.cache import cached
+from project_fauna_spark.functions.wordhash import h32
 from project_fauna_spark.io import load_table
-from project_fauna_spark.operators._oracle_shared import SQL_COS as _SQL_COS
+from project_fauna_spark.operators._oracle_shared import (
+    SQL_COS as _SQL_COS,
+    _IVF_K,
+    _IVF_NPROBE,
+    _ivf_centroid,
+    _ivf_sql_values,
+    sql_h32,
+)
 from project_fauna_spark.plans.registry import register, sql_davg
 
 
@@ -82,19 +94,6 @@ def llm_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("cnt").desc(), "pair")
         .limit(20)
     )
-
-
-# IVF codebook helpers live in _oracle_shared (non-registering) so
-# sibling operator modules can import them without pulling this
-# module's registrations into the grading window; re-exported here for
-# the existing lazy-import call sites (extras7/extras8).
-from project_fauna_spark.operators._oracle_shared import (  # noqa: E402,F401
-    _IVF_D,
-    _IVF_K,
-    _IVF_NPROBE,
-    _ivf_centroid,
-    _ivf_sql_values,
-)
 
 
 @register(
@@ -519,4 +518,630 @@ def llm_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "punct_n",
         score.alias("score"),
         (score > 0.35).alias("keep"),
+    )
+
+
+_VOCAB_K = 50
+
+
+@register(
+    "llm_oov_rate",
+    oracle=f"""
+    WITH w AS (
+      SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents
+    ),
+    w2 AS (SELECT * FROM w WHERE word <> ''),
+    wc AS (SELECT word, COUNT(*) AS cnt FROM w2 GROUP BY word),
+    vocab AS (
+      SELECT word FROM wc ORDER BY cnt DESC, word LIMIT {_VOCAB_K}
+    )
+    SELECT w2.doc_id,
+           COUNT(*) AS n_tokens,
+           CAST(SUM(CASE WHEN v.word IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov,
+           CAST(SUM(CASE WHEN v.word IS NULL THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*)
+             AS oov_rate
+    FROM w2 LEFT JOIN vocab v USING (word)
+    GROUP BY w2.doc_id
+    """,
+)
+def llm_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tokenizer-coverage audit: build the corpus top-50 vocabulary
+    (count-ranked, word tie-break) and report each document's token
+    count, out-of-vocabulary token count, and OOV rate — the check run
+    before freezing a vocab (``llm_vocab_topk``) for training.
+
+    The vocabulary is a TakeOrdered over the vocabulary-bounded count
+    table and is broadcast to the corpus-linear membership probe — at
+    100 TB the corpus never shuffles for this, only the word-count
+    aggregate does (map-combined).
+    """
+    d = load_table(spark, sf_dir, "documents")
+    w = d.select("doc_id", F.explode(F.split("text", " ")).alias("word")).filter(
+        F.col("word") != ""
+    )
+    wc = w.groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
+    vocab = wc.orderBy(F.col("cnt").desc(), "word").limit(_VOCAB_K).select(
+        "word", F.lit(1).alias("in_vocab")
+    )
+    return (
+        w.join(F.broadcast(vocab), "word", "left")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_tokens"),
+            F.sum(F.when(F.col("in_vocab").isNull(), 1).otherwise(0))
+            .cast("long")
+            .alias("n_oov"),
+        )
+        .withColumn(
+            "oov_rate", F.col("n_oov").cast("double") / F.col("n_tokens")
+        )
+    )
+
+
+@register(
+    "llm_sample_temperature_mix",
+    oracle="""
+    WITH w AS (
+      SELECT lang, unnest(string_split(text, ' ')) AS word FROM documents
+    ),
+    lt AS (
+      SELECT lang, COUNT(*) AS n_tokens FROM w WHERE word <> '' GROUP BY lang
+    ),
+    ld AS (SELECT lang, COUNT(*) AS n_docs FROM documents GROUP BY lang),
+    t AS (SELECT CAST(SUM(n_tokens) AS BIGINT) AS total FROM lt),
+    s AS (
+      SELECT ld.lang, ld.n_docs, lt.n_tokens,
+             CAST(lt.n_tokens AS DOUBLE) / t.total AS share,
+             sqrt(CAST(lt.n_tokens AS DOUBLE) / t.total) AS w_raw
+      FROM ld JOIN lt USING (lang) CROSS JOIN t
+    ),
+    z AS (
+      SELECT CAST(CAST(SUM(CAST(CAST(w_raw AS VARCHAR) AS DECIMAL(30,8))) AS VARCHAR) AS DOUBLE) AS zsum
+      FROM s
+    )
+    SELECT s.lang, s.n_docs, s.n_tokens, s.share,
+           s.w_raw / z.zsum AS weight,
+           (s.w_raw / z.zsum) * t.total AS expected_tokens
+    FROM s CROSS JOIN z CROSS JOIN t
+    """,
+)
+def llm_sample_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """UniMax/mT5-style temperature-sampled language mixing at T=2:
+    per-language token shares are re-weighted by share^(1/T) = √share
+    and renormalized, boosting tail languages — the standard recipe for
+    balancing multilingual pretraining corpora.
+
+    T=2 is deliberate: ``sqrt`` is IEEE-correctly-rounded on both
+    engines, whereas general ``pow`` is libm-dependent and would break
+    bit parity.  The √share sum is decimal-accumulated over the tiny
+    per-language table (the only cross-row double sum); every other
+    edge is a per-row division or multiply.  Everything after the one
+    map-combined token count is keyspace-sized.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    w = d.select("lang", F.explode(F.split("text", " ")).alias("word")).filter(
+        F.col("word") != ""
+    )
+    lt = w.groupBy("lang").agg(F.count(F.lit(1)).alias("n_tokens"))
+    ld = d.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs"))
+    t = lt.agg(F.sum("n_tokens").alias("total"))
+    s = (
+        ld.join(lt, "lang")
+        .crossJoin(F.broadcast(t))
+        .withColumn("share", F.col("n_tokens").cast("double") / F.col("total"))
+        .withColumn("w_raw", F.sqrt(F.col("share")))
+    )
+    z = s.agg(
+        F.sum(F.col("w_raw").cast("decimal(30,8)")).cast("double").alias("zsum")
+    )
+    return (
+        s.crossJoin(F.broadcast(z))
+        .select(
+            "lang",
+            "n_docs",
+            "n_tokens",
+            "share",
+            (F.col("w_raw") / F.col("zsum")).alias("weight"),
+            ((F.col("w_raw") / F.col("zsum")) * F.col("total")).alias(
+                "expected_tokens"
+            ),
+        )
+    )
+
+
+def _bpe_encode_round(prev: str, r: int) -> str:
+    """One BPE merge round retaining the word key: count pairs over
+    {prev}(word, seq, n), adopt the top rule, rewrite seq → e{r}."""
+    return f"""
+    pc{r} AS (
+      SELECT pair, CAST(SUM(n) AS BIGINT) AS cnt FROM (
+        SELECT unnest([syms[i] || ' ' || syms[i+1] for i in range(1, len(syms))]) AS pair, n
+        FROM (SELECT string_split(trim(seq), ' ') AS syms, n FROM {prev})
+        WHERE len(syms) >= 2
+      ) GROUP BY pair
+    ),
+    rule{r} AS (SELECT pair FROM pc{r} ORDER BY cnt DESC, pair LIMIT 1),
+    e{r} AS (
+      SELECT word,
+             replace({prev}.seq, ' ' || t.pair || ' ',
+                     ' ' || replace(t.pair, ' ', '') || ' ') AS seq, n
+      FROM {prev}, rule{r} t
+    )"""
+
+
+@register(
+    "llm_bpe_encode_corpus",
+    oracle=f"""
+    WITH wc AS (
+      SELECT word, COUNT(*) AS n FROM (
+        SELECT unnest(string_split(text, ' ')) AS word FROM documents
+      ) WHERE word <> '' GROUP BY word
+    ),
+    e0 AS (
+      SELECT word,
+             ' ' || array_to_string([word[i:i] for i in range(1, length(word)+1)], ' ')
+               || ' ' AS seq, n
+      FROM wc
+    ),
+    {_bpe_encode_round('e0', 1)},
+    {_bpe_encode_round('e1', 2)},
+    {_bpe_encode_round('e2', 3)},
+    tok AS (SELECT word, len(string_split(trim(seq), ' ')) AS n_sym FROM e3),
+    dw AS (
+      SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents
+    )
+    SELECT dw.doc_id,
+           COUNT(*) AS n_words,
+           CAST(SUM(t.n_sym) AS BIGINT) AS n_bpe_tokens,
+           CAST(SUM(length(dw.word)) AS BIGINT) AS n_chars,
+           CAST(SUM(length(dw.word)) AS DOUBLE) / SUM(t.n_sym) AS chars_per_token
+    FROM dw JOIN tok t USING (word)
+    WHERE dw.word <> ''
+    GROUP BY dw.doc_id
+    """,
+)
+def llm_bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The tokenizer-APPLY half of the BPE lifecycle: train 3 merge
+    rules on the word-type table (same loop as
+    ``llm_bpe_train_merges``), encode every word type with them, and
+    report per-document word/BPE-token/char counts and the
+    chars-per-token compression ratio — the number a tokenizer change
+    is actually judged by.
+
+    Scale: training and encoding touch only word TYPES (vocabulary-
+    bounded, with corpus weights); the corpus-sized stream is one
+    explode joined against the tiny word→token-count map (AQE
+    broadcasts it).  Counts are integers; the ratio is one per-row
+    double division at the edge.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    wc = (
+        d.select(F.explode(F.split("text", " ")).alias("word"))
+        .filter(F.col("word") != "")
+        .groupBy("word")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    chars = F.filter(F.split(F.col("word"), ""), lambda c: c != F.lit(""))
+    cur = wc.select(
+        "word",
+        F.concat(F.lit(" "), F.array_join(chars, " "), F.lit(" ")).alias("seq"),
+        "n",
+    )
+    for _ in range(3):
+        syms = F.split(F.trim(F.col("seq")), " ")
+        k = F.greatest(F.size(syms) - 1, F.lit(0))
+        zipped = F.slice(
+            F.arrays_zip(syms.alias("a"), F.slice(syms, 2, k).alias("b")), 1, k
+        )
+        pairs = F.transform(zipped, lambda z: F.concat(z.a, F.lit(" "), z.b))
+        rule = (
+            cur.select(F.explode(pairs).alias("pair"), "n")
+            .groupBy("pair")
+            .agg(F.sum("n").alias("cnt"))
+            .orderBy(F.col("cnt").desc(), "pair")
+            .limit(1)
+            .select("pair")
+        )
+        cur = cur.crossJoin(F.broadcast(rule)).select(
+            "word",
+            F.replace(
+                F.col("seq"),
+                F.concat(F.lit(" "), F.col("pair"), F.lit(" ")),
+                F.concat(
+                    F.lit(" "),
+                    F.replace(F.col("pair"), F.lit(" "), F.lit("")),
+                    F.lit(" "),
+                ),
+            ).alias("seq"),
+            "n",
+        )
+        cur = cached(cur)  # each round reads cur TWICE (rule + rewrite): without
+        # this the vocab subtree replicates 2^rounds times in the plan
+    tok = cur.select(
+        "word", F.size(F.split(F.trim(F.col("seq")), " ")).alias("n_sym")
+    )
+    dw = d.select("doc_id", F.explode(F.split("text", " ")).alias("word")).filter(
+        F.col("word") != ""
+    )
+    return (
+        dw.join(tok, "word")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_words"),
+            F.sum("n_sym").cast("long").alias("n_bpe_tokens"),
+            F.sum(F.length("word")).cast("long").alias("n_chars"),
+        )
+        .withColumn(
+            "chars_per_token",
+            F.col("n_chars").cast("double") / F.col("n_bpe_tokens"),
+        )
+    )
+
+
+def _calibration_oracle() -> str:
+    from project_fauna_spark.plans.registry import ORACLE, sql_davg
+
+    cls_sql = ORACLE["llm_quality_classifier"]
+    return f"""
+    WITH cls AS (SELECT * FROM ({cls_sql}) _c),
+    b AS (
+      SELECT CAST(floor(score * 10) AS INT) AS score_bin,
+             n_words >= 50 AS gate, keep, score
+      FROM cls
+    )
+    SELECT score_bin,
+           COUNT(*) AS n_docs,
+           CAST(COUNT(*) FILTER (WHERE gate) AS BIGINT) AS n_gate_pass,
+           CAST(COUNT(*) FILTER (WHERE gate) AS DOUBLE) / COUNT(*) AS gate_pass_rate,
+           CAST(COUNT(*) FILTER (WHERE keep) AS BIGINT) AS n_keep,
+           {sql_davg('score', 30, 12)} AS avg_score
+    FROM b GROUP BY score_bin
+    """
+
+
+@register(
+    "llm_classifier_calibration",
+    oracle_builder=_calibration_oracle,
+)
+def llm_classifier_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Calibration table for the linear quality classifier: per
+    0.1-wide score bin, how often does an independent gate (the
+    corpus-clean ≥50-token rule) agree?  A classifier whose pass rate
+    doesn't rise monotonically with its own score is mis-calibrated —
+    this is the audit run before trusting any cheap model-based filter
+    with corpus-wide keep/drop power.
+
+    Builds on the classifier's own output plan (oracle composed via
+    oracle_builder).
+    Scores are per-row IEEE doubles identical in both engines, so the
+    bin = floor(score·10) assignment is deterministic; the per-bin mean
+    score is decimal-accumulated (order-independent).  One
+    map-combined aggregate to ~|bins| rows.
+    """
+    cls = llm_quality_classifier(spark, sf_dir)
+    b = cls.select(
+        F.floor(F.col("score") * 10).cast("int").alias("score_bin"),
+        (F.col("n_words") >= 50).alias("gate"),
+        "keep",
+        "score",
+    )
+    return b.groupBy("score_bin").agg(
+        F.count("*").alias("n_docs"),
+        F.count(F.when(F.col("gate"), 1)).alias("n_gate_pass"),
+        (
+            F.count(F.when(F.col("gate"), 1)).cast("double") / F.count("*")
+        ).alias("gate_pass_rate"),
+        F.count(F.when(F.col("keep"), 1)).alias("n_keep"),
+        (
+            F.sum(F.col("score").cast("decimal(30,12)")).cast("double")
+            / F.count("score")
+        ).alias("avg_score"),
+    )
+
+
+@register(
+    "llm_unigram_lm_score",
+    oracle="""
+    WITH tok AS (
+      SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents
+    ),
+    cnt AS (SELECT w, COUNT(*) AS c FROM tok GROUP BY w),
+    tot AS (SELECT COUNT(*) AS t FROM tok),
+    per_doc AS (
+      SELECT tok.doc_id,
+             COUNT(*) AS n_tokens,
+             CAST(SUM(cnt.c) AS BIGINT) AS sum_token_count
+      FROM tok JOIN cnt USING (w)
+      GROUP BY tok.doc_id
+    )
+    SELECT doc_id, n_tokens, sum_token_count,
+           CAST(sum_token_count AS DOUBLE)
+             / (CAST((SELECT t FROM tot) AS DOUBLE) * n_tokens)
+             AS mean_token_prob
+    FROM per_doc
+    """,
+)
+def llm_unigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Corpus-unigram LM fluency score per document: the mean corpus
+    probability of the document's tokens — the cheap LM-likelihood
+    gate (CCNet-style filtering uses exactly this shape with a wiki LM
+    in place of the self-corpus).
+
+    Everything stays integer until the final per-row division: token
+    counts aggregate map-combined as longs, the corpus total is one
+    broadcast scalar, and the compared edge is a single deterministic
+    double expression — no cross-row float accumulation, no libm at
+    the edge (repo float-parity rule).
+    """
+    d = load_table(spark, sf_dir, "documents")
+    tok = d.select("doc_id", F.explode(F.split(F.col("text"), " ")).alias("w"))
+    tok = cached(tok)
+    cnt = tok.groupBy("w").agg(F.count("*").alias("c"))
+    tot = tok.agg(F.count("*").alias("t"))
+    per_doc = (
+        tok.join(cnt, "w")
+        .groupBy("doc_id")
+        .agg(
+            F.count("*").alias("n_tokens"),
+            F.sum("c").alias("sum_token_count"),
+        )
+    )
+    return per_doc.crossJoin(F.broadcast(tot)).select(
+        "doc_id",
+        "n_tokens",
+        "sum_token_count",
+        (
+            F.col("sum_token_count").cast("double")
+            / (F.col("t").cast("double") * F.col("n_tokens"))
+        ).alias("mean_token_prob"),
+    )
+
+
+@register(
+    "llm_domain_mixture_weights",
+    oracle="""
+    WITH tok AS (
+      SELECT lang, doc_id, len(string_split(text, ' ')) AS n_tok FROM documents
+    ),
+    per_lang AS (
+      SELECT lang, COUNT(*) AS n_docs, CAST(SUM(n_tok) AS BIGINT) AS n_tokens
+      FROM tok GROUP BY lang
+    ),
+    tot AS (SELECT CAST(SUM(n_tokens) AS BIGINT) AS t, COUNT(*) AS n_langs
+            FROM per_lang)
+    SELECT lang, n_docs, n_tokens,
+           CAST(n_tokens AS DOUBLE) / (SELECT t FROM tot) AS actual_share,
+           CAST((SELECT t FROM tot) AS DOUBLE)
+             / ((SELECT n_langs FROM tot) * n_tokens) AS sampling_weight
+    FROM per_lang
+    """,
+)
+def llm_domain_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Data-mixing weights: per-language token shares and the sampling
+    weight that rebalances the corpus to a uniform language mixture —
+    the number a training-data loader multiplies into per-domain
+    sampling probabilities (the DoReMi/uniform-mixture baseline).
+
+    Token counts are exact longs aggregated map-combined; the compared
+    edge is two deterministic double ratios per language.  At 100 TB
+    this is one narrow scan + a language-keyed aggregate (dozens of
+    groups), shuffling one row per language.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    per_lang = (
+        d.select("lang", F.size(F.split(F.col("text"), " ")).cast("long").alias("n_tok"))
+        .groupBy("lang")
+        .agg(F.count("*").alias("n_docs"), F.sum("n_tok").alias("n_tokens"))
+    )
+    tot = per_lang.agg(
+        F.sum("n_tokens").alias("t"), F.count("*").alias("n_langs")
+    )
+    return per_lang.crossJoin(F.broadcast(tot)).select(
+        "lang",
+        "n_docs",
+        "n_tokens",
+        (F.col("n_tokens").cast("double") / F.col("t")).alias("actual_share"),
+        (
+            F.col("t").cast("double") / (F.col("n_langs") * F.col("n_tokens"))
+        ).alias("sampling_weight"),
+    )
+
+
+# --------------------------------------------------------------------------
+# llm_tokenizer_fertility — per-language subword fertility audit
+# --------------------------------------------------------------------------
+
+_SUBWORD_RE = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]"
+
+
+@register(
+    "llm_tokenizer_fertility",
+    oracle=f"""
+    WITH t AS (
+      SELECT lang,
+             len(string_split(text, ' ')) AS n_words,
+             len(regexp_extract_all(text, '{_SUBWORD_RE}')) AS n_subwords,
+             n_chars
+      FROM documents
+    )
+    SELECT lang,
+           COUNT(*) AS n_docs,
+           CAST(SUM(n_words) AS BIGINT) AS n_words,
+           CAST(SUM(n_subwords) AS BIGINT) AS n_subwords,
+           CASE WHEN SUM(n_words) > 0
+                THEN CAST(SUM(n_subwords) AS DOUBLE) / SUM(n_words)
+           END AS fertility,
+           CASE WHEN SUM(n_subwords) > 0
+                THEN CAST(SUM(n_chars) AS DOUBLE) / SUM(n_subwords)
+           END AS chars_per_token
+    FROM t GROUP BY lang
+    """,
+)
+def llm_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tokenizer fertility per language: subword tokens per whitespace
+    word and characters per subword — the multilingual token-budget
+    metric (fertility >1.5 means a language pays more sequence length
+    per word, skewing mixture budgets).
+
+    The subword tokenizer is the GPT-2-style class split (letter runs,
+    digit runs, single punctuation) counted with ``regexp_extract_all``
+    on both engines — the pattern uses only literal classes, identical
+    under Java regex and RE2.  Exact integer counts map-combine; the
+    two ratios are the zero-guarded double edge.
+    """
+    d = load_table(spark, sf_dir, "documents").select(
+        "lang",
+        "n_chars",
+        F.size(F.split(F.col("text"), " ")).cast("long").alias("n_words"),
+        F.size(F.regexp_extract_all(F.col("text"), F.lit(_SUBWORD_RE), 0)).cast(
+            "long"
+        ).alias("n_subwords"),
+    )
+    g = d.groupBy("lang").agg(
+        F.count("*").alias("n_docs"),
+        F.sum("n_words").alias("w"),
+        F.sum("n_subwords").alias("s"),
+        F.sum("n_chars").alias("ch"),
+    )
+    return g.select(
+        "lang",
+        "n_docs",
+        F.col("w").cast("long").alias("n_words"),
+        F.col("s").cast("long").alias("n_subwords"),
+        F.when(F.col("w") > 0, F.col("s").cast("double") / F.col("w")).alias(
+            "fertility"
+        ),
+        F.when(F.col("s") > 0, F.col("ch").cast("double") / F.col("s")).alias(
+            "chars_per_token"
+        ),
+    )
+
+
+# --------------------------------------------------------------------------
+# llm_token_budget_apportion — Hamilton's method for the data mixture
+# --------------------------------------------------------------------------
+
+_BUDGET_T = 1_000_000  # tokens to apportion across sources
+
+
+@register(
+    "llm_token_budget_apportion",
+    oracle=f"""
+    WITH c AS (
+      SELECT source,
+             CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
+      FROM documents GROUP BY source
+    ),
+    n AS (SELECT CAST(SUM(n_tokens) AS BIGINT) AS total FROM c),
+    q AS (
+      SELECT c.source, c.n_tokens,
+             ({_BUDGET_T} * c.n_tokens) // n.total AS base_alloc,
+             ({_BUDGET_T} * c.n_tokens) % n.total AS rem
+      FROM c, n
+    ),
+    r AS (
+      SELECT *,
+             row_number() OVER (ORDER BY rem DESC, source) AS rk,
+             {_BUDGET_T} - SUM(base_alloc) OVER () AS n_extra
+      FROM q
+    )
+    SELECT source, n_tokens,
+           CAST(base_alloc AS BIGINT) AS base_alloc,
+           CAST(base_alloc + CASE WHEN rk <= n_extra THEN 1 ELSE 0 END
+                AS BIGINT) AS final_alloc,
+           rk <= n_extra AS got_extra
+    FROM r
+    """,
+)
+def llm_token_budget_apportion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Largest-remainder (Hamilton) apportionment of a 1M-token
+    training budget across sources, proportional to each source's
+    token mass: integer quotas ⌊T·c_i/N⌋ plus one extra token to the
+    sources with the largest remainders until the budget is EXACTLY
+    spent — the allocator behind every "sample X tokens per domain"
+    plan (``llm_domain_mixture_weights`` produces the weights; this
+    turns weights into integer budgets that sum to T with no float
+    drift, the part naive rounding gets wrong).
+
+    Pure integer arithmetic: quota floor and remainder come from one
+    integer division (T·c_i ≤ 10¹³, no overflow), the remainder rank
+    is totally ordered by (remainder DESC, source), and Σ final = T by
+    construction.  Scale: one map-combined token aggregate, then a
+    |sources|-sized frame — the windows run on dozens of rows.
+    """
+    c = (
+        load_table(spark, sf_dir, "documents")
+        .select("source", F.size(F.split("text", " ")).alias("toks"))
+        .groupBy("source")
+        .agg(F.sum("toks").alias("n_tokens"))
+    )
+    n = c.agg(F.sum("n_tokens").alias("total"))
+    q = c.crossJoin(F.broadcast(n)).select(
+        "source",
+        "n_tokens",
+        F.expr(f"({_BUDGET_T} * n_tokens) DIV total").alias("base_alloc"),
+        ((F.lit(_BUDGET_T) * F.col("n_tokens")) % F.col("total")).alias("rem"),
+    )
+    r = q.select(
+        "*",
+        F.row_number().over(W.orderBy(F.col("rem").desc(), "source")).alias("rk"),
+        (F.lit(_BUDGET_T) - F.sum("base_alloc").over(W.partitionBy())).alias(
+            "n_extra"
+        ),
+    )
+    extra = F.col("rk") <= F.col("n_extra")
+    return r.select(
+        "source",
+        "n_tokens",
+        F.col("base_alloc").cast("long").alias("base_alloc"),
+        (F.col("base_alloc") + extra.cast("long")).cast("long").alias("final_alloc"),
+        extra.alias("got_extra"),
+    )
+
+
+@register(
+    "llm_importance_resampling",
+    oracle=f"""
+    WITH t AS (
+      SELECT doc_id,
+             len(string_split(text, ' ')) AS nt,
+             len(list_distinct(string_split(text, ' '))) AS nd
+      FROM documents
+    )
+    SELECT doc_id,
+           CAST(nt AS BIGINT) AS n_tokens,
+           CAST(nd AS DOUBLE) / CAST(nt AS DOUBLE) AS weight,
+           ({sql_h32('CAST(doc_id AS VARCHAR)', 'isr:')} / 4294967296.0)
+             < (CAST(nd AS DOUBLE) / CAST(nt AS DOUBLE)) AS keep
+    FROM t
+    """,
+)
+def llm_importance_resampling(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DSIR-style importance resampling with replayable acceptance.
+
+    Per doc: weight = type-token ratio (distinct words / words — the
+    cheap quality proxy; any per-doc importance weight slots in), and
+    accept iff a salted 32-bit md5-fold uniform u = h/2^32 ∈ [0,1) is
+    below the weight.  E[sample] follows the weight distribution and
+    the decision is a pure function of (doc_id, salt): re-running a
+    failed partition — or the whole 100 TB job — reproduces the exact
+    sample, unlike ``rand()`` whose per-task seeds change under retry
+    and straggler re-execution.
+
+    Float parity: weight is one IEEE division of two exact integers
+    (identical rounding in both engines); u is an exactly-representable
+    dyadic k/2^32 — the comparison is deterministic cross-engine.
+    Plan: a single narrow map over the scan, zero shuffles.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    ws = F.split(F.col("text"), " ")
+    nt = F.size(ws).cast("long")
+    nd = F.size(F.array_distinct(ws)).cast("long")
+    w = nd.cast("double") / nt.cast("double")
+    u = h32(F.col("doc_id").cast("string"), "isr:") / F.lit(4294967296.0)
+    return d.select(
+        "doc_id",
+        nt.alias("n_tokens"),
+        w.alias("weight"),
+        (u < w).alias("keep"),
     )

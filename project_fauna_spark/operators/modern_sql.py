@@ -387,3 +387,33 @@ def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT doc_id, depth FROM tree
         """
     )
+
+
+@register(
+    "sql_group_by_all",
+    oracle="""
+    SELECT o_orderstatus, o_orderpriority,
+           COUNT(*) AS n,
+           CAST(CAST(SUM(CAST(CAST(o_totalprice AS VARCHAR) AS DECIMAL(30,8))) AS VARCHAR) AS DOUBLE)
+             AS total
+    FROM orders
+    GROUP BY ALL
+    """,
+)
+def sql_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """`GROUP BY ALL` (Spark 4 + DuckDB both support it): group by
+    every non-aggregate select item — the modern-SQL ergonomic that
+    removes the copy-paste between SELECT and GROUP BY.  Plan is the
+    ordinary map-combined hash aggregate.
+    """
+
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_gba")
+    return spark.sql(
+        """
+        SELECT o_orderstatus, o_orderpriority,
+               COUNT(*) AS n,
+               CAST(SUM(CAST(o_totalprice AS DECIMAL(30,8))) AS DOUBLE) AS total
+        FROM orders_gba
+        GROUP BY ALL
+        """
+    )

@@ -33,9 +33,9 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
+from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F, types as T
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
-
+from project_fauna_spark.cache import cached
 from project_fauna_spark.io import load_table
 from project_fauna_spark.plans.registry import register
 
@@ -420,4 +420,316 @@ def mm_chunk_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "part_no",
         F.length(part).cast("long").alias("part_chars"),
         F.md5(part.cast("binary")).alias("part_digest"),
+    )
+
+
+# --------------------------------------------------------------------------
+# mm_phash_dedup — perceptual-hash near-dup detection over decoded media
+# --------------------------------------------------------------------------
+
+PHASH_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("phash", T.StringType()),
+    ]
+)
+
+
+@register(
+    "mm_phash_dedup",
+    # The aHash is fully deterministic from the payload bytes, so
+    # DuckDB replays the codec math exactly: the encoder pads the
+    # payload to height·192 bytes (height = ceil(n/192), min 1), the
+    # 64-cell "downscale" splits that stream into 64 contiguous chunks
+    # of height·3 bytes, and bit i is the INTEGER comparison
+    # cell_sum·64 > total_sum — no float anywhere, the hash is a
+    # 64-char '0'/'1' string.  Payloads are ASCII (unicode(char) ==
+    # byte value); the WHERE enforces that symmetrically with the
+    # Spark side's length == octet_length filter (the mm_frame_sample
+    # convention), so non-ASCII docs drop on BOTH sides.
+    oracle="""
+    WITH b AS (
+      SELECT doc_id, text, octet_length(encode(text)) AS n,
+             GREATEST(1, CAST(ceil(octet_length(encode(text)) / 192.0) AS BIGINT))
+               AS height
+      FROM documents
+      WHERE octet_length(encode(text)) = length(text)
+    ),
+    cs AS (
+      SELECT b.doc_id, g.i // (b.height * 3) AS cell,
+             CAST(SUM(CASE WHEN g.i + 1 <= b.n
+                           THEN unicode(substring(b.text, CAST(g.i + 1 AS INT), 1))
+                           ELSE 0 END) AS BIGINT) AS s
+      FROM b, LATERAL (SELECT unnest(range(0, b.height * 192)) AS i) g
+      GROUP BY 1, 2
+    ),
+    tot AS (SELECT doc_id, CAST(SUM(s) AS BIGINT) AS t FROM cs GROUP BY 1),
+    h AS (
+      SELECT cs.doc_id,
+             string_agg(CASE WHEN cs.s * 64 > tot.t THEN '1' ELSE '0' END,
+                        '' ORDER BY cs.cell) AS phash
+      FROM cs JOIN tot USING (doc_id)
+      GROUP BY cs.doc_id
+    )
+    SELECT phash,
+           CAST(COUNT(*) AS BIGINT) AS n_docs,
+           CAST(COUNT(*) - 1 AS BIGINT) AS n_redundant,
+           MIN(doc_id) AS min_doc_id
+    FROM h GROUP BY phash
+    """,
+)
+def mm_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Perceptual-hash (average-hash / aHash) dedup over REAL decoded
+    rasters: payload → valid 24-bit BMP → header-parsed pixel array →
+    64-cell downscale → 1 bit per cell (cell mean > global mean) →
+    group by the 64-bit hash.  Identical media collide exactly;
+    near-identical media (small byte-level perturbations) usually
+    collide too — the classic image-dedup first pass that runs BEFORE
+    any expensive embedding model.
+
+    The hash is computed in one Arrow ``mapInPandas`` stage (encode →
+    decode → numpy integer cell sums; bit i is the exact integer test
+    ``cell_sum·64 > total_sum``, so no float enters the hash), and the
+    shuffle that follows carries only (doc_id, 64-char hash) — never
+    media bytes (the ``mm_integrity_rollup`` rule).  Swap the BMP
+    round-trip for PIL + a real 8×8 resize and ONLY the Pandas
+    function body changes.  Scale: one decode pass, one
+    digest-keyed aggregate — the same plan as exact hash dedup.
+    """
+    import struct
+
+    import numpy as np
+    import pandas as pd
+
+    p = (
+        _payloads(spark, sf_dir)
+        .filter(F.length("text") == F.octet_length("text"))
+        .select("doc_id", "payload")
+    )
+
+    def phash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out: list[dict] = []
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
+                data = _encode_bmp(bytes(payload))
+                # REAL decode: geometry from BITMAPINFOHEADER.
+                pixel_offset = struct.unpack_from("<I", data, 10)[0]
+                width, height = struct.unpack_from("<ii", data, 18)
+                pixels = np.frombuffer(data, dtype=np.uint8, offset=pixel_offset)
+                cells = pixels.reshape(64, abs(height) * 3).sum(
+                    axis=1, dtype=np.int64
+                )
+                total = int(cells.sum())
+                bits = "".join(
+                    "1" if int(s) * 64 > total else "0" for s in cells
+                )
+                out.append({"doc_id": int(doc_id), "phash": bits})
+            yield pd.DataFrame(out, columns=[f.name for f in PHASH_SCHEMA.fields])
+
+    return (
+        p.mapInPandas(phash, schema=PHASH_SCHEMA)
+        .groupBy("phash")
+        .agg(
+            F.count("*").alias("n_docs"),
+            (F.count("*") - F.lit(1)).cast("long").alias("n_redundant"),
+            F.min("doc_id").alias("min_doc_id"),
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# mm_signal_features — DSP features without a DSP library
+# --------------------------------------------------------------------------
+
+
+@register(
+    "mm_signal_features",
+    # Bytes are ASCII (the mm convention: length == octet_length filter
+    # on BOTH sides), so unicode(char) == byte value and both engines
+    # see the same integer sample stream.  Centering is exact: the
+    # deviation n·b − S is an integer (cross-multiplied mean), so
+    # energy and crossing signs never touch floats.
+    oracle="""
+    WITH s AS (
+      SELECT doc_id, text, length(text) AS n
+      FROM documents
+      WHERE octet_length(encode(text)) = length(text) AND length(text) > 0
+    ),
+    b AS (
+      SELECT s.doc_id, s.n, g.i,
+             CAST(unicode(substring(s.text, CAST(g.i AS INT), 1)) AS BIGINT)
+               AS v
+      FROM s, LATERAL (SELECT unnest(range(1, s.n + 1)) AS i) g
+    ),
+    t AS (SELECT doc_id, CAST(SUM(v) AS BIGINT) AS sv FROM b GROUP BY 1),
+    d AS (
+      SELECT b.doc_id, b.i, b.n * b.v - t.sv AS dev,
+             LAG(b.n * b.v - t.sv) OVER (PARTITION BY b.doc_id ORDER BY b.i)
+               AS prev_dev
+      FROM b JOIN t USING (doc_id)
+    )
+    SELECT doc_id,
+           CAST(MAX(i) AS BIGINT) AS n_samples,
+           CAST(SUM(CAST(dev * dev AS HUGEINT)) AS BIGINT)
+             AS energy_scaled,
+           CAST(SUM(CASE WHEN prev_dev IS NOT NULL
+                          AND dev * prev_dev < 0 THEN 1 ELSE 0 END)
+                AS BIGINT) AS zero_crossings,
+           CAST(MAX(ABS(dev)) AS BIGINT) AS peak_dev_scaled
+    FROM d GROUP BY doc_id
+    """,
+)
+def mm_signal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Signal-processing features over the payload treated as 8-bit
+    PCM samples: per document, the mean-centered ENERGY, the
+    ZERO-CROSSING count (sign flips around the mean — the classic
+    cheap voiced/unvoiced & noisiness feature), and the peak
+    deviation.  The audio-feature-extraction plumbing of the
+    multimodal column family (``mm_decode_features`` is the image
+    side), with stdlib-only math: swap the byte stream for real PCM
+    and ONLY the source column changes.
+
+    Exactness by cross-multiplication: centering on the mean uses the
+    integer deviation n·b − S (never the fractional mean), so energy,
+    crossings, and peak are all integer arithmetic — energy
+    accumulates in decimal(38,0)/HUGEINT and exits as BIGINT.  Scale:
+    samples EXPLODE to rows (doc-keyed — the honest distributed-DSP
+    shape: a billion-sample stream partitions by doc/channel), one
+    per-doc total join, one doc-keyed LAG, one aggregate.
+    """
+    d0 = (
+        load_table(spark, sf_dir, "documents")
+        .filter(
+            (F.length("text") == F.octet_length("text")) & (F.length("text") > 0)
+        )
+        .select("doc_id", F.length("text").alias("n"), "text")
+    )
+    b = cached(
+        d0.select(
+            "doc_id",
+            "n",
+            F.posexplode(F.split("text", "")).alias("i0", "ch"),
+        ).select(
+            "doc_id",
+            "n",
+            (F.col("i0") + 1).alias("i"),
+            F.ascii("ch").cast("long").alias("v"),
+        )
+    )
+    t = b.groupBy("doc_id").agg(F.sum("v").alias("sv"))
+    dev = (F.col("n") * F.col("v") - F.col("sv")).alias("dev")
+    dd = (
+        b.join(t, "doc_id")
+        .select("doc_id", "i", dev)
+        .select(
+            "doc_id",
+            "i",
+            "dev",
+            F.lag("dev").over(W.partitionBy("doc_id").orderBy("i")).alias(
+                "prev_dev"
+            ),
+        )
+    )
+    return dd.groupBy("doc_id").agg(
+        F.max("i").cast("long").alias("n_samples"),
+        F.sum((F.col("dev") * F.col("dev")).cast("decimal(38,0)"))
+        .cast("long")
+        .alias("energy_scaled"),
+        F.sum(
+            F.when(
+                F.col("prev_dev").isNotNull()
+                & (F.col("dev") * F.col("prev_dev") < 0),
+                1,
+            ).otherwise(0)
+        ).alias("zero_crossings"),
+        F.max(F.abs(F.col("dev"))).cast("long").alias("peak_dev_scaled"),
+    )
+
+
+# --------------------------------------------------------------------------
+# mm_byte_uniformity_audit — text, or compressed/encrypted blob?
+# --------------------------------------------------------------------------
+
+
+@register(
+    "mm_byte_uniformity_audit",
+    # χ² against the uniform byte distribution, all-integer numerator:
+    # Σ_b (256·c_b − n)² over ALL 256 byte values — absent bytes
+    # contribute n² each, so U = Σ_present(256c−n)² + (256−k)·n² and
+    # χ² = U / (256·n) is ONE division of exact integers.
+    oracle="""
+    WITH s AS (
+      SELECT doc_id, text, length(text) AS n
+      FROM documents
+      WHERE octet_length(encode(text)) = length(text) AND length(text) > 0
+    ),
+    b AS (
+      SELECT s.doc_id, s.n,
+             unicode(substring(s.text, CAST(g.i AS INT), 1)) AS v
+      FROM s, LATERAL (SELECT unnest(range(1, s.n + 1)) AS i) g
+    ),
+    c AS (
+      SELECT doc_id, n, v, CAST(COUNT(*) AS BIGINT) AS cb
+      FROM b GROUP BY 1, 2, 3
+    ),
+    u AS (
+      SELECT doc_id, CAST(MAX(n) AS BIGINT) AS n_samples,
+             CAST(COUNT(*) AS BIGINT) AS distinct_bytes,
+             SUM(CAST((256 * cb - n) AS HUGEINT) * (256 * cb - n))
+               AS u_present
+      FROM c GROUP BY doc_id
+    )
+    SELECT doc_id, n_samples, distinct_bytes,
+           CAST(u_present
+                + (256 - distinct_bytes) * n_samples * n_samples AS DOUBLE)
+             / CAST(256 * n_samples AS DOUBLE) AS chi2_uniform
+    FROM u
+    """,
+)
+def mm_byte_uniformity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Byte-histogram uniformity χ² per payload — the classic
+    compressed/encrypted-blob detector: plain text concentrates on a
+    few dozen byte values (huge χ² against uniform), while ciphertext
+    and compressed media sit near χ² ≈ 255 — the one-pass triage that
+    routes payloads to the right decoder and flags data that should
+    NOT be readable (``mm_binary_meta`` reads declared type; this
+    reads the bytes' own statistics).
+
+    All-integer numerator via cross-multiplication (256·c − n, never
+    the fractional expectation), absent byte values folded in as a
+    closed form, ONE IEEE division at the edge.  Scale: bytes explode
+    to doc-keyed rows (the ``mm_signal_features`` shape), then two
+    map-combined aggregates — a petabyte of payloads streams through
+    with 256 counters per document in flight.
+    """
+    d0 = (
+        load_table(spark, sf_dir, "documents")
+        .filter(
+            (F.length("text") == F.octet_length("text")) & (F.length("text") > 0)
+        )
+        .select("doc_id", F.length("text").alias("n"), "text")
+    )
+    b = d0.select(
+        "doc_id",
+        "n",
+        F.explode(F.split("text", "")).alias("ch"),
+    ).select("doc_id", "n", F.ascii("ch").cast("long").alias("v"))
+    c = b.groupBy("doc_id", "n", "v").agg(F.count("*").alias("cb"))
+    dev = F.lit(256) * F.col("cb") - F.col("n")
+    u = c.groupBy("doc_id").agg(
+        F.max("n").cast("long").alias("n_samples"),
+        F.count("*").alias("distinct_bytes"),
+        F.sum((dev.cast("decimal(19,0)") * dev)).alias("u_present"),
+    )
+    total = F.col("u_present").cast("decimal(38,0)") + (
+        F.lit(256) - F.col("distinct_bytes")
+    ).cast("decimal(38,0)") * F.col("n_samples") * F.col("n_samples")
+    return u.select(
+        "doc_id",
+        "n_samples",
+        "distinct_bytes",
+        (
+            total.cast("double")
+            / (F.lit(256) * F.col("n_samples")).cast("double")
+        ).alias("chi2_uniform"),
     )

@@ -25,11 +25,7 @@ from project_fauna_spark.functions import (
 from project_fauna_spark.io import load_table
 from project_fauna_spark.plans.registry import register
 
-from project_fauna_spark.operators._oracle_shared import (  # noqa: F401
-    AS_OF,
-    _SQL_EPOCH_TO_US,
-    _sql_epoch_to_iso,
-)
+from project_fauna_spark.operators._oracle_shared import AS_OF, _sql_epoch_to_iso
 
 
 @register(

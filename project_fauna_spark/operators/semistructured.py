@@ -10,8 +10,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from project_fauna_spark.cache import cached
+from project_fauna_spark.functions.ranks import bucket_offsets
 from project_fauna_spark.io import load_table
-from project_fauna_spark.plans.registry import register
+from project_fauna_spark.plans.registry import register, sql_dsum
 
 
 @register(
@@ -771,4 +772,338 @@ def cdc_tombstone_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("value").alias("last_value"),
             F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("last_ts"),
         )
+    )
+
+
+# --------------------------------------------------------------------------
+# sample_systematic_stride — every Nth row in hash order
+# --------------------------------------------------------------------------
+
+_STRIDE = 100
+_SYS_BUCKETS_SHIFT = 24  # bucket = h >> 24: 256 range-ordered buckets
+
+
+def _systematic_oracle() -> str:
+    from project_fauna_spark.operators._oracle_shared import sql_h32 as _sql_h32
+
+    hv = _sql_h32("CAST(o_orderkey AS VARCHAR)", "sys:")
+    return f"""
+    WITH h AS (SELECT o_orderkey, {hv} AS hv FROM orders),
+    r AS (
+      SELECT o_orderkey, hv,
+             row_number() OVER (ORDER BY hv, o_orderkey) AS rnk
+      FROM h
+    )
+    SELECT CAST(rnk AS BIGINT) AS sample_rank, o_orderkey, hv AS hash_key
+    FROM r WHERE (rnk - 1) % {_STRIDE} = 0
+    """
+
+
+@register("sample_systematic_stride", oracle_builder=_systematic_oracle)
+def sample_systematic_stride(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Systematic 1-in-100 sample in PORTABLE hash order: rank every
+    order by its salted 32-bit md5 hash (ties broken by key) and keep
+    ranks 1, 101, 201, … — the evenly-spaced deterministic sample that
+    (unlike ``sample_bernoulli``) has EXACTLY ⌈n/100⌉ rows and zero
+    clumping, and (unlike ``sample_reservoir_hash``) preserves a
+    reproducible global ordering any engine can replay.
+
+    The global rank never funnels: rows bucket by the hash's top 8
+    bits (range-ordered, so bucket boundaries respect the sort),
+    rank locally within their bucket, and add broadcast per-bucket
+    offsets from ``functions/ranks.bucket_offsets`` — the oracle uses
+    the equivalent single-window spelling.  Scale: the only wide
+    exchange is the 256-way bucket shuffle; the offsets table is 256
+    rows.
+    """
+    from project_fauna_spark.functions.wordhash import h32 as _h32
+
+    h = cached(
+        load_table(spark, sf_dir, "orders")
+        .select(
+            "o_orderkey",
+            _h32(F.col("o_orderkey").cast("string"), "sys:").alias("hv"),
+        )
+        .withColumn("bucket", F.shiftright(F.col("hv"), _SYS_BUCKETS_SHIFT))
+    )
+    local = F.row_number().over(
+        W.partitionBy("bucket").orderBy("hv", "o_orderkey")
+    )
+    ranked = h.select("o_orderkey", "hv", "bucket", local.alias("lrnk"))
+    offs = bucket_offsets(h, [], "bucket", F.lit(1))
+    return (
+        ranked.join(F.broadcast(offs.select("bucket", "offset")), "bucket")
+        .select(
+            (F.col("offset") + F.col("lrnk")).alias("sample_rank"),
+            "o_orderkey",
+            F.col("hv").alias("hash_key"),
+        )
+        .filter((F.col("sample_rank") - 1) % _STRIDE == 0)
+    )
+
+
+# --------------------------------------------------------------------------
+# cdc_snapshot_diff — what changed between two as-of states?
+# --------------------------------------------------------------------------
+
+_SNAP_T1 = "1998-06-30"
+_SNAP_T2 = "1999-06-30"
+
+
+@register(
+    "cdc_snapshot_diff",
+    oracle=f"""
+    WITH log AS (
+      SELECT o_custkey AS key, o_orderdate AS ts, o_orderkey AS version
+      FROM orders
+    ),
+    s1 AS (
+      SELECT key, MAX(struct_pack(t := ts, v := version)).v AS v
+      FROM log WHERE ts <= DATE '{_SNAP_T1}' GROUP BY key
+    ),
+    s2 AS (
+      SELECT key, MAX(struct_pack(t := ts, v := version)).v AS v
+      FROM log WHERE ts <= DATE '{_SNAP_T2}' GROUP BY key
+    ),
+    d AS (
+      SELECT s1.key AS k1, s2.key AS k2,
+             s1.v AS v1, s2.v AS v2
+      FROM s1 FULL OUTER JOIN s2 ON s1.key = s2.key
+    )
+    SELECT '{_SNAP_T1}' AS t1, '{_SNAP_T2}' AS t2,
+           CAST(COUNT(k1) AS BIGINT) AS n_keys_t1,
+           CAST(COUNT(k2) AS BIGINT) AS n_keys_t2,
+           CAST(SUM(CASE WHEN k1 IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_added,
+           CAST(SUM(CASE WHEN k1 IS NOT NULL AND k2 IS NOT NULL
+                          AND v1 <> v2 THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_changed,
+           CAST(SUM(CASE WHEN k1 IS NOT NULL AND v1 = v2
+                         THEN 1 ELSE 0 END) AS BIGINT) AS n_unchanged
+    FROM d
+    """,
+)
+def cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Snapshot-to-snapshot diff of a CDC-materialized state: treat
+    each customer's order stream as their change log (the
+    ``cdc_scd2_intervals`` convention), materialize the latest-version
+    state as of two dates a year apart, and report
+    added / changed / unchanged key counts — the reconciliation every
+    warehouse runs after a backfill ("did the re-sync move exactly
+    the keys it should have?").  ``mv_incremental_merge`` applies a
+    delta; this VERIFIES one.
+
+    Each as-of state is one filtered max-struct aggregate (latest by
+    (date, version) — order-independent, map-combined); the diff is a
+    single key-keyed full outer join.  No deletes exist in this log
+    (append-only), so removed-keys is structurally zero and omitted —
+    ``cdc_tombstone_compaction`` owns the delete path.
+    """
+    log = load_table(spark, sf_dir, "orders").select(
+        F.col("o_custkey").alias("key"),
+        F.col("o_orderdate").alias("ts"),
+        F.col("o_orderkey").alias("version"),
+    )
+    latest = F.max(
+        F.struct(F.col("ts").alias("t"), F.col("version").alias("v"))
+    )["v"]
+
+    def state(cutoff: str, alias: str) -> DataFrame:
+        return (
+            log.filter(F.col("ts") <= F.lit(cutoff).cast("date"))
+            .groupBy("key")
+            .agg(latest.alias(alias))
+        )
+
+    s1 = state(_SNAP_T1, "v1").withColumnRenamed("key", "k1")
+    s2 = state(_SNAP_T2, "v2").withColumnRenamed("key", "k2")
+    d = s1.join(s2, s1.k1 == s2.k2, "full_outer")
+    agg = d.agg(
+        F.count("k1").alias("n_keys_t1"),
+        F.count("k2").alias("n_keys_t2"),
+        F.sum(F.when(F.col("k1").isNull(), 1).otherwise(0)).alias("n_added"),
+        F.sum(
+            F.when(
+                F.col("k1").isNotNull()
+                & F.col("k2").isNotNull()
+                & (F.col("v1") != F.col("v2")),
+                1,
+            ).otherwise(0)
+        ).alias("n_changed"),
+        F.sum(
+            F.when(F.col("k1").isNotNull() & (F.col("v1") == F.col("v2")), 1).otherwise(
+                0
+            )
+        ).alias("n_unchanged"),
+    )
+    return agg.select(
+        F.lit(_SNAP_T1).alias("t1"),
+        F.lit(_SNAP_T2).alias("t2"),
+        "n_keys_t1",
+        "n_keys_t2",
+        "n_added",
+        "n_changed",
+        "n_unchanged",
+    )
+
+
+# --------------------------------------------------------------------------
+# sample_estimate_accuracy — can you trust the 10 % sample?
+# --------------------------------------------------------------------------
+
+
+def _sample_accuracy_oracle() -> str:
+    from project_fauna_spark.operators._oracle_shared import sql_h32 as _sql_h32
+
+    h = _sql_h32("CAST(l_orderkey AS VARCHAR) || '_' || CAST(l_linenumber AS VARCHAR)", "acc:")
+    return f"""
+    WITH t AS (
+      SELECT CAST(l_quantity AS BIGINT) AS qty,
+             l_extendedprice * (1 - l_discount) AS rev,
+             {h} % 10 = 0 AS sampled
+      FROM lineitem
+    ),
+    a AS (
+      SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
+             CAST(SUM(CASE WHEN sampled THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_sampled,
+             CAST(SUM(qty) AS BIGINT) AS exact_qty,
+             CAST(10 * SUM(CASE WHEN sampled THEN qty ELSE 0 END) AS BIGINT)
+               AS est_qty,
+             {sql_dsum('rev', 30, 8)} AS exact_rev,
+             10 * {sql_dsum('CASE WHEN sampled THEN rev ELSE 0 END', 30, 8)}
+               AS est_rev
+      FROM t
+    )
+    SELECT n_rows, n_sampled, exact_qty, est_qty,
+           CAST(est_qty AS DOUBLE) / CAST(exact_qty AS DOUBLE) - 1
+             AS qty_rel_error,
+           exact_rev, est_rev,
+           est_rev / exact_rev - 1 AS rev_rel_error
+    FROM a
+    """
+
+
+@register("sample_estimate_accuracy", oracle_builder=_sample_accuracy_oracle)
+def sample_estimate_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Honest sampling-error audit: a deterministic 1-in-10 hash
+    sample of lineitem, its scaled-up quantity and revenue estimates,
+    and the ACTUAL relative errors against the exact totals — the
+    number that tells an analyst whether "run it on the sample" is
+    safe for this metric (``sample_bernoulli`` produces samples; this
+    closes the loop by MEASURING what a sample-based estimate would
+    have gotten wrong, which is how sampling rates get chosen).
+
+    The sample membership is the portable md5 fold of the full line
+    key, so both engines (and every rerun) sample identical rows;
+    est = 10× the sampled sum stays exact (integer / decimal), and
+    each relative error is ONE division of bit-equal edges.  Scale:
+    one map-combined aggregate computes exact AND sampled accumulators
+    together — the audit costs the same scan the estimate does.
+    """
+    from project_fauna_spark.functions.wordhash import h32 as _h32
+
+    key = F.concat(
+        F.col("l_orderkey").cast("string"),
+        F.lit("_"),
+        F.col("l_linenumber").cast("string"),
+    )
+    t = load_table(spark, sf_dir, "lineitem").select(
+        F.col("l_quantity").cast("long").alias("qty"),
+        (F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))).alias("rev"),
+        (_h32(key, "acc:") % 10 == 0).alias("sampled"),
+    )
+    drev = F.col("rev").cast("decimal(30,8)")
+    a = t.agg(
+        F.count("*").alias("n_rows"),
+        F.sum(F.when(F.col("sampled"), 1).otherwise(0)).cast("long").alias(
+            "n_sampled"
+        ),
+        F.sum("qty").alias("exact_qty"),
+        (F.lit(10) * F.sum(F.when(F.col("sampled"), F.col("qty")).otherwise(0)))
+        .cast("long")
+        .alias("est_qty"),
+        F.sum(drev).cast("double").alias("exact_rev"),
+        (
+            F.lit(10)
+            * F.sum(F.when(F.col("sampled"), drev).otherwise(F.lit(0).cast("decimal(30,8)"))).cast(
+                "double"
+            )
+        ).alias("est_rev"),
+    )
+    return a.select(
+        "n_rows",
+        "n_sampled",
+        "exact_qty",
+        "est_qty",
+        (
+            F.col("est_qty").cast("double") / F.col("exact_qty").cast("double")
+            - 1
+        ).alias("qty_rel_error"),
+        "exact_rev",
+        "est_rev",
+        (F.col("est_rev") / F.col("exact_rev") - 1).alias("rev_rel_error"),
+    )
+
+
+@register(
+    "sample_pps_systematic",
+    oracle="""
+    WITH d AS (
+      SELECT doc_id, lang, n_chars,
+             SUM(n_chars) OVER (ORDER BY doc_id
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
+             SUM(n_chars) OVER () AS t
+      FROM documents
+    )
+    SELECT doc_id, lang, CAST(n_chars AS BIGINT) AS n_chars,
+           CAST((25 * cum) // t AS BIGINT) AS pick_index
+    FROM d
+    WHERE (25 * cum) // t > (25 * (cum - n_chars)) // t
+    """,
+)
+def sample_pps_systematic(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Systematic PPS sampling (Madow): lay the docs on the cumulative
+    n_chars line in doc_id order and pick the doc containing each of
+    the K=25 equally-spaced points — inclusion probability exactly
+    proportional to document length, ONE pass, no RNG.  A doc is picked
+    iff ⌊K·cum/T⌋ increments across its weight interval; pure int64
+    arithmetic, so Spark and DuckDB agree bit-for-bit (this is why the
+    weighted sampler is spelled PPS-systematic and not
+    Efraimidis-Spirakis u^(1/w) keys — a top-K cut on libm pow/ln
+    doubles is a cross-engine float decision boundary).
+
+    Scale: the cumulative sum is the repo's two-phase bucketed cumsum
+    (bucket = doc_id div 256; raw-data window carries its bucket key,
+    offsets come from the broadcast ``bucket_offsets`` table whose own
+    window runs over the bounded per-bucket aggregate) — never a
+    single-task global window.  Int64 headroom: K·T overflows only
+    past T ≈ 3.7e17 total chars (~370 PB of text at 1 B/char); past
+    that, widen to DECIMAL(38,0).  K=25 spaced points over ~100 TB is
+    one output row per ~4 TB — K in practice scales with the target
+    sample, not the corpus.
+    """
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
+    K = 25
+    b = d.withColumn("bucket", F.expr("doc_id div 256"))
+    offs = bucket_offsets(b, [], "bucket", F.col("n_chars"), total_alias="t")
+    local = F.sum("n_chars").over(
+        W.partitionBy("bucket")
+        .orderBy("doc_id")
+        .rowsBetween(W.unboundedPreceding, W.currentRow)
+    )
+    cum = b.join(F.broadcast(offs), "bucket").select(
+        "doc_id",
+        "lang",
+        "n_chars",
+        "t",
+        (F.col("offset") + local).alias("cum"),
+    )
+    hi = F.expr(f"({K} * cum) div t")
+    lo = F.expr(f"({K} * (cum - n_chars)) div t")
+    return cum.filter(hi > lo).select(
+        "doc_id",
+        "lang",
+        F.col("n_chars").cast("bigint").alias("n_chars"),
+        hi.cast("bigint").alias("pick_index"),
     )

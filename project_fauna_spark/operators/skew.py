@@ -17,7 +17,7 @@ At 100 TB the two engineered answers to shuffle pathology are:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 def salted_join(

@@ -21,7 +21,7 @@ Scale design (100 TB / unbounded):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from project_fauna_spark.io import load_table
 from project_fauna_spark.operators._oracle_shared import SQL_TS_OUT, TS_OUT
@@ -168,3 +168,63 @@ def stream_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_events"))
         .select(F.date_format("w.start", TS_OUT).alias("window_start"), "n_events")
     )
+
+
+@register(
+    "stream_dedup_suppress_repeats",
+    oracle=f"""
+    WITH marked AS (
+      SELECT event_id, user_id, event_type, ts,
+             CASE WHEN lag(ts) OVER w IS NULL
+                    OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 600000000
+                  THEN 1 ELSE 0 END AS new_burst
+      FROM events
+      WINDOW w AS (PARTITION BY user_id, event_type ORDER BY ts, event_id)
+    ),
+    bursts AS (
+      SELECT *,
+             SUM(new_burst) OVER (PARTITION BY user_id, event_type
+                                  ORDER BY ts, event_id
+                                  ROWS UNBOUNDED PRECEDING) AS burst_no
+      FROM marked
+    )
+    SELECT user_id, event_type,
+           strftime(MIN(ts), '{SQL_TS_OUT}') AS first_ts,
+           MIN(event_id) AS kept_event_id,
+           COUNT(*) - 1 AS n_suppressed
+    FROM bursts GROUP BY user_id, event_type, burst_no
+    """,
+)
+def stream_dedup_suppress_repeats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming-dedup analog: suppress repeats of the same
+    (user, event_type) arriving within 10 minutes of the previous
+    occurrence — keep the first event of each burst, count the
+    suppressed copies.  This is the batch rendering of
+    ``dropDuplicatesWithinWatermark`` semantics (the real streaming
+    twin, :func:`project_fauna_spark.streaming.pipelines.dedup_stream`,
+    bounds its state by the watermark exactly as this bounds bursts by
+    the gap; smoke-tested in tests/test_streaming.py).
+
+    One shuffle on the dedup key; per-key window state is a single
+    lag + running sum — the same bounded-state layout the streaming
+    state store keeps.  event_id tie-break on every window (repo
+    invariant: equal-ts rows fold identically in both engines).
+    """
+    e = load_table(spark, sf_dir, "events")
+    w = W.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
+    gap_us = F.unix_micros(F.col("ts")) - F.unix_micros(F.lag("ts").over(w))
+    marked = e.withColumn(
+        "new_burst",
+        F.when(F.lag("ts").over(w).isNull() | (gap_us > 600_000_000), 1).otherwise(0),
+    )
+    w2 = (
+        W.partitionBy("user_id", "event_type")
+        .orderBy("ts", "event_id")
+        .rowsBetween(W.unboundedPreceding, W.currentRow)
+    )
+    bursts = marked.withColumn("burst_no", F.sum("new_burst").over(w2))
+    return bursts.groupBy("user_id", "event_type", "burst_no").agg(
+        F.date_format(F.min("ts"), TS_OUT).alias("first_ts"),
+        F.min("event_id").alias("kept_event_id"),
+        (F.count("*") - 1).alias("n_suppressed"),
+    ).drop("burst_no")

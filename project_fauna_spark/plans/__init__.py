@@ -1,142 +1,54 @@
 """Named-query registry: every engine operator exposed as a query.
 
-Importing this package populates the registry from all operator
-modules; ``QUERIES`` / ``ORACLE`` are the driver-facing maps.
+Importing this package registers the queries of every operator module;
+``QUERIES`` / ``ORACLE`` are the driver-facing maps.  A query lives in
+the operator module of its name prefix (README "Layout").
 
-The external driver grades the first 50 entries per round.  Registry
-iteration order is module import order (dict insertion) with the
-``plans/window.py`` GRADING_WINDOW front-loaded at the end of this
-file — the round-10+ rotation mechanism (re-grade windows span ~30
-modules; see window.py).  For round 9 the window equals the
-import-order head, so the front-load is a verified no-op.
-
-Round-9 window (this order, exactly 50 entries, ALL first-time names —
-the LAST never-graded backlog; after this round every registered query
-has been driver-graded at least once): extras30 (1 —
-``q_discount_demand_curve`` heads the window alone after
-``ts_max_drawdown``, graded as r8 seat 50, moved home to
-``timeseries.py`` at this rotation, the same moved-home convention as
-the r7/r8 splits) + extras31..extras52 (44) + extras53 (2) + extras54
-(2 — the strays relocated mid-r8) + extras55 (1 — the sole r8
-addition) = 50.  Pinned by tests/test_window_manifest.py against
-WINDOW_r9.txt — do NOT add registrations to any module at or before
-extras55 mid-round; new operators go in a NEW module imported after
-extras55.
-
-After round 9 the rotation's job changes: zero never-graded entries
-remain, so r10+ windows are free for re-grades (oldest-graded-first)
-and new additions — additions stay throttled to ≤ grading throughput
-(ADVICE r6).
-
-Sweep coverage (round-9 corpus — byte-identical to the r7 generation,
-md5s in CLAUDE.md): post-rotation, the full registry passed foreign
-plain-session sweeps 392/392 at sf0.01 (the driver's grading config,
-twice) AND 392/392 at sf0.1 (twice); the r9 window passed a dedicated
-50/50 sf0.1 sweep and a 50/50 repeat-invocation stability sweep; full
-pytest 1135 passed / 1 skipped.  sf0.1 sweeps run through
-tools/parity_sweep.py (13 memoized heavy oracles, digest-keyed memo
-DB, warm full-registry wall ~15 min).
+Registry order is ``plans/window.GRADING_WINDOW`` followed by every
+other name sorted by name, so no import or module move can shift a
+position.
 """
 
-from project_fauna_spark.plans.registry import QUERIES, ORACLE, register
+from project_fauna_spark.plans.registry import (
+    ORACLE,
+    QUERIES,
+    register,
+    resolve_deferred_oracles,
+)
+from project_fauna_spark.plans.window import GRADING_WINDOW
 
 # Operator modules register their queries at import time.
-# --- round-9 grading window: exactly 50 entries ---
-import project_fauna_spark.operators.extras30  # noqa: F401,E402  # (1 entry: q_discount_demand_curve)
-import project_fauna_spark.operators.extras31  # noqa: F401,E402
-import project_fauna_spark.operators.extras32  # noqa: F401,E402
-import project_fauna_spark.operators.extras33  # noqa: F401,E402
-import project_fauna_spark.operators.extras34  # noqa: F401,E402
-import project_fauna_spark.operators.extras35  # noqa: F401,E402
-import project_fauna_spark.operators.extras36  # noqa: F401,E402
-import project_fauna_spark.operators.extras37  # noqa: F401,E402
-import project_fauna_spark.operators.extras38  # noqa: F401,E402
-import project_fauna_spark.operators.extras39  # noqa: F401,E402
-import project_fauna_spark.operators.extras40  # noqa: F401,E402
-import project_fauna_spark.operators.extras41  # noqa: F401,E402
-import project_fauna_spark.operators.extras42  # noqa: F401,E402
-import project_fauna_spark.operators.extras43  # noqa: F401,E402
-import project_fauna_spark.operators.extras44  # noqa: F401,E402
-import project_fauna_spark.operators.extras45  # noqa: F401,E402
-import project_fauna_spark.operators.extras46  # noqa: F401,E402
-import project_fauna_spark.operators.extras47  # noqa: F401,E402
-import project_fauna_spark.operators.extras48  # noqa: F401,E402
-import project_fauna_spark.operators.extras49  # noqa: F401,E402
-import project_fauna_spark.operators.extras50  # noqa: F401,E402
-import project_fauna_spark.operators.extras51  # noqa: F401,E402
-import project_fauna_spark.operators.extras52  # noqa: F401,E402
-import project_fauna_spark.operators.extras53  # noqa: F401,E402
-import project_fauna_spark.operators.extras54  # noqa: F401,E402  # (relocated never-graded strays)
-import project_fauna_spark.operators.extras55  # noqa: F401,E402  # (the one r8 addition)
-import project_fauna_spark.operators.extras56  # noqa: F401,E402  # (the two r11 additions)
-import project_fauna_spark.operators.extras57  # noqa: F401,E402  # (the two r12 additions)
-# --- driver-green in rounds 1-8: back of the rotation ---
-import project_fauna_spark.operators.semistructured  # noqa: F401,E402
-import project_fauna_spark.operators.modern_sql  # noqa: F401,E402
-import project_fauna_spark.operators.analytics  # noqa: F401,E402
-import project_fauna_spark.operators.extras4  # noqa: F401,E402
-import project_fauna_spark.operators.graph  # noqa: F401,E402
-import project_fauna_spark.operators.timeseries  # noqa: F401,E402
-import project_fauna_spark.operators.eventseries  # noqa: F401,E402
-import project_fauna_spark.operators.quality  # noqa: F401,E402
-import project_fauna_spark.operators.layout  # noqa: F401,E402
-import project_fauna_spark.operators.curation  # noqa: F401,E402
-import project_fauna_spark.operators.llm_extras  # noqa: F401,E402
-import project_fauna_spark.operators.extras3  # noqa: F401,E402
-import project_fauna_spark.operators.multimodal  # noqa: F401,E402
-import project_fauna_spark.operators.etl_source  # noqa: F401,E402
-import project_fauna_spark.operators.ingest  # noqa: F401,E402
-import project_fauna_spark.operators.dedup  # noqa: F401,E402
-import project_fauna_spark.operators.similarity  # noqa: F401,E402
-import project_fauna_spark.operators.text  # noqa: F401,E402
-import project_fauna_spark.operators.llm_pipeline  # noqa: F401,E402
-import project_fauna_spark.operators.llm_quality  # noqa: F401,E402
-import project_fauna_spark.operators.udf_surface  # noqa: F401,E402
-import project_fauna_spark.operators.reference_queries  # noqa: F401,E402
-import project_fauna_spark.operators.relational  # noqa: F401,E402
-import project_fauna_spark.operators.warehouse  # noqa: F401,E402
-import project_fauna_spark.operators.clustering  # noqa: F401,E402
-import project_fauna_spark.operators.upsert  # noqa: F401,E402
-import project_fauna_spark.operators.ml_feature  # noqa: F401,E402
-import project_fauna_spark.operators.extras5  # noqa: F401,E402
-import project_fauna_spark.operators.extras6  # noqa: F401,E402
-import project_fauna_spark.operators.extras7  # noqa: F401,E402
-import project_fauna_spark.operators.extras8  # noqa: F401,E402
-import project_fauna_spark.operators.extras9  # noqa: F401,E402
-import project_fauna_spark.operators.extras10  # noqa: F401,E402
-import project_fauna_spark.operators.extras11  # noqa: F401,E402
-import project_fauna_spark.operators.extras12  # noqa: F401,E402
-import project_fauna_spark.operators.extras13  # noqa: F401,E402
-import project_fauna_spark.operators.extras14  # noqa: F401,E402
-import project_fauna_spark.operators.extras15  # noqa: F401,E402
-import project_fauna_spark.operators.extras16  # noqa: F401,E402
-import project_fauna_spark.operators.extras17  # noqa: F401,E402
-import project_fauna_spark.operators.extras18  # noqa: F401,E402
-import project_fauna_spark.operators.extras19  # noqa: F401,E402
-import project_fauna_spark.operators.extras20  # noqa: F401,E402
-import project_fauna_spark.operators.extras21  # noqa: F401,E402
-import project_fauna_spark.operators.extras22  # noqa: F401,E402
-import project_fauna_spark.operators.extras23  # noqa: F401,E402
-import project_fauna_spark.operators.extras24  # noqa: F401,E402
-import project_fauna_spark.operators.extras25  # noqa: F401,E402
-import project_fauna_spark.operators.extras26  # noqa: F401,E402
-import project_fauna_spark.operators.extras27  # noqa: F401,E402
-import project_fauna_spark.operators.extras28  # noqa: F401,E402
-import project_fauna_spark.operators.extras29  # noqa: F401,E402
-import project_fauna_spark.operators.streaming_batch  # noqa: F401,E402
+import project_fauna_spark.operators.analytics  # noqa: F401
+import project_fauna_spark.operators.clustering  # noqa: F401
+import project_fauna_spark.operators.curation  # noqa: F401
+import project_fauna_spark.operators.dedup  # noqa: F401
+import project_fauna_spark.operators.etl_source  # noqa: F401
+import project_fauna_spark.operators.eventseries  # noqa: F401
+import project_fauna_spark.operators.graph  # noqa: F401
+import project_fauna_spark.operators.ingest  # noqa: F401
+import project_fauna_spark.operators.layout  # noqa: F401
+import project_fauna_spark.operators.llm_extras  # noqa: F401
+import project_fauna_spark.operators.llm_pipeline  # noqa: F401
+import project_fauna_spark.operators.llm_quality  # noqa: F401
+import project_fauna_spark.operators.ml_feature  # noqa: F401
+import project_fauna_spark.operators.modern_sql  # noqa: F401
+import project_fauna_spark.operators.multimodal  # noqa: F401
+import project_fauna_spark.operators.quality  # noqa: F401
+import project_fauna_spark.operators.reference_queries  # noqa: F401
+import project_fauna_spark.operators.relational  # noqa: F401
+import project_fauna_spark.operators.semistructured  # noqa: F401
+import project_fauna_spark.operators.similarity  # noqa: F401
+import project_fauna_spark.operators.skew  # noqa: F401
+import project_fauna_spark.operators.streaming_batch  # noqa: F401
+import project_fauna_spark.operators.text  # noqa: F401
+import project_fauna_spark.operators.timeseries  # noqa: F401
+import project_fauna_spark.operators.udf_surface  # noqa: F401
+import project_fauna_spark.operators.upsert  # noqa: F401
+import project_fauna_spark.operators.warehouse  # noqa: F401
 
-# Oracles that compose OTHER queries' oracle text build last — module
-# order is the rotating grading window, so cross-oracle references can
-# never rely on registration order.
-from project_fauna_spark.plans.registry import resolve_deferred_oracles  # noqa: E402
-
+# Oracles that compose other queries' oracle text build once every
+# module has registered.
 resolve_deferred_oracles()
-
-# Front-load the grading window (plans/window.py): from round 10 on the
-# window is a RE-grade list spanning ~30 modules, so registry HEAD order
-# is steered by this explicit list instead of module-move surgery.  For
-# round 9 the list equals the import-order head — a verified no-op.
-from project_fauna_spark.plans.window import GRADING_WINDOW  # noqa: E402
 
 # Tolerate a PARTIAL registry here: when a Spark worker unpickles a
 # module-level UDF (udf_surface.py pickles by reference), the worker
@@ -145,9 +57,8 @@ from project_fauna_spark.plans.window import GRADING_WINDOW  # noqa: E402
 # ITS registrations are absent in that interpreter.  Workers never
 # consume registry order; window completeness is driver-side and is
 # enforced by tests/test_window_manifest.py (first-50 == manifest).
-_present = [n for n in GRADING_WINDOW if n in QUERIES]
-_rest = {n: q for n, q in QUERIES.items() if n not in set(_present)}
-_front = {n: QUERIES[n] for n in _present}
+_front = {n: QUERIES[n] for n in GRADING_WINDOW if n in QUERIES}
+_rest = {n: QUERIES[n] for n in sorted(QUERIES) if n not in _front}
 QUERIES.clear()
 QUERIES.update(_front)
 QUERIES.update(_rest)

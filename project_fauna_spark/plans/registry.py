@@ -38,12 +38,11 @@ def register(
 ):
     """Decorator: add a named query (and optional DuckDB oracle SQL).
 
-    ``oracle_builder`` defers oracle construction until EVERY operator
-    module has registered (``resolve_deferred_oracles`` runs at the end
-    of ``plans/__init__``).  Use it when an oracle composes another
-    query's oracle text: registration order is the driver's grading
-    window and rotates between rounds, so "the other oracle is already
-    in ORACLE at my import time" is never a safe assumption.
+    ``oracle_builder`` defers oracle construction until every operator
+    module has registered (``resolve_deferred_oracles`` runs in
+    ``plans/__init__``).  Use it when an oracle composes another
+    query's oracle text.  Registration order carries no meaning:
+    ``plans/__init__`` reorders the registry after import.
     """
 
     def deco(fn: QueryFn) -> QueryFn:

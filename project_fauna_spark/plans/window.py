@@ -1,28 +1,11 @@
-"""The driver's grading window, as an explicit front-load list.
+"""The driver's grading window: the names it grades this round.
 
-The external driver grades the FIRST 50 entries of ``QUERIES`` each
-round.  Through round 9 that order was steered purely by module import
-order in ``plans/__init__`` — workable while windows were whole
-never-graded modules, but round-10+ windows are RE-grades whose names
-span ~30 modules (WINDOW_r10.draft.txt), where module moves would be
-churn for churn's sake.
-
-``GRADING_WINDOW`` is the sanctioned mechanism from round 9 on:
-``plans/__init__`` front-loads these names (in this order) to the head
-of the registry after all modules import; every other entry keeps its
-import-order position.  Rotating the window for a new round is a
-one-list edit here (plus WINDOW_rN.txt for the manifest pin in
-tests/test_window_manifest.py) — no module moves, no import-order
-surgery, and cross-oracle ``oracle_builder`` composition is untouched
-because it resolves before the reorder.
-
-Round-13 window: the fourth re-grade round — the 16 remaining r3-era
-grades plus 32 of the 45 r5-era names (dedup/sim/text families first
-per the CLAUDE.md risk ranking), plus the two round-11 additions
-(dq_psi_drift, sample_pps_systematic — the only registry names with
-no driver grade ever; VERDICT r11 item 3 seats them here, displacing
-the exact-typed scalar_url_fns + dq_props_key_profile to the r14
-pool).  Risk ranking in CLAUDE.md round-13 prep.
+The external driver grades the FIRST 50 entries of ``QUERIES``.
+``plans/__init__`` puts ``GRADING_WINDOW`` (in this order) at the head
+of the registry and every other name after it, sorted by name — this
+list is the only thing that sets registry order.  Rotating the window
+is a one-list edit here plus the ``WINDOW_MANIFEST`` file that
+tests/test_window_manifest.py pins it against.
 """
 
 # The checked-in manifest this list must equal (pinned by

@@ -40,7 +40,7 @@ from dataclasses import dataclass, field
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, types as T
 
 RETRYABLE_STATUSES = frozenset({500, 502, 503, 504})
 
@@ -192,14 +192,6 @@ def _safe_json(body: str, default: dict) -> dict:
         print("warning: non-JSON response; substituting empty value", file=sys.stderr)
         return default
 
-
-LISTING_ITEM_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType()),
-        T.StructField("name", T.StringType()),
-        T.StructField("born_at", T.LongType()),
-    ]
-)
 
 DETAIL_SCHEMA = T.StructType(
     [

@@ -387,10 +387,10 @@ def test_token_grams_differential_python(spark):
 
 
 def test_h32_matches_python_md5_fold(spark):
-    """extras3._h32 == int(md5_hex[:8], 16) computed in Python."""
+    """functions.wordhash.h32 == int(md5_hex[:8], 16) computed in Python."""
     import hashlib
 
-    from project_fauna_spark.operators.extras3 import _h32
+    from project_fauna_spark.functions.wordhash import h32 as _h32
 
     words = ["alpha", "beta gamma", "", "ümlaut", "x" * 100]
     df = spark.createDataFrame([(w,) for w in words], "w string")
@@ -412,7 +412,7 @@ def test_concurrency_gauge_covers_days_and_is_positive(spark):
 
 
 def test_distributed_cumsum_matches_window_spelling(spark):
-    from project_fauna_spark.operators.extras3 import _distributed_cumsum
+    from project_fauna_spark.operators.eventseries import _distributed_cumsum
 
     d = load_table(spark, SF, "events").select(
         "event_id", (F.when(F.col("event_id") % 2 == 0, 1).otherwise(-1)).alias("v")

@@ -8,14 +8,14 @@ from pyspark.sql import functions as F
 def test_drop_hot_shingles_removes_only_hot_hashes(spark):
     """A hash appearing in > MAX_SHINGLE_DF docs leaves the index; every
     other (doc_id, h) row survives untouched."""
-    from project_fauna_spark.operators.dedup import MAX_SHINGLE_DF, _drop_hot_shingles
+    from project_fauna_spark.functions.shingles import MAX_SHINGLE_DF, drop_hot_shingles
 
     hot_df = MAX_SHINGLE_DF + 5
     rows = [(i, 3, 999) for i in range(hot_df)]  # one hot hash: df = K+5
     rows += [(i, 3, 888) for i in range(MAX_SHINGLE_DF)]  # boundary: df = K stays
     rows += [(i, 3, 1000 + i) for i in range(50)]  # 50 rare hashes: df = 1
     ex = spark.createDataFrame(rows, "doc_id long, n int, h long")
-    kept = _drop_hot_shingles(ex).collect()
+    kept = drop_hot_shingles(ex).collect()
     assert all(r.h != 999 for r in kept)
     assert sum(1 for r in kept if r.h == 888) == MAX_SHINGLE_DF  # df == K kept
     assert sorted({r.h for r in kept} - {888}) == [1000 + i for i in range(50)]

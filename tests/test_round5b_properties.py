@@ -1,4 +1,4 @@
-"""Round-5 batch-2 (extras6) property and plan pins.
+"""Round-5 batch-2 property and plan pins.
 
 Each new operator gets an independent-reference or invariant check on
 top of the DuckDB parity gate: PQ distances recompute in Python, AUC
@@ -12,8 +12,8 @@ from __future__ import annotations
 import io
 from contextlib import redirect_stdout
 
-from project_fauna_spark.operators.extras6 import (
-    _CURRICULUM_BUDGET,
+from project_fauna_spark.operators.llm_pipeline import _CURRICULUM_BUDGET
+from project_fauna_spark.operators.similarity import (
     _pq_codeword,
     _pq_lut,
     _PQ_K,

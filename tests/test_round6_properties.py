@@ -1,4 +1,4 @@
-"""Round-6 operator invariants (extras7): IVFADC search, microbatch
+"""Round-6 operator invariants: IVFADC search, microbatch
 padding, conversion latency, deletion-vector audit, span-corruption
 plan, chi-square term selection.
 
@@ -97,7 +97,7 @@ def test_chi2_nonnegative_and_margins(spark):
             assert r["chi2"] >= -1e-12
 
 
-# ---- batch 2 (extras8) ----
+# ---- batch 2 ----
 
 
 def test_paragraph_dedup_bounds(spark):
@@ -155,7 +155,7 @@ def test_date_spine_coverage(spark):
         assert (r["first_gap_day"] is None) == (r["n_gap_days"] == 0)
 
 
-# ---- batch 3 (extras9) ----
+# ---- batch 3 ----
 
 
 def test_ndcg_in_unit_interval(spark):
@@ -213,7 +213,7 @@ def test_threshold_sweep_monotone(spark):
         assert r["n_docs_dropped"] <= r["n_pairs"] or r["n_pairs"] == 0
 
 
-# ---- batch 4 (extras10) ----
+# ---- batch 4 ----
 
 
 def test_active_learning_margin_selection(spark):
@@ -242,7 +242,7 @@ def test_microbatch_two_phase_invariant_under_subbucket_width(spark, monkeypatch
     tiny sub-bucket width (64 instead of 4096) the offset-join path is
     exercised hard at sf0.01 (many sub-buckets per length bucket), and
     the result must be IDENTICAL to the default spelling."""
-    import project_fauna_spark.operators.extras7 as x7
+    import project_fauna_spark.operators.llm_pipeline as x7
 
     base = sorted(
         tuple(r) for r in QUERIES["llm_microbatch_padding"](spark, SF).collect()
@@ -254,7 +254,7 @@ def test_microbatch_two_phase_invariant_under_subbucket_width(spark, monkeypatch
     assert base == small
 
 
-# ---- batch 5 (extras11) ----
+# ---- batch 5 ----
 
 
 def test_cusum_changepoint_invariants(spark):
@@ -290,7 +290,7 @@ def test_weighted_median_is_weight_crossing(spark):
                 break
 
 
-# ---- batch 6 (extras12) ----
+# ---- batch 6 ----
 
 
 def test_bloom_prefilter_accounting(spark):
@@ -307,7 +307,7 @@ def test_bloom_prefilter_accounting(spark):
         assert 0.0 <= r["fp_rate"] <= 1.0
 
 
-# ---- batch 7 (extras13) ----
+# ---- batch 7 ----
 
 
 def test_session_error_overlap_bounds(spark):
@@ -339,7 +339,7 @@ def test_decayed_leaderboard_ranking(spark):
             assert 0.0 < r["decayed_score"] <= r["raw_count"]
 
 
-# ---- batch 8 (extras14) ----
+# ---- batch 8 ----
 
 
 def test_dedup_mixture_shift_conserves(spark):
@@ -367,7 +367,7 @@ def test_conversion_window_sweep_monotone(spark):
         assert abs(r["conversion_rate"] - r["n_converted"] / r["n_viewers"]) < 1e-15
 
 
-# ---- batch 9 (extras15) ----
+# ---- batch 9 ----
 
 
 def test_pmi_collocations_consistency(spark):
@@ -435,7 +435,7 @@ def test_winsorized_trimmed_mean_bounds(spark):
     assert n_above <= n - (19 * n) // 20
 
 
-# ---- batch 10 (extras16) ----
+# ---- batch 10 ----
 
 
 def test_acf_daily_range_and_lag1_sanity(spark):
@@ -492,7 +492,7 @@ def test_leakage_audit_consistency(spark):
     assert r["n_leaky"] == direct
 
 
-# ---- batch 11 (extras17) ----
+# ---- batch 11 ----
 
 
 def test_km_survival_monotone_and_exact(spark):
@@ -538,7 +538,7 @@ def test_ks_two_sample_bounds(spark):
     assert abs(abs(c1 / r["n_r"] - c0 / r["n_a"]) - r["ks_stat"]) < 1e-12
 
 
-# ---- batch 12 (extras18) ----
+# ---- batch 12 ----
 
 
 def test_crosscorr_bounds_and_brute_force(spark):
@@ -656,7 +656,7 @@ def test_weekday_profile_exact_replay(spark):
         assert abs(r["seasonal_index"] - (ne[k] / nd[k]) / (te / td)) < 1e-15
 
 
-# ---- batch 13 (extras19) ----
+# ---- batch 13 ----
 
 
 def test_reorder_gap_direct_replay(spark):
@@ -747,7 +747,7 @@ def test_backlog_aging_partition(spark):
         assert r["open_value"] > 0.0
 
 
-# ---- batch 14 (extras20) ----
+# ---- batch 14 ----
 
 
 def test_silhouette_bounds_and_python_replay(spark):
@@ -841,7 +841,7 @@ def test_lead_time_totals_and_order(spark):
         assert r["min_lead_days"] <= r["avg_lead_days"] <= r["max_lead_days"]
 
 
-# ---- batch 15 (extras21) ----
+# ---- batch 15 ----
 
 
 def test_heaps_diagnostic_replay(spark):
@@ -920,7 +920,7 @@ def test_seasonal_anomaly_replay(spark):
         assert r["n"] == daily[r["day"]]
 
 
-# ---- batch 16 (extras22) ----
+# ---- batch 16 ----
 
 
 def test_substitution_candidates_valid(spark):
@@ -972,7 +972,7 @@ def test_join_fanout_profile_totals(spark):
         assert r["fanout"] >= 0
 
 
-# ---- batch 17 (extras23) ----
+# ---- batch 17 ----
 
 
 def test_trade_balance_square_up(spark):
@@ -1010,7 +1010,7 @@ def test_dow_hour_heatmap_grid(spark):
         assert r["n_events"] > 0
 
 
-# ---- batch 18 (extras24) ----
+# ---- batch 18 ----
 
 
 def test_dedup_token_savings_consistency(spark):
@@ -1086,7 +1086,7 @@ def test_event_order_audit_replay(spark):
         assert abs(r["late_frac"] - late[typ] / n[typ]) < 1e-15
 
 
-# ---- batch 19 (extras25) ----
+# ---- batch 19 ----
 
 
 def test_bot_audit_replay(spark):
@@ -1138,7 +1138,7 @@ def test_wilson_ci_brackets_rate(spark):
         assert abs(r["ci_high"] - (p + z * z / (2 * n) + half) / denom) < 1e-12
 
 
-# ---- batch 20 (extras26) ----
+# ---- batch 20 ----
 
 
 def test_markov_eval_replay(spark):
@@ -1225,7 +1225,7 @@ def test_band_migration_stochastic_matrix(spark):
     assert total == expect
 
 
-# ---- batch 21 (extras27) ----
+# ---- batch 21 ----
 
 
 def test_hhi_bounds_and_replay(spark):
@@ -1274,7 +1274,7 @@ def test_malformed_csv_audit_expected(spark):
     assert abs(r["corrupt_frac"] - 6 / 46) < 1e-15
 
 
-# ---- batch 22 (extras28) ----
+# ---- batch 22 ----
 
 
 def test_family_size_histogram_totals(spark):
@@ -1330,7 +1330,7 @@ def test_weekly_trend_slopes_replay(spark):
     assert set(got) <= set(weeks)
 
 
-# ---- batch 23 (extras29) ----
+# ---- batch 23 ----
 
 
 def test_audience_overlap_sets(spark):
@@ -1393,7 +1393,7 @@ def test_phash_dedup_matches_reference(spark):
         assert r["min_doc_id"] == mins[h]
 
 
-# ---- batch 24 (extras30) ----
+# ---- batch 24 ----
 
 
 def test_max_drawdown_replay(spark):
@@ -1451,7 +1451,7 @@ def test_discount_demand_curve_replay(spark):
         assert r["revenue"] > 0.0
 
 
-# ---- batch 25 (extras31) ----
+# ---- batch 25 ----
 
 
 def test_kcore_peel_replay(spark):
@@ -1518,7 +1518,7 @@ def test_winnowing_matches_reference(spark):
         assert r["n_shared"] <= r["n_fingerprints"] <= max(r["n_kgrams"] - 3, 0)
 
 
-# ---- batch 26 (extras32) ----
+# ---- batch 26 ----
 
 
 def test_tvd_language_drift_replay(spark):
@@ -1553,7 +1553,7 @@ def test_ratio_paradox_consistency(spark):
         assert r["n_lines"] > 0
 
 
-# ---- batch 27 (extras33) ----
+# ---- batch 27 ----
 
 
 def test_kmv_estimate_replay(spark):
@@ -1604,7 +1604,7 @@ def test_systematic_sample_spacing(spark):
     assert {r["sample_rank"]: r["o_orderkey"] for r in rows} == expect
 
 
-# ---- batch 28 (extras34) ----
+# ---- batch 28 ----
 
 
 def test_growth_accounting_conservation(spark):
@@ -1674,7 +1674,7 @@ def test_sequence_gap_audit_replay(spark):
     assert r["largest_gap_start"] == min(a for g, a in gaps if g == r["largest_gap"])
 
 
-# ---- batch 29 (extras35) ----
+# ---- batch 29 ----
 
 
 def test_fixed_width_roundtrip_exact(spark):
@@ -1728,7 +1728,7 @@ def test_velocity_burst_replay(spark):
         assert r["peak_burst"] <= r["n_events"]
 
 
-# ---- batch 30 (extras36) ----
+# ---- batch 30 ----
 
 
 def test_first_order_ltv_corr_replay(spark):
@@ -1795,7 +1795,7 @@ def test_langid_confusion_consistent(spark):
         assert abs(total - 1.0) < 1e-12, lang
 
 
-# ---- batch 31 (extras37) ----
+# ---- batch 31 ----
 
 
 def test_rank_agreement_tau_bounds(spark):
@@ -1830,7 +1830,7 @@ def test_reciprocity_replay(spark):
         assert r["reciprocity"] == len(rec) / len(out)
 
 
-# ---- batch 32 (extras38) ----
+# ---- batch 32 ----
 
 
 def test_hard_negative_mining_replay(spark):
@@ -1878,7 +1878,7 @@ def test_embedding_norm_audit_bounds(spark):
         assert r["min_norm"] - 1e-6 <= r["mean_norm"] <= r["max_norm"] + 1e-6
 
 
-# ---- batch 33 (extras39) ----
+# ---- batch 33 ----
 
 
 def test_mix_shift_tvd_replay(spark):
@@ -1932,7 +1932,7 @@ def test_stream_gap_audit_replay(spark):
     )
 
 
-# ---- batch 34 (extras40) ----
+# ---- batch 34 ----
 
 
 def test_theil_sen_replay(spark):
@@ -1988,7 +1988,7 @@ def test_unit_price_dispersion_replay(spark):
         assert r["dispersion_ratio"] == ratio >= 1.0
 
 
-# ---- batch 35 (extras41) ----
+# ---- batch 35 ----
 
 
 def test_signal_features_replay(spark):
@@ -2032,7 +2032,7 @@ def test_grouped_agg_median_replay(spark):
         assert r["median_event_id"] == v[(len(v) - 1) // 2]  # lower median
 
 
-# ---- batch 36 (extras42) ----
+# ---- batch 36 ----
 
 
 def test_time_decay_attribution_conserves_credit(spark):
@@ -2099,7 +2099,7 @@ def test_snapshot_diff_replay(spark):
     assert r["n_keys_t2"] == r["n_keys_t1"] + r["n_added"]
 
 
-# ---- batch 37 (extras43) ----
+# ---- batch 37 ----
 
 
 def test_fim_split_plan_replay(spark):
@@ -2156,7 +2156,7 @@ def test_streak_histogram_replay(spark):
     assert sum(r["n_users"] for r in rows) == len(days)
 
 
-# ---- batch 38 (extras44) ----
+# ---- batch 38 ----
 
 
 def test_token_apportion_exact(spark):
@@ -2221,7 +2221,7 @@ def test_assortativity_replay(spark):
         assert r["assortativity"] is None
 
 
-# ---- batch 39 (extras45) ----
+# ---- batch 39 ----
 
 
 def test_price_volume_mix_bridges_exactly(spark):
@@ -2266,7 +2266,7 @@ def test_effective_categories_replay(spark):
         assert 1.0 <= r["effective_n"] <= r["n_distinct"] + 1e-9
 
 
-# ---- batch 40 (extras46) ----
+# ---- batch 40 ----
 
 
 def test_vocab_coverage_replay(spark):
@@ -2332,7 +2332,7 @@ def test_period_scan_replay(spark):
     assert [r["period"] for r in rows if r["is_best"]] == [best]
 
 
-# ---- batch 41 (extras47) ----
+# ---- batch 41 ----
 
 
 def test_corr_matrix_replay(spark):
@@ -2402,7 +2402,7 @@ def test_centroid_drift_replay(spark):
         assert -1.0 <= r["drift_cos"] <= 1.0 + 1e-12
 
 
-# ---- batch 42 (extras48) ----
+# ---- batch 42 ----
 
 
 def test_boilerplate_ngrams_replay(spark):
@@ -2457,7 +2457,7 @@ def test_byte_uniformity_replay(spark):
         assert r["chi2_uniform"] >= 0.0
 
 
-# ---- batch 43 (extras49) ----
+# ---- batch 43 ----
 
 
 def test_hapax_rate_replay(spark):
@@ -2496,7 +2496,7 @@ def test_component_histogram_consistent(spark):
         assert r["n_docs"] == r["component_size"] * r["n_components"]
 
 
-# ---- batch 44 (extras50) ----
+# ---- batch 44 ----
 
 
 def test_group_aware_split_no_leakage(spark):
@@ -2542,7 +2542,7 @@ def test_brand_return_rate_bounds(spark):
         assert r["return_rate"] - 1e-12 <= r["ci_high"] <= 1.0 + 1e-9
 
 
-# ---- batch 45 (extras51) ----
+# ---- batch 45 ----
 
 
 def test_sample_accuracy_replay(spark):
@@ -2597,7 +2597,7 @@ def test_habit_hour_replay(spark):
         assert 0.0 < r["mean_concentration"] <= 1.0
 
 
-# ---- batch 46 (extras52) ----
+# ---- batch 46 ----
 
 
 def test_growth_contribution_closes(spark):

@@ -1,13 +1,12 @@
 """Rotation guard: the driver grades the first 50 registry entries.
 
-The round-9 window composition is pinned against the checked-in
-``WINDOW_r9.txt`` manifest so an accidental import-order edit in
-``plans/__init__.py`` (or a registration added to a pre-window module
-mid-round) fails the suite instead of silently re-grading old queries
-or perturbing the window the driver sees.
+``plans/window.GRADING_WINDOW`` sets them; it is pinned against the
+checked-in manifest it names (``WINDOW_MANIFEST``) so an accidental
+edit to the window or to ``plans/__init__.py`` fails the suite instead
+of silently changing what the driver grades.
 
-At each round START the rotation is performed deliberately: rewrite the
-manifest together with ``plans/__init__.py`` in the same commit.
+At each round start the rotation is deliberate: rewrite the manifest
+together with ``plans/window.py`` in the same commit.
 """
 
 from pathlib import Path
@@ -81,59 +80,3 @@ def test_operator_module_direct_import_is_worker_safe():
     )
     assert r.returncode == 0, f"synthetic-window worker import: {r.stderr[-2000:]}"
 
-
-def test_no_module_level_cross_operator_imports():
-    """A module-level import of another REGISTERING operator module
-    executes that module's @register calls at the importer's position
-    in plans/__init__.py — silently perturbing the grading window (the
-    round-4 lesson, re-hit by clustering.py importing llm_extras at the
-    round-7 rotation).  Shared SQL belongs in operators/_oracle_shared,
-    shared Spark helpers in functions/; cross-operator query reuse is a
-    lazy import inside the function body."""
-    import ast
-
-    ops = REPO / "project_fauna_spark" / "operators"
-    nonregistering = {"_oracle_shared"}
-    offenders = []
-
-    def module_level_imports(node):
-        """Imports that EXECUTE at import time: everything except
-        function/lambda bodies (try/except, if-blocks, with-blocks at
-        module level all run on import and must be caught too)."""
-        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
-            return
-        if isinstance(node, (ast.Import, ast.ImportFrom)):
-            yield node
-        for child in ast.iter_child_nodes(node):
-            yield from module_level_imports(child)
-
-    for f in sorted(ops.glob("*.py")):
-        mod = f.stem
-        for node in module_level_imports(ast.parse(f.read_text())):
-            if isinstance(node, ast.ImportFrom):
-                if node.level > 0:
-                    # Relative import: `from .extras3 import x` names the
-                    # sibling in module; `from . import extras3` (and
-                    # `from ..operators import extras3`) in names.  Any
-                    # shape executes the sibling's @register calls at the
-                    # importer's registry position (ADVICE r7).
-                    candidates = [a.name for a in node.names]
-                    if node.module:
-                        candidates.append(node.module.split(".")[0])
-                    for leaf in candidates:
-                        if (
-                            leaf not in nonregistering
-                            and leaf != mod
-                            and (ops / f"{leaf}.py").exists()
-                        ):
-                            offenders.append(f"{mod} -> {leaf} (relative)")
-                    continue
-                targets = [node.module] if node.module else []
-            else:
-                targets = [a.name for a in node.names]
-            for t in targets:
-                if t.startswith("project_fauna_spark.operators."):
-                    leaf = t.split(".")[-1]
-                    if leaf not in nonregistering and leaf != mod:
-                        offenders.append(f"{mod} -> {leaf}")
-    assert offenders == [], offenders

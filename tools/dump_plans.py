@@ -1,10 +1,10 @@
 #!/usr/bin/env python3
-"""Dump .explain('formatted') for every headline query to plans/r12/.
+"""Dump .explain('formatted') for every headline query.
 
-Usage: python tools/dump_plans.py <suffix> [name ...]
+Usage: python tools/dump_plans.py OUT_DIR [suffix] [name ...]
 
-Writes plans/r12/<query>_<suffix>.txt for each headline query (or the
-subset given).  The explain output is the INITIAL plan (AQE shows
+Writes OUT_DIR/<query>_<suffix>.txt (suffix defaults to ``before``)
+for each headline query (or the subset given).  The explain output is the INITIAL plan (AQE shows
 ``isFinalPlan=false``) — what the optimizer chose before runtime
 re-planning; Exchange counts, join strategies, PushedFilters and
 Python-eval nodes are all visible at this stage.
@@ -29,11 +29,6 @@ from project_fauna_spark.plans import QUERIES
 from bench import HEADLINE
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-OUT_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "plans",
-    os.environ.get("FAUNA_PLANS_ROUND", "r12"),
-)
 
 
 def summarize(text: str) -> str:
@@ -62,9 +57,12 @@ def summarize(text: str) -> str:
 
 
 def main() -> None:
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or HEADLINE
-    os.makedirs(OUT_DIR, exist_ok=True)
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    out_dir = sys.argv[1]
+    suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
+    names = sys.argv[3:] or HEADLINE
+    os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(app_name="fauna-dump-plans")
     for name in names:
         if name not in QUERIES:
@@ -79,7 +77,7 @@ def main() -> None:
             text = f"PLAN FAILED: {exc}\n"
         finally:
             release_cached()
-        path = os.path.join(OUT_DIR, f"{name}_{suffix}.txt")
+        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(text)
         print(f"{name}: {summarize(text)}", flush=True)
