@@ -63,7 +63,7 @@ def split_friends(col: Column | str) -> Column:
     which ``trim`` does not (round-2 differential falsifier: ``"\\xa0"``).
     """
     c = F.coalesce(F.col(col) if isinstance(col, str) else col, F.lit(""))
-    tokens = F.transform(F.split(c, ","), lambda x: F.regexp_replace(x, PY_STRIP_REGEX, ""))
+    tokens = F.transform(F.split(c, ","), py_strip)
     return F.filter(tokens, lambda x: x != F.lit(""))
 
 

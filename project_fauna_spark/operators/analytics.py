@@ -569,8 +569,6 @@ def q_yearly_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     finance report shape (the window runs on a handful of rows, never
     on raw orders).
     """
-    from pyspark.sql import Window as W
-
     o = load_table(spark, sf_dir, "orders")
     y = o.groupBy(F.year("o_orderdate").alias("year")).agg(
         F.sum(F.col("o_totalprice").cast("decimal(30,8)")).cast("double").alias("revenue"),

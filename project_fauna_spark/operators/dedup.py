@@ -1021,7 +1021,6 @@ def dedup_cross_modal_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer ratio, the cosine an index-ordered fold — both exact.
     """
     from project_fauna_spark.functions.shingles import word_bigrams
-    from project_fauna_spark.functions.vectors import cosine_sim
 
     d = load_table(spark, sf_dir, "documents")
     bg = d.select(
@@ -1243,8 +1242,6 @@ def dedup_minhash_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the band-collision index.  Three scalar counts cross-joined into
     one row — output size is constant at any corpus scale.
     """
-    from project_fauna_spark.cache import cached
-
     # Both pair frames are consumed TWICE (their scalar count + the
     # intersection join): persist the tiny id-pair outputs so each
     # full dedup pipeline executes once, not per-consumer (r12; the
@@ -1305,11 +1302,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.storagelevel import StorageLevel
 
-    from project_fauna_spark.functions.shingles import (
-        drop_hot_shingles as _drop_hot,
-        shingle_hashes,
-        shingles,
-    )
+    from project_fauna_spark.functions.shingles import drop_hot_shingles as _drop_hot
 
     d = load_table(spark, sf_dir, "documents")
     hashed = d.select("doc_id", shingle_hashes(F.col("text")).alias("hsgl"))

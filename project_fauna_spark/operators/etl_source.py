@@ -2,7 +2,7 @@
 
 Each query materializes a deterministic fake-API fixture under /tmp
 from the ``customer`` table, then drives the REAL distributed HTTP
-source/sink machinery (mapInPandas fetch, retry transport, chunked
+source/sink machinery (mapInArrow fetch, retry transport, chunked
 POST) against it.  The oracle reproduces the expected output straight
 from ``customer`` — so the driver's correctness gate covers the
 paginated scan, the point-get fetch, the reference transform, and the
@@ -25,7 +25,7 @@ from project_fauna_spark.sinks.batch_post import post_batches_globally_indexed
 from project_fauna_spark.sources.http import (
     FileBackedTransport,
     RetryPolicy,
-    fetch_details_df,
+    fetch_listed_details_df,
     paginated_ids_df,
 )
 
@@ -113,7 +113,7 @@ def etl_paginated_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1: distributed paginated listing scan → id enumeration.
 
     Driver probes page 1; executors fetch the remaining pages via
-    mapInPandas with the retry transport.
+    mapInArrow with the retry transport.
     """
     root = _fixture_dir(spark, sf_dir)
     return paginated_ids_df(spark, lambda: FileBackedTransport(root), policy=FAST)
@@ -135,11 +135,11 @@ def etl_paginated_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def etl_fetch_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S2 + transform: point-get details on executors, then the full
-    reference transform (T1 split, T2 epoch normalize, P1-P5)."""
+    """S1 + S2 + transform: each executor task lists its pages and
+    point-gets the ids on them, then the full reference transform (T1
+    split, T2 epoch normalize, P1-P5)."""
     root = _fixture_dir(spark, sf_dir)
-    ids = etl_paginated_scan(spark, sf_dir)
-    details = fetch_details_df(ids, lambda: FileBackedTransport(root), policy=FAST)
+    details = fetch_listed_details_df(spark, lambda: FileBackedTransport(root), policy=FAST)
     out = transform_details(details, AS_OF)
     return out.select(
         "id",

@@ -1643,7 +1643,6 @@ def event_conversion_window_sweep(spark: SparkSession, sf_dir: str) -> DataFrame
     count.
     """
     e = load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
-    from project_fauna_spark.cache import cached
 
     # fv feeds the purchase join, the latency table, and the viewer
     # count — persist so the events scan+aggregate runs once.

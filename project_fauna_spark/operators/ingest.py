@@ -203,9 +203,6 @@ def ingest_partitioned_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions' files — pair with a repartition(lang) upstream when
     low-cardinality output files matter).
     """
-    import os
-    import tempfile
-
     # Path is keyed by (sf_dir, Spark application id): two concurrent
     # sessions on the same testdata (pytest + foreign-session sweep)
     # must never overwrite a directory the other is mid-read (ADVICE

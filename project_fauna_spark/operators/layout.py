@@ -195,8 +195,6 @@ def sketch_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12: pin the 20-row exact top-k — the 4 per-row probe projections
     # below each referenced it, so the unpinned spelling ran the full
     # exact groupBy + top-20 over events FOUR times (guide §5).
-    from project_fauna_spark.cache import cached
-
     exact = cached(
         ev.groupBy("k")
         .agg(F.count(F.lit(1)).alias("exact_n"))
@@ -455,8 +453,6 @@ def layout_zone_map_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB zone maps live in table-format metadata and this query
     is the planner's pruning estimate, one row per (predicate, layout).
     """
-    from project_fauna_spark.cache import cached
-
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     # r12: pin the two per-file zone-map frames — each feeds BOTH its
     # scan-count join and its file-count scalar, so the unpinned

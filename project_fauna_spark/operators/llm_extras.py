@@ -779,7 +779,7 @@ def llm_bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _calibration_oracle() -> str:
-    from project_fauna_spark.plans.registry import ORACLE, sql_davg
+    from project_fauna_spark.plans.registry import ORACLE
 
     cls_sql = ORACLE["llm_quality_classifier"]
     return f"""

@@ -513,8 +513,6 @@ def llm_e2e_dataset_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # token_share divides the identical values (the llm_ccnet_buckets
     # totals-from-the-aggregate identity).  The manifest is pinned
     # (|langs| rows) because the total now derives from it.
-    from project_fauna_spark.cache import cached
-
     manifest = cached(
         clean.groupBy("lang").agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -623,8 +621,6 @@ def llm_contamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     training grams; the per-doc overlap count is map-combinable.  The
     score is one double division of two exact integers.
     """
-    from project_fauna_spark.cache import cached
-
     # The shingled frame feeds THREE branches (eval grams, the exploded
     # train side, the per-doc sizes) — recompute costs 3 scans + 3
     # shingle passes; persisting is a measured 6× win at sf0.1

@@ -499,7 +499,6 @@ def mm_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import struct
 
     import numpy as np
-    import pandas as pd
 
     p = (
         _payloads(spark, sf_dir)

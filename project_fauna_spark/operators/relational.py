@@ -1567,7 +1567,6 @@ def agg_approx_percentile_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_extendedprice", "l_orderkey", "l_linenumber"
     )
     local = bucketed.withColumn("local_rn", F.row_number().over(w_local))
-    from project_fauna_spark.functions.ranks import bucket_offsets
 
     offsets = bucket_offsets(
         bucketed, ["l_returnflag"], "bucket", F.lit(1), total_alias="nn"
@@ -1678,7 +1677,6 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_extendedprice", "l_orderkey", "l_linenumber"
     ).rowsBetween(W.unboundedPreceding, W.currentRow)
     local = bucketed.withColumn("local_w", F.sum("w").over(w_local))
-    from project_fauna_spark.functions.ranks import bucket_offsets
 
     offsets = bucket_offsets(
         bucketed, ["l_returnflag"], "bkt", F.col("w"), total_alias="total_w"
@@ -1787,8 +1785,6 @@ def join_bloom_semi_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def pos(col: Column, i: int) -> Column:
         return _h32(col.cast("string"), f"bloom{i}:") % _BLOOM_M
-
-    from project_fauna_spark.cache import cached
 
     cust = load_table(spark, sf_dir, "customer")
     # s feeds the bloom build, the exact semi-join, and the FP audit;

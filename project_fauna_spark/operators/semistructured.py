@@ -171,8 +171,6 @@ def semi_mode_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mode with a deterministic tiebreak (count desc, then key) —
     the reproducible spelling of ``mode()``; built-in mode() breaks
     ties engine-specifically."""
-    from pyspark.sql import Window as W
-
     e = load_table(spark, sf_dir, "events")
     counts = e.groupBy("event_type", "user_id").agg(F.count("*").alias("n"))
     w = W.partitionBy("event_type").orderBy(F.col("n").desc(), "user_id")

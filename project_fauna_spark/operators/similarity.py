@@ -727,7 +727,7 @@ def _ann_recall_oracle() -> str:
     """
 
 
-@register("sim_ann_recall_audit", oracle=_ann_recall_oracle())
+@register("sim_ann_recall_audit", oracle_builder=_ann_recall_oracle)
 def sim_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN quality evaluation: recall@5 of the IVF index
     (``sim_ann_ivf``, nprobe=2) against exact brute-force top-5 for
@@ -740,7 +740,6 @@ def sim_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-query recall are integer counts and one per-row division —
     recall is exact, so the driver hash-matches it.
     """
-    from project_fauna_spark.functions.vectors import cosine_sim
     from project_fauna_spark.operators.llm_extras import sim_ann_ivf
 
     e = load_table(spark, sf_dir, "embeddings").select(
@@ -1635,7 +1634,6 @@ def sim_centroid_drift_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", "label", "embedding"
         )
     )
-    from project_fauna_spark.functions.vectors import cosine_sim
 
     a = label_centroids(e.filter(F.col("vec_id") % 2 == 0), _FOLD_K).select(
         "label", F.col("n").alias("n_even"), F.col("centroid").alias("c_a")

@@ -104,8 +104,6 @@ def ts_ewma_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one exchange on user_id + sort; frame state is bounded at
     16 rows, so window memory is O(1) per row at any corpus size.
     """
-    from pyspark.sql import Window as W
-
     weights = F.array(*[F.lit(1.0 / (1 << k)) for k in range(16)])
     wspec = W.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(-15, 0)
     e = load_table(spark, sf_dir, "events").select(
@@ -186,8 +184,6 @@ def window_moving_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines.
 
     Scale: one exchange on l_suppkey; frame state is 16 rows."""
-    from pyspark.sql import Window as W
-
     l = load_table(spark, sf_dir, "lineitem")
     w = (
         W.partitionBy("l_suppkey")

@@ -998,8 +998,6 @@ def q_abc_pareto_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Σ_pid Σ_partition dec_rev == Σ dec_rev bit-for-bit, and the
     # window only appends _lcs (per-_pid sums are unchanged).  The
     # _distributed_cumsum / _grouped_ntile sibling fix, guide §5.
-    from project_fauna_spark.cache import cached
-
     ranged = rev.repartitionByRange(
         F.col("dec_rev").desc(), F.col("l_partkey")
     ).withColumn("_pid", F.spark_partition_id())

@@ -5,11 +5,14 @@ fetch details → transform → batch-post, with hard barriers and full
 driver-memory materialization between stages.  Here the stages are
 plan nodes and the driver never holds the data.  The plan's shape:
 
-* the listing pages and the listed ids are spread over executors by
-  two round-robin repartitions, so pages and detail GETs fan out;
+* one round-robin repartition spreads the listing pages over
+  executors, and one ``mapInArrow`` task per partition GETs its pages
+  and then the details of the ids on them, so listing and detail GETs
+  fan out with no shuffle between them;
 * the sink's global row numbering shuffles by id bucket (plus a tiny
   broadcast table of bucket offsets), and its posting shuffles by
-  batch id so each task posts whole batches;
+  batch id so each task posts whole batches, serialized to JSON by
+  the JVM;
 * one pin (``cache.cached``) holds the transformed records, because
   the sink reads them twice — for the bucket row numbers and for the
   bucket counts.  The pin is what makes the fetch exactly-once: each
@@ -29,8 +32,7 @@ from project_fauna_spark.sinks.batch_post import post_batches_globally_indexed
 from project_fauna_spark.sources.http import (
     RetryPolicy,
     TransportFactory,
-    fetch_details_df,
-    paginated_ids_df,
+    fetch_listed_details_df,
 )
 
 
@@ -106,8 +108,9 @@ def run_pipeline(
     frees the pin with ``cache.release_cached()`` once the receipts
     are consumed.
     """
-    ids = paginated_ids_df(spark, transport_factory, partitions=partitions, policy=policy)
-    details = fetch_details_df(ids, transport_factory, partitions=partitions, policy=policy)
+    details = fetch_listed_details_df(
+        spark, transport_factory, partitions=partitions, policy=policy
+    )
     transformed = transform_details(details, as_of)
     # Serialize arrays for the JSON sink the way the reference does.
     serializable = transformed.withColumn("friends", F.to_json("friends"))

@@ -29,6 +29,9 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
 _DEFERRED_ORACLES: dict[str, Callable[[], str]] = {}
+# Set once ``plans/__init__`` has imported every operator module; from
+# then on each registration retries the oracles still deferred.
+_RESOLVE_ON_REGISTER = False
 
 
 def register(
@@ -53,16 +56,32 @@ def register(
             ORACLE[name] = oracle
         if oracle_builder is not None:
             _DEFERRED_ORACLES[name] = oracle_builder
+        if _RESOLVE_ON_REGISTER and _DEFERRED_ORACLES:
+            resolve_deferred_oracles()
         return fn
 
     return deco
 
 
 def resolve_deferred_oracles() -> None:
-    """Materialize oracle_builder oracles (called once, post-import)."""
-    for name, build in _DEFERRED_ORACLES.items():
-        ORACLE[name] = build()
-    _DEFERRED_ORACLES.clear()
+    """Build every deferred oracle whose input oracles are registered.
+
+    ``plans/__init__`` calls this once it has imported every operator
+    module.  A builder whose inputs do not exist yet (an ``ORACLE``
+    entry, or a function of a module still importing) stays deferred:
+    importing one operator module on its own re-enters
+    ``plans/__init__`` while that module is still importing, so its
+    entries register only afterwards, and each of those registrations
+    retries what is left.
+    """
+    global _RESOLVE_ON_REGISTER
+    _RESOLVE_ON_REGISTER = True
+    for name, build in list(_DEFERRED_ORACLES.items()):
+        try:
+            ORACLE[name] = build()
+        except (KeyError, NameError):
+            continue
+        del _DEFERRED_ORACLES[name]
 
 
 def dsum(col: Column, precision: int = 30, scale: int = 8) -> Column:

@@ -7,19 +7,20 @@ the batch size; X1/X2 reliability via
 :func:`project_fauna_spark.sources.http.request_with_retry`.
 
 Spark rendering: a ``batch_id`` shuffle hands each partition whole
-batches, which it posts through ``mapInPandas`` in parallel, emitting
+batches, which it posts through ``mapInArrow`` in parallel, emitting
 a receipt row per batch — the driver never materializes the data
 (the reference's sequential driver-side loop, pipeline.py:96-99,
-becomes N-way parallel).  Null-vs-omitted T6: JSON bodies drop null
-fields, matching pipeline.py:78-79.
+becomes N-way parallel).  The JVM serializes each record with
+``to_json``, so the Python side only joins strings into bodies.
+Null-vs-omitted T6: ``to_json`` drops null fields, matching
+pipeline.py:78-79.
 """
 
 from __future__ import annotations
 
-import json
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 
@@ -28,20 +29,15 @@ from project_fauna_spark.functions.reference import clamp_batch_size
 from project_fauna_spark.sources.http import (
     RetryPolicy,
     TransportFactory,
+    arrow_batch,
     request_with_retry,
     transport_takes_headers,
 )
 
 RECEIPT_SCHEMA = "batch_index long, n_records long, status long"
-
-
-def _receipts_frame(receipts: list[tuple[int, int, int]]) -> pd.DataFrame:
-    return pd.DataFrame(receipts, columns=["batch_index", "n_records", "status"]).astype("int64")
-
-
-def _record(rec: dict) -> dict:
-    """T6: null fields are omitted, not serialized as null."""
-    return {k: v for k, v in rec.items() if not pd.isna(v)}
+_RECEIPT_ARROW = pa.schema(
+    [("batch_index", pa.int64()), ("n_records", pa.int64()), ("status", pa.int64())]
+)
 
 
 def post_batches_globally_indexed(
@@ -95,31 +91,36 @@ def post_batches_globally_indexed(
         .drop("__bkt", "__local_rn", "__offset")
     )
 
-    def post_partition(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def post_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         transport = transport_factory()
         hdrs = transport_takes_headers(transport)
-        receipts: list[tuple[int, int, int]] = []
+        receipts: dict[str, list[int]] = {name: [] for name in _RECEIPT_ARROW.names}
         batch_id, recs = -1, []
 
         def post() -> None:
-            body = json.dumps(recs, default=str)
+            body = "[" + ",".join(recs) + "]"
             status, _ = request_with_retry(transport, "POST", body, policy, takes_headers=hdrs)
-            receipts.append((batch_id, len(recs), status))
+            receipts["batch_index"].append(batch_id)
+            receipts["n_records"].append(len(recs))
+            receipts["status"].append(status)
 
-        for pdf in frames:
-            records = pdf[data_cols].to_dict(orient="records")
-            for bid, rec in zip(pdf["__batch_id"].tolist(), records):
+        for batch in batches:
+            bids, docs = batch.column(0).to_pylist(), batch.column(1).to_pylist()
+            for bid, doc in zip(bids, docs):
                 if bid != batch_id:
                     if recs:
                         post()
                     batch_id, recs = bid, []
-                recs.append(_record(rec))
+                recs.append(doc)
         if recs:
             post()
-        yield _receipts_frame(receipts)
+        yield arrow_batch(_RECEIPT_ARROW, receipts)
 
+    # T6: ``ignoreNullFields`` leaves null fields out of each record.
+    record = F.to_json(F.struct(*data_cols), {"ignoreNullFields": "true"})
     return (
         keyed.repartition("__batch_id")
         .sortWithinPartitions("__batch_id", "__rn")
-        .mapInPandas(post_partition, schema=RECEIPT_SCHEMA)
+        .select("__batch_id", record.alias("__json"))
+        .mapInArrow(post_partition, schema=RECEIPT_SCHEMA)
     )

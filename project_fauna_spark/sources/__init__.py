@@ -1,5 +1,5 @@
 """Source substrate: paginated HTTP scan + point-get detail fetch
-(reference operators S1/S2/S4), distributed via mapInPandas."""
+(reference operators S1/S2/S4), distributed via mapInArrow."""
 
 from project_fauna_spark.sources.http import (
     FileBackedTransport,
@@ -8,6 +8,7 @@ from project_fauna_spark.sources.http import (
     RetryPolicy,
     ValidationHttpError,
     fetch_details_df,
+    fetch_listed_details_df,
     paginated_ids_df,
     request_with_retry,
 )
@@ -19,6 +20,7 @@ __all__ = [
     "RetryPolicy",
     "ValidationHttpError",
     "fetch_details_df",
+    "fetch_listed_details_df",
     "paginated_ids_df",
     "request_with_retry",
 ]

@@ -6,12 +6,14 @@ Reference parity (citations into /root/reference/):
 * Paginated listing scan S1 — pipeline.py:8-29: read page 1 for
   ``total_pages``, fetch remaining pages concurrently, project
   ``items[].id``.  Here: driver probes page 1 (one request), then
-  ``spark.range(1, total_pages+1)`` fans pages across executors via
-  ``mapInPandas`` — page concurrency = partitions × per-task batch,
-  replacing the asyncio semaphore (X4, pipeline.py:19).
+  ``spark.range`` fans pages across executors via ``mapInArrow`` —
+  page concurrency = partitions, replacing the asyncio semaphore (X4,
+  pipeline.py:19).
 * Point-get detail fetch S2 — pipeline.py:31-55: per-id GET, failed
-  ids dropped (P3).  Here: the ids DataFrame is repartitioned and each
-  partition's worker fetches its ids; a failed id yields no row.
+  ids dropped (P3).  Here: each task fetches its ids; a failed id
+  yields no row.  :func:`fetch_listed_details_df` runs S1 and S2 in
+  one Python stage: each task GETs its listing pages, then the ids on
+  them, so the ids never cross a shuffle.
 * Retry/backoff X1 — http_client.py:29-44,84-157: retry transient
   {500,502,503,504} + transport errors up to 6 times, sleeping
   ``min(cap, base·2^(attempt-1)) + U[0, 0.5]`` (base 0.25, cap 4.0).
@@ -24,6 +26,11 @@ Transports are injectable callables so the same operators run against
 a real HTTP stack or the file-backed fake used in offline tests.  At
 scale the pattern is unchanged: each task owns its ids, holds one
 connection pool, and the driver never proxies data.
+
+Every task holds one :class:`_TaskClient`, whose two request loops
+(listing page → ids, ids → detail rows) serve all three operators.
+Workers build Arrow batches from buffers (:func:`arrow_batch`); none
+imports pandas.
 """
 
 from __future__ import annotations
@@ -38,7 +45,8 @@ import uuid
 from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession, types as T
 
@@ -201,6 +209,79 @@ DETAIL_SCHEMA = T.StructType(
         T.StructField("born_at", T.LongType()),
     ]
 )
+_DETAIL_ARROW = pa.schema(
+    [("id", pa.int64()), ("name", pa.string()), ("friends", pa.string()), ("born_at", pa.int64())]
+)
+_IDS_ARROW = pa.schema([("id", pa.int64())])
+
+
+def _arrow_array(values: list, type_: pa.DataType) -> pa.Array:
+    """An int64 or utf8 Arrow array of ``values``; ``None`` is null."""
+    n = len(values)
+    valid = np.fromiter((v is not None for v in values), dtype=bool, count=n)
+    validity = None if valid.all() else pa.py_buffer(np.packbits(valid, bitorder="little"))
+    if type_ == pa.int64():
+        data = np.fromiter((0 if v is None else int(v) for v in values), dtype=np.int64, count=n)
+        return pa.Array.from_buffers(type_, n, [validity, pa.py_buffer(data)])
+    encoded = [b"" if v is None else v.encode() for v in values]
+    offsets = np.zeros(n + 1, dtype=np.int32)
+    np.cumsum([len(b) for b in encoded], out=offsets[1:])
+    buffers = [validity, pa.py_buffer(offsets), pa.py_buffer(b"".join(encoded))]
+    return pa.Array.from_buffers(type_, n, buffers)
+
+
+def arrow_batch(schema: pa.Schema, columns: dict[str, list]) -> pa.RecordBatch:
+    """A RecordBatch of int64 / utf8 Python-list ``columns``.
+
+    Built from buffers because ``pa.array`` on a Python list imports
+    pandas (pyarrow probes whether the list is a pandas object), which
+    would cost every Python worker that import.
+    """
+    arrays = [_arrow_array(columns[f.name], f.type) for f in schema]
+    return pa.RecordBatch.from_arrays(arrays, schema=schema)
+
+
+class _TaskClient:
+    """One Spark task's transport and its two request loops."""
+
+    def __init__(self, transport_factory: TransportFactory, base_path: str, policy: RetryPolicy):
+        self.transport = transport_factory()
+        self.takes_headers = transport_takes_headers(self.transport)
+        self.base_path = base_path
+        self.policy = policy
+
+    def _get(self, path: str) -> Response:
+        return request_with_retry(
+            self.transport, "GET", path, self.policy, takes_headers=self.takes_headers
+        )
+
+    def listed_ids(self, page: int) -> list[int]:
+        """S1 for one page: the ids it lists, in listing order."""
+        _, body = self._get(f"{self.base_path}?page={page}")
+        payload = _safe_json(body, {"items": []})
+        return [int(item["id"]) for item in payload.get("items", [])]
+
+    def details(self, ids: list[int]) -> pa.RecordBatch:
+        """S2 + P3: one GET per id; a failed id yields no row."""
+        cols: dict[str, list] = {name: [] for name in _DETAIL_ARROW.names}
+        for rid in ids:
+            try:
+                _, body = self._get(f"{self.base_path}/{rid}")
+            except HttpError:
+                continue  # P3: drop failed id, keep going
+            detail = _safe_json(body, {})
+            if detail.get("id") is not None:
+                cols["id"].append(int(detail["id"]))
+                cols["name"].append(detail.get("name"))
+                cols["friends"].append(detail.get("friends"))
+                cols["born_at"].append(detail.get("born_at"))
+        return arrow_batch(_DETAIL_ARROW, cols)
+
+
+def _total_pages(transport_factory: TransportFactory, base_path: str, policy: RetryPolicy) -> int:
+    """The driver's one probe request: page 1 says how many pages exist."""
+    _, body = request_with_retry(transport_factory(), "GET", f"{base_path}?page=1", policy)
+    return int(_safe_json(body, {"items": [], "total_pages": 1}).get("total_pages", 1))
 
 
 def paginated_ids_df(
@@ -216,27 +297,16 @@ def paginated_ids_df(
     every page fetch happens on executors.  Replaces the reference's
     driver-side asyncio fan-out with partition-parallel tasks.
     """
-    transport = transport_factory()
-    _, body = request_with_retry(transport, "GET", f"{base_path}?page=1", policy)
-    first = _safe_json(body, {"items": [], "total_pages": 1})
-    total_pages = int(first.get("total_pages", 1))
+    total_pages = _total_pages(transport_factory, base_path, policy)
 
-    def fetch_pages(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        t = transport_factory()
-        hdrs = transport_takes_headers(t)
-        for pdf in batches:
-            ids: list[int] = []
-            for page in pdf["page"]:
-                _, pbody = request_with_retry(
-                    t, "GET", f"{base_path}?page={int(page)}", policy, takes_headers=hdrs
-                )
-                payload = _safe_json(pbody, {"items": []})
-                ids.extend(int(item["id"]) for item in payload.get("items", []))
-            yield pd.DataFrame({"id": pd.Series(ids, dtype="int64")})
+    def fetch_pages(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        client = _TaskClient(transport_factory, base_path, policy)
+        for batch in batches:
+            ids = [i for page in batch.column(0).to_pylist() for i in client.listed_ids(page)]
+            yield arrow_batch(_IDS_ARROW, {"id": ids})
 
-    pages = spark.range(1, total_pages + 1).withColumnRenamed("id", "page")
-    pages = pages.repartition(min(partitions, max(1, total_pages)))
-    return pages.mapInPandas(fetch_pages, schema="id long")
+    pages = spark.range(1, total_pages + 1).repartition(min(partitions, max(1, total_pages)))
+    return pages.mapInArrow(fetch_pages, schema="id long")
 
 
 def fetch_details_df(
@@ -248,33 +318,45 @@ def fetch_details_df(
 ) -> DataFrame:
     """S2 + P3: point-get each id; failed ids are dropped (no row)."""
 
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        t = transport_factory()
-        hdrs = transport_takes_headers(t)
-        for pdf in batches:
-            rows: list[dict] = []
-            for rid in pdf["id"]:
-                try:
-                    _, body = request_with_retry(
-                        t, "GET", f"{base_path}/{int(rid)}", policy, takes_headers=hdrs
-                    )
-                except HttpError:
-                    continue  # P3: drop failed id, keep going
-                detail = _safe_json(body, {})
-                if detail.get("id") is not None:
-                    rows.append(
-                        {
-                            "id": int(detail["id"]),
-                            "name": detail.get("name"),
-                            "friends": detail.get("friends"),
-                            "born_at": detail.get("born_at"),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["id", "name", "friends", "born_at"]
-            ).astype({"id": "int64"}, errors="ignore")
+    def fetch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        client = _TaskClient(transport_factory, base_path, policy)
+        for batch in batches:
+            yield client.details(batch.column("id").to_pylist())
 
-    return ids_df.repartition(partitions).mapInPandas(fetch, schema=DETAIL_SCHEMA)
+    return ids_df.repartition(partitions).mapInArrow(fetch, schema=DETAIL_SCHEMA)
+
+
+def fetch_listed_details_df(
+    spark: SparkSession,
+    transport_factory: TransportFactory,
+    base_path: str = "/animals/v1/animals",
+    partitions: int = 8,
+    policy: RetryPolicy = RetryPolicy(),
+) -> DataFrame:
+    """S1 + S2 + P3 in one Python stage: listing pages → details.
+
+    The work units are ``total_pages × k`` (page, slice) pairs with
+    ``k = ceil(partitions / total_pages)``, spread round-robin over
+    ``partitions`` tasks.  A task GETs the page of each of its units
+    and point-GETs every k-th id on it, so ``partitions`` is the fetch
+    fan-out even when there are fewer pages than tasks, and every
+    listed id is GET once.  A page is listed k times (once with the
+    usual many pages); the ids never cross a shuffle.
+    """
+    total_pages = _total_pages(transport_factory, base_path, policy)
+    k = -(-partitions // max(1, total_pages))
+
+    def fetch(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        client = _TaskClient(transport_factory, base_path, policy)
+        for batch in batches:
+            ids: list[int] = []
+            for unit in batch.column(0).to_pylist():
+                page, part = divmod(unit, k)
+                ids.extend(client.listed_ids(page + 1)[part::k])
+            yield client.details(ids)
+
+    units = spark.range(0, total_pages * k, numPartitions=1).repartition(partitions)
+    return units.mapInArrow(fetch, schema=DETAIL_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -341,7 +423,7 @@ class FileBackedTransport:
             body = path  # POST transports receive the body as "path"
             os.makedirs(os.path.join(self.root, "posts"), exist_ok=True)
             name = f"batch_{time.time_ns()}_{os.getpid()}_{random.randrange(1 << 30)}.json"
-            with open(os.path.join(self.root, "posts", name), "w") as f:
+            with open(os.path.join(self.root, "posts", name), "w", encoding="utf-8") as f:
                 f.write(body)
             return 200, "{}"
         return 405, "method not allowed"
@@ -350,7 +432,7 @@ class FileBackedTransport:
         fp = os.path.join(self.root, name)
         if not os.path.exists(fp):
             return 404, "not found"
-        with open(fp) as f:
+        with open(fp, encoding="utf-8") as f:
             return 200, f.read()
 
 

@@ -151,7 +151,7 @@ def test_concurrency_sets_fetch_fan_out(cli_spark, monkeypatch, api_dir):
         fan_outs = {
             n.child().outputPartitioning().numPartitions()
             for n in physical_nodes(receipts._jdf.queryExecution().executedPlan())
-            if n.getClass().getSimpleName() == "MapInPandasExec"
+            if n.getClass().getSimpleName() == "MapInArrowExec"
             and n.child().getClass().getSimpleName() == "ShuffleExchangeExec"
             and [n.output().apply(i).name() for i in range(n.output().size())]
             == ["id", "name", "friends", "born_at"]

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
+import sys
 
 import pytest
 
@@ -194,7 +196,7 @@ def _posted_bodies(root):
     posts_dir = os.path.join(root, "posts")
     bodies = []
     for name in os.listdir(posts_dir):
-        with open(os.path.join(posts_dir, name)) as f:
+        with open(os.path.join(posts_dir, name), encoding="utf-8") as f:
             bodies.append(json.load(f))
     return bodies
 
@@ -299,3 +301,103 @@ def test_globally_indexed_batches_span_buckets(spark, tmp_path, batch_size):
         assert receipts == [(i, len(c), 200) for i, c in enumerate(chunks)]
         seen[n_parts] = receipts
     assert seen[1] == seen[7]
+
+
+def _write_api(root, records, page_size):
+    os.makedirs(root)
+    pages = [records[i : i + page_size] for i in range(0, len(records), page_size)]
+    for n, items in enumerate(pages, start=1):
+        listing = {"page": n, "total_pages": len(pages), "items": [{"id": r["id"]} for r in items]}
+        with open(os.path.join(root, f"listing_page_{n}.json"), "w", encoding="utf-8") as f:
+            json.dump(listing, f)
+    for r in records:
+        with open(os.path.join(root, f"detail_{r['id']}.json"), "w", encoding="utf-8") as f:
+            json.dump(r, f, ensure_ascii=False)
+
+
+def test_pipeline_posts_non_ascii_records(spark, tmp_path):
+    """The JVM writes posted JSON as raw UTF-8 (no \\u escapes); the
+    transport reads and writes it as UTF-8 whatever the locale."""
+    root = str(tmp_path / "api")
+    _write_api(
+        root,
+        [
+            {"id": 1, "name": "Åsa 猫", "friends": "Zoë, 熊猫 ,\u00a0Émile", "born_at": 1348692957651},
+            {"id": 2, "name": "Ñandú", "friends": None, "born_at": None},
+            {"id": 3, "name": "Dog", "friends": "Кот", "born_at": 1_500_000_000},
+        ],
+        page_size=2,
+    )
+    receipts = run_pipeline(spark, lambda: FileBackedTransport(root), as_of=AS_OF, policy=FAST)
+    assert [tuple(r) for r in receipts.collect()] == [(0, 3, 200)]
+    (body,) = _posted_bodies(root)
+    assert body == [
+        {
+            "id": 1,
+            "name": "Åsa 猫",
+            "friends": json.dumps(["Zoë", "熊猫", "Émile"], ensure_ascii=False, separators=(",", ":")),
+            "born_at": "2012-09-26T20:55:57.651000Z",
+        },
+        {"id": 2, "name": "Ñandú", "friends": "[]"},
+        {"id": 3, "name": "Dog", "friends": '["Кот"]', "born_at": "2017-07-14T02:40:00Z"},
+    ]
+
+
+_PANDAS_PROBE = """
+import os, sys
+from project_fauna_spark.pipeline import run_pipeline
+from project_fauna_spark.session import get_spark
+from project_fauna_spark.sources.http import FileBackedTransport, RetryPolicy
+
+api_dir, log_dir = sys.argv[1:]
+
+
+# Logs whether pandas is loaded when a task builds the transport and
+# when it drops it.
+class RecordingTransport:
+    def __init__(self):
+        self.inner = FileBackedTransport(api_dir)
+        self.record()
+
+    def record(self):
+        with open(os.path.join(log_dir, str(os.getpid())), "a") as f:
+            f.write(f"{'pandas' in sys.modules}\\n")
+
+    def __call__(self, method, path):
+        return self.inner(method, path)
+
+    def __del__(self):
+        self.record()
+
+
+spark = get_spark(master="local[2]", shuffle_partitions=2)
+policy = RetryPolicy(retries=1, backoff_base=0.0, backoff_cap=0.0, jitter_max=0.0)
+receipts = run_pipeline(spark, RecordingTransport, batch_size=30, policy=policy).collect()
+print(os.getpid(), sum(r["n_records"] for r in receipts))
+spark.stop()
+"""
+
+
+def test_etl_workers_never_import_pandas(api_dir, tmp_path):
+    """The ETL's Python workers build their Arrow batches from buffers,
+    so none of them loads pandas.  A fresh session in its own
+    interpreter keeps workers that other tests' pandas stages warmed
+    out of the count."""
+    log_dir = str(tmp_path / "workers")
+    os.makedirs(log_dir)
+    env = {**os.environ, "SPARK_DRIVER_MEMORY": "1g"}
+    out = subprocess.run(
+        [sys.executable, "-c", _PANDAS_PROBE, api_dir, log_dir],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        env=env, capture_output=True, text=True, timeout=600, check=False,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    driver_pid, n_posted = out.stdout.split()[-2:]
+    assert int(n_posted) == 100
+    seen = {}
+    for pid in os.listdir(log_dir):
+        with open(os.path.join(log_dir, pid)) as f:
+            seen[int(pid)] = set(f.read().split())
+    workers = {pid: flags for pid, flags in seen.items() if pid != int(driver_pid)}
+    assert workers, "no transport was built in a Python worker"
+    assert all(flags == {"False"} for flags in workers.values()), workers
