@@ -137,7 +137,7 @@ def attribute_global_windows(spark) -> bool:
     it.  Returns False (bench must fail) if a warning source is NOT
     justified under the lint rule."""
     from project_fauna_spark.cache import release_cached
-    from project_fauna_spark.plans.lint import GLOBAL_WINDOW_ALLOWED, global_windows
+    from project_fauna_spark.plans.lint import GLOBAL_WINDOW_ALLOWED, global_windows, plan_of
 
     attributed: dict[str, int] = {}
     ok = True
@@ -149,9 +149,7 @@ def attribute_global_windows(spark) -> bool:
         # timing loop — skip its attribution rather than losing the whole
         # headline JSON line (ADVICE r9).
         try:
-            total, unbounded = global_windows(
-                QUERIES[name](spark, SF_DIR)._jdf.queryExecution().analyzed()
-            )
+            total, unbounded = global_windows(plan_of(QUERIES[name](spark, SF_DIR), "analyzed"))
         except Exception as exc:  # noqa: BLE001 — mirror the timing loop
             print(
                 f"bench: window attribution skipped for {name}: {exc}",

@@ -371,8 +371,10 @@ class UrllibTransport:
     GETs hit ``base_url + path``; POSTs send the body (our POST
     convention passes the JSON body as the second argument) to the
     sink path.  Per-request headers (X-Request-Id) are forwarded.
-    Timeout maps the reference's connect/read pair onto urllib's
-    single deadline (the stricter read timeout governs).
+    The reference's timeout pair applies as it does there:
+    ``connect_timeout`` bounds connection setup (TCP connect and any
+    TLS handshake), ``read_timeout`` every socket read and write after
+    it.  One connection per request, no redirects and no proxies.
     """
 
     base_url: str
@@ -381,24 +383,26 @@ class UrllibTransport:
     read_timeout: float = 30.0
 
     def __call__(self, method: str, path: str, headers: dict | None = None) -> Response:
-        import urllib.error
-        import urllib.request
+        import http.client
+        import urllib.parse
 
+        url = urllib.parse.urlsplit(self.base_url)
+        conn_type = http.client.HTTPSConnection if url.scheme == "https" else http.client.HTTPConnection
+        conn = conn_type(url.netloc, timeout=self.connect_timeout)
+        headers = dict(headers or {})
         if method.startswith("POST"):
-            url = self.base_url + self.sink_path
-            req = urllib.request.Request(
-                url, data=path.encode("utf-8"), method="POST",
-                headers={"Content-Type": "application/json", **(headers or {})},
-            )
+            method, target, body = "POST", url.path + self.sink_path, path.encode("utf-8")
+            headers = {"Content-Type": "application/json", **headers}
         else:
-            req = urllib.request.Request(
-                self.base_url + path, method=method, headers=headers or {}
-            )
+            target, body = url.path + path, None
         try:
-            with urllib.request.urlopen(req, timeout=self.read_timeout) as resp:
-                return resp.status, resp.read().decode("utf-8", errors="replace")
-        except urllib.error.HTTPError as e:
-            return e.code, e.read().decode("utf-8", errors="replace")
+            conn.connect()
+            conn.sock.settimeout(self.read_timeout)
+            conn.request(method, target, body=body, headers=headers)
+            resp = conn.getresponse()
+            return resp.status, resp.read().decode("utf-8", errors="replace")
+        finally:
+            conn.close()
 
 
 @dataclass

@@ -134,28 +134,26 @@ def test_concurrency_sets_fetch_fan_out(cli_spark, monkeypatch, api_dir):
     from project_fauna_spark import pipeline
     from project_fauna_spark.cache import release_cached
     from project_fauna_spark.config import parse_args
-    from project_fauna_spark.plans.lint import physical_nodes
+    from project_fauna_spark.plans.lint import kind, nodes, plan_of, seq
 
-    built, real_run_pipeline = [], pipeline.run_pipeline
+    fan_outs, real_run_pipeline = set(), pipeline.run_pipeline
 
     def recording_run_pipeline(*args, **kwargs):
-        built.append(real_run_pipeline(*args, **kwargs))
-        return built[-1]
+        receipts = real_run_pipeline(*args, **kwargs)
+        # The plan as built, before the CLI runs it.  The pinned records
+        # are read twice, so the fetch shows up once per read of the pin.
+        fan_outs.update(
+            n.child().outputPartitioning().numPartitions()
+            for n in nodes(plan_of(receipts))
+            if kind(n) == "MapInArrowExec"
+            and kind(n.child()) == "ShuffleExchangeExec"
+            and [a.name() for a in seq(n.output())] == ["id", "name", "friends", "born_at"]
+        )
+        return receipts
 
     monkeypatch.setattr(pipeline, "run_pipeline", recording_run_pipeline)
     try:
         assert cli.run(parse_args(["--fixture-dir", api_dir, "--concurrency", "3"])) == 0
-        (receipts,) = built
-        # The pinned records are read twice, so the fetch shows up once
-        # per read of the pin.
-        fan_outs = {
-            n.child().outputPartitioning().numPartitions()
-            for n in physical_nodes(receipts._jdf.queryExecution().executedPlan())
-            if n.getClass().getSimpleName() == "MapInArrowExec"
-            and n.child().getClass().getSimpleName() == "ShuffleExchangeExec"
-            and [n.output().apply(i).name() for i in range(n.output().size())]
-            == ["id", "name", "friends", "born_at"]
-        }
     finally:
         release_cached()
     assert fan_outs == {3}

@@ -12,6 +12,7 @@ import tempfile
 from pyspark.sql import functions as F
 
 from project_fauna_spark.io import load_table
+from project_fauna_spark.plans.lint import kind, names, nodes, plan_of, seq
 
 SF = "/root/testdata/sf0.01"
 
@@ -39,14 +40,16 @@ def test_partitioned_parquet_roundtrip_and_pruning(spark):
         assert _sorted_rows(
             back.select("doc_id", "lang", "text")
         ) == _sorted_rows(src.select("doc_id", "lang", "text"))
-        # a lang filter must prune partitions, visible as PartitionFilters
-        import io
-        from contextlib import redirect_stdout
-
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            back.filter(F.col("lang") == "en").explain("formatted")
-        assert "PartitionFilters" in buf.getvalue()
+        # a lang filter must prune partitions: a scan partition filter
+        plan = plan_of(back.filter(F.col("lang") == "en"))
+        pruned = {
+            c
+            for n in nodes(plan)
+            if kind(n) == "FileSourceScanExec"
+            for f in seq(n.partitionFilters())
+            for c in names(f)
+        }
+        assert pruned == {"lang"}, pruned
 
 
 def test_clustered_write_yields_disjoint_file_ranges(spark):

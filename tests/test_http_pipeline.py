@@ -18,6 +18,7 @@ from project_fauna_spark.pipeline import (
     run_pipeline,
     transform_details,
 )
+from project_fauna_spark.plans.lint import kinds, plan_of
 from project_fauna_spark.sources.http import (
     FileBackedTransport,
     FlakyTransport,
@@ -111,6 +112,53 @@ def test_request_id_header_reaches_transport():
 
     request_with_retry(t, "GET", "/x", FAST, req_id="fixed-id-123")
     assert seen[1]["X-Request-Id"] == "fixed-id-123"
+
+
+def test_urllib_transport_times_out_connect_then_reads(monkeypatch):
+    """``connect_timeout`` reaches the connect call; ``read_timeout``
+    then bounds each read: a loopback listener that answers at once is
+    read in full, one that stalls past the read timeout raises it."""
+    import socket
+    import threading
+    import time
+
+    from project_fauna_spark.sources.http import UrllibTransport
+
+    listener = socket.create_server(("127.0.0.1", 0))
+    requests = []
+
+    def serve():
+        for stall in (0.0, 3.0):
+            conn, _ = listener.accept()
+            with conn:
+                requests.append(conn.recv(65536).split(b"\r\n")[0])
+                time.sleep(stall)
+                try:
+                    conn.sendall(b"HTTP/1.1 200 OK\r\nContent-Length: 2\r\n\r\nok")
+                except OSError:
+                    pass
+
+    threading.Thread(target=serve, daemon=True).start()
+    connect_timeouts = []
+    real_connect = socket.create_connection
+
+    def recording_connect(address, timeout, *args, **kwargs):
+        connect_timeouts.append(timeout)
+        return real_connect(address, timeout, *args, **kwargs)
+
+    monkeypatch.setattr(socket, "create_connection", recording_connect)
+    port = listener.getsockname()[1]
+    t = UrllibTransport(f"http://127.0.0.1:{port}", connect_timeout=4.0, read_timeout=0.5)
+    try:
+        assert t("GET", "/animals/v1/animals/7") == (200, "ok")
+        assert connect_timeouts == [4.0]
+        start = time.monotonic()
+        with pytest.raises(TimeoutError):
+            t("GET", "/animals/v1/animals/8")
+        assert time.monotonic() - start < 2.0
+    finally:
+        listener.close()
+    assert requests == [b"GET /animals/v1/animals/7 HTTP/1.1", b"GET /animals/v1/animals/8 HTTP/1.1"]
 
 
 def test_retries_log_request_id():
@@ -256,16 +304,6 @@ def test_pipeline_fetches_each_detail_once(spark, api_dir, tmp_path):
     assert len(statuses) == 100 + injected
 
 
-def _inmemory_relations(plan) -> int:
-    n, stack = 0, [plan]
-    while stack:
-        node = stack.pop()
-        n += node.getClass().getSimpleName() == "InMemoryRelation"
-        cs = node.children()
-        stack.extend(cs.apply(i) for i in range(cs.size()))
-    return n
-
-
 @pytest.mark.parametrize("batch_size", [7, 100])
 def test_globally_indexed_batches_span_buckets(spark, tmp_path, batch_size):
     """Batch boundaries follow the global id order across many row-number
@@ -293,7 +331,7 @@ def test_globally_indexed_batches_span_buckets(spark, tmp_path, batch_size):
         )
         # The pinned input is read by both the bucket row numbers and
         # the bucket counts; no other node reads it.
-        assert _inmemory_relations(receipts_df._jdf.queryExecution().optimizedPlan()) == 2
+        assert kinds(plan_of(receipts_df, "optimizedPlan"))["InMemoryRelation"] == 2
         receipts = sorted(tuple(r) for r in receipts_df.collect())
         release_cached()
         chunks = [expected[i : i + batch_size] for i in range(0, len(expected), batch_size)]

@@ -5,6 +5,9 @@
   registry it leaves behind has every oracle built.
 * No function re-imports a name its module already binds to the same
   object at module level.
+* Tests, tools and bench.py inspect plans only through ``plans/lint``:
+  no explain capture, no plan ``toString()`` grep, no hand-written
+  ``children()`` walk.
 """
 
 from __future__ import annotations
@@ -71,3 +74,37 @@ def test_no_function_reimports_a_module_level_name():
                     if top.get(name) == obj:
                         dups.append(f"{path.name}:{st.lineno} {name}")
     assert sorted(set(dups)) == []
+
+
+# (file, function) pairs that may capture explain text: the dump tool
+# writes it to files.  tests/test_cli.py::test_cli_query_explain checks
+# the CLI's --explain output through a subprocess, so it calls nothing
+# this scan flags.
+_EXPLAIN_ALLOWED = {("tools/dump_plans.py", "main")}
+
+
+def _plan_text_calls(tree: ast.Module):
+    """(top-level definition, line, what) for each explain capture,
+    plan ``toString()`` grep or ``children()`` walk in a module."""
+    for top in tree.body:
+        owner = getattr(top, "name", "<module>")
+        for node in ast.walk(top):
+            if isinstance(node, ast.Name) and node.id == "redirect_stdout":
+                yield owner, node.lineno, "redirect_stdout"
+            if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+                continue
+            attr = node.func.attr
+            if attr in ("explain", "children"):
+                yield owner, node.lineno, f".{attr}("
+            elif attr == "toString" and "queryExecution" in ast.dump(node.func.value):
+                yield owner, node.lineno, "queryExecution()...toString()"
+
+
+def test_plans_are_inspected_only_through_plans_lint():
+    found = set()
+    for path in sorted([*REPO.glob("tests/*.py"), *REPO.glob("tools/*.py"), REPO / "bench.py"]):
+        rel = str(path.relative_to(REPO))
+        for owner, line, what in _plan_text_calls(ast.parse(path.read_text())):
+            if (rel, owner) not in _EXPLAIN_ALLOWED:
+                found.add(f"{rel}:{line} {owner}: {what}")
+    assert sorted(found) == []

@@ -1,7 +1,7 @@
 """Physical-plan assertions: the plans must BE the scale-correct
 plans, not merely produce correct rows.
 
-These tests read `.explain("formatted")` output (no execution beyond
+These tests walk the plans with ``plans/lint`` (no execution beyond
 planning) and pin the properties the 100 TB design depends on:
 predicate pushdown into parquet, column pruning, broadcast of dims,
 top-k via TakeOrderedAndProject, window-group-limit pushdown, and the
@@ -10,28 +10,52 @@ absence of Python evaluation in pure-expression operators.
 
 from __future__ import annotations
 
-import io
-from contextlib import redirect_stdout
-
-import pytest
+import re
 
 from project_fauna_spark.plans import QUERIES
-from project_fauna_spark.plans.lint import physical_nodes
+from project_fauna_spark.plans.lint import (
+    GLOBAL_WINDOW_ALLOWED,
+    global_windows,
+    is_python,
+    kind,
+    kinds,
+    names,
+    nodes,
+    plan_of,
+    seq,
+    sf_scaling,
+)
 
 SF = "/root/testdata/sf0.01"
+NESTED_LOOPS = {"CartesianProductExec", "BroadcastNestedLoopJoinExec"}
 
 
-def plan_of(spark, name: str) -> str:
-    df = QUERIES[name](spark, SF)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+def physical(spark, name: str):
+    return plan_of(QUERIES[name](spark, SF))
 
 
-# The four registry-wide lints each need every query's plan; building
-# 392 DataFrames costs ~2.5 min per walk, so they share ONE cache of
-# (analyzed, optimized, formatted) triples built on first use.
+def of_kind(plan, k: str) -> list:
+    return [n for n in nodes(plan) if kind(n) == k]
+
+
+def join_types(plan) -> set[str]:
+    return {n.joinType().toString() for n in nodes(plan) if kind(n).endswith("JoinExec")}
+
+
+def data_filter_columns(plan) -> set[str]:
+    """Columns the parquet scans' data filters (pushed to the reader)
+    reference."""
+    return {
+        c
+        for scan in of_kind(plan, "FileSourceScanExec")
+        for f in seq(scan.dataFilters())
+        for c in names(f)
+    }
+
+
+# The registry-wide lints each need every query's plan; building
+# 396 DataFrames costs ~2.5 min per walk, so they share ONE cache of
+# (analyzed, optimized, executed) plans built on first use.
 _REGISTRY_PLANS: dict[str, tuple] = {}
 
 
@@ -44,43 +68,40 @@ def _registry_plans(spark) -> dict[str, tuple]:
         df = QUERIES[name](spark, SF)
         release_cached()  # plan-only walk; don't pin caches session-wide
         qe = df._jdf.queryExecution()
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        _REGISTRY_PLANS[name] = (qe.analyzed(), qe.optimizedPlan(), buf.getvalue())
+        _REGISTRY_PLANS[name] = (qe.analyzed(), qe.optimizedPlan(), qe.executedPlan())
     return _REGISTRY_PLANS
 
 
 def test_filter_pushdown_to_parquet(spark):
-    plan = plan_of(spark, "q_revenue_forecast")
-    assert "PushedFilters: [" in plan
     # The shipdate range must reach the scan (row-group pruning).
-    assert "l_shipdate" in plan.split("PushedFilters")[1].split("]")[0]
+    assert "l_shipdate" in data_filter_columns(physical(spark, "q_revenue_forecast"))
 
 
 def test_column_pruning(spark):
-    plan = plan_of(spark, "sort_limit_global")
     # The scan must read only the two projected columns.
-    read = [l for l in plan.splitlines() if "ReadSchema" in l][0]
-    assert "o_orderkey" in read and "o_totalprice" in read
-    assert "o_orderdate" not in read and "o_orderstatus" not in read
+    (scan,) = of_kind(physical(spark, "sort_limit_global"), "FileSourceScanExec")
+    read = {a.name() for a in seq(scan.output())}
+    assert {"o_orderkey", "o_totalprice"} <= read
+    assert not read & {"o_orderdate", "o_orderstatus"}
 
 
 def test_dim_joins_broadcast(spark):
-    plan = plan_of(spark, "join_broadcast_chain")
-    assert plan.count("BroadcastHashJoin") >= 2  # nation + region
-    assert "CartesianProduct" not in plan
+    k = kinds(physical(spark, "join_broadcast_chain"))
+    assert k["BroadcastHashJoinExec"] >= 2 and "CartesianProductExec" not in k  # nation + region
 
 
 def test_global_topk_avoids_full_sort(spark):
-    plan = plan_of(spark, "sort_limit_global")
-    assert "TakeOrderedAndProject" in plan
-    assert "Exchange rangepartitioning" not in plan  # no global sort
+    plan = physical(spark, "sort_limit_global")
+    assert "TakeOrderedAndProjectExec" in kinds(plan)
+    assert not [  # no global sort
+        x
+        for x in of_kind(plan, "ShuffleExchangeExec")
+        if kind(x.outputPartitioning()) == "RangePartitioning"
+    ]
 
 
 def test_per_group_topk_uses_window_group_limit(spark):
-    plan = plan_of(spark, "topk_per_group")
-    assert "WindowGroupLimit" in plan
+    assert "WindowGroupLimitExec" in kinds(physical(spark, "topk_per_group"))
 
 
 def test_pure_expression_ops_have_no_python(spark):
@@ -93,10 +114,7 @@ def test_pure_expression_ops_have_no_python(spark):
         "sim_knn_brute_cosine",
         "agg_pricing_summary",
     ]:
-        plan = plan_of(spark, name)
-        assert "BatchEvalPython" not in plan, name
-        assert "ArrowEvalPython" not in plan, name
-        assert "MapInPandas" not in plan, name
+        assert not [kind(n) for n in nodes(physical(spark, name)) if is_python(n)], name
 
 
 def test_no_rowwise_python_udf_anywhere(spark):
@@ -104,45 +122,33 @@ def test_no_rowwise_python_udf_anywhere(spark):
     Python UDF (BatchEvalPython).  Arrow-batched stages
     (ArrowEvalPython / MapInPandas / FlatMapGroupsInPandas) are the
     only sanctioned Python evaluation."""
-    offenders = []
-    for name, (_, _, plan) in _registry_plans(spark).items():
-        if "BatchEvalPython" in plan:
-            offenders.append(name)
+    offenders = [
+        name
+        for name, (_, _, plan) in _registry_plans(spark).items()
+        if "BatchEvalPythonExec" in kinds(plan)
+    ]
     assert offenders == [], offenders
 
 
 def test_pandas_stages_are_arrow_not_rowwise(spark):
-    plan = plan_of(spark, "udf_pandas_scalar")
-    assert "ArrowEvalPython" in plan  # vectorized, not BatchEvalPython
-    assert "BatchEvalPython" not in plan
+    k = kinds(physical(spark, "udf_pandas_scalar"))
+    assert "ArrowEvalPythonExec" in k and "BatchEvalPythonExec" not in k, k
 
 
 def test_asof_join_is_single_shuffle_window(spark):
-    plan = plan_of(spark, "join_asof_latest_order")
     # One hash partitioning exchange on the key; window over it; no join node.
-    assert "Window" in plan
-    assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan
-    import re
-
-    exchanges = re.findall(r"\(\d+\) Exchange", plan)
-    assert len(exchanges) == 1, plan
+    k = kinds(physical(spark, "join_asof_latest_order"))
+    assert "WindowExec" in k
+    assert "SortMergeJoinExec" not in k and "BroadcastHashJoinExec" not in k
+    assert k["ShuffleExchangeExec"] == 1, k
 
 
 def _max_pin_reads(spark, name: str) -> int:
-    """Most scans of any ONE cached relation in the query's physical
-    plan (pins nested inside other pins included)."""
-    df = QUERIES[name](spark, SF)
-    reads: list[list] = []  # [cache builder, scan count]
-    for node in physical_nodes(df._jdf.queryExecution().executedPlan()):
-        if node.getClass().getSimpleName() == "InMemoryTableScanExec":
-            builder = node.relation().cacheBuilder()
-            for entry in reads:
-                if entry[0].equals(builder):
-                    entry[1] += 1
-                    break
-            else:
-                reads.append([builder, 1])
-    return max((n for _, n in reads), default=0)
+    """Most reads of any ONE cached relation in the query's physical
+    plan (pins nested inside other pins included): ``nodes`` yields a
+    pin's InMemoryRelation once per scan of it."""
+    pins = [n.cacheBuilder() for n in of_kind(physical(spark, name), "InMemoryRelation")]
+    return max((sum(p.equals(q) for q in pins) for p in pins), default=0)
 
 
 def test_corpus_clean_reuses_cached_intermediate(spark):
@@ -159,8 +165,7 @@ def test_dedup_self_joins_use_cache(spark):
 
 
 def test_q6_pushes_all_predicates(spark):
-    plan = plan_of(spark, "q_revenue_forecast")
-    pushed = plan.split("PushedFilters")[1].split("]")[0]
+    pushed = data_filter_columns(physical(spark, "q_revenue_forecast"))
     for col in ["l_shipdate", "l_discount", "l_quantity"]:
         assert col in pushed, col
 
@@ -168,26 +173,21 @@ def test_q6_pushes_all_predicates(spark):
 def test_round2_decorrelated_subqueries_are_joins(spark):
     """EXISTS/NOT EXISTS shapes must plan as semi/anti joins —
     never nested-loop subquery evaluation."""
-    plan = plan_of(spark, "q_order_priority_count")
-    assert "LeftSemi" in plan
-    plan = plan_of(spark, "q_dormant_rich_customers")
-    assert "LeftAnti" in plan
-    plan = plan_of(spark, "q_supplier_part_variety")
-    assert "LeftAnti" in plan
+    assert "LeftSemi" in join_types(physical(spark, "q_order_priority_count"))
+    assert "LeftAnti" in join_types(physical(spark, "q_dormant_rich_customers"))
+    assert "LeftAnti" in join_types(physical(spark, "q_supplier_part_variety"))
 
 
 def test_lateral_topn_decorrelates_to_window_group_limit(spark):
     """The SQL-standard LATERAL LIMIT subquery must reach the same
     WindowGroupLimit physical plan as the DataFrame top-k — the whole
     point of expressing it declaratively."""
-    plan = plan_of(spark, "sql_lateral_topn")
-    assert "WindowGroupLimit" in plan
-    assert "CartesianProduct" not in plan
+    k = kinds(physical(spark, "sql_lateral_topn"))
+    assert "WindowGroupLimitExec" in k and "CartesianProductExec" not in k, k
 
 
 def test_reservoir_sample_uses_window_group_limit(spark):
-    plan = plan_of(spark, "sample_reservoir_hash")
-    assert "WindowGroupLimit" in plan
+    assert "WindowGroupLimitExec" in kinds(physical(spark, "sample_reservoir_hash"))
 
 
 def test_ohlc_is_pure_aggregate_no_window(spark):
@@ -195,121 +195,122 @@ def test_ohlc_is_pure_aggregate_no_window(spark):
     SortAggregate — struct-typed min/max buffers are sort-based), never
     a window pass: one exchange on the bucket key, no per-group event
     buffering."""
-    import re
-
-    plan = plan_of(spark, "ts_ohlc_downsample")
-    assert "SortAggregate" in plan or "HashAggregate" in plan
-    assert "Window" not in plan
-    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1
+    k = kinds(physical(spark, "ts_ohlc_downsample"))
+    assert "SortAggregateExec" in k or "HashAggregateExec" in k
+    assert not [c for c in k if c.startswith("Window")], k
+    assert k["ShuffleExchangeExec"] == 1, k
 
 
 def test_sessionize_windows_share_one_exchange(spark):
     """lag + running-sum + final agg must reuse a single user_id
     exchange (all three are (user_id)-compatible)."""
-    import re
-
-    plan = plan_of(spark, "event_sessionize_lag_cumsum")
-    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1
+    k = kinds(physical(spark, "event_sessionize_lag_cumsum"))
+    assert k["ShuffleExchangeExec"] == 1, k
 
 
 def test_pagerank_has_no_cartesian_or_collect(spark):
-    plan = plan_of(spark, "graph_pagerank_trade")
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    assert not NESTED_LOOPS & set(kinds(physical(spark, "graph_pagerank_trade")))
+
+
+def _dpp_scans(plan) -> list:
+    """Scans whose partition filters carry a dynamic pruning subquery."""
+    return [
+        s
+        for s in of_kind(plan, "FileSourceScanExec")
+        if any(kind(f) == "DynamicPruningExpression" for f in seq(s.partitionFilters()))
+    ]
 
 
 def test_dpp_query_prunes_fact_partitions(spark):
     """The partitioned-fact join must carry a dynamic pruning
     subquery in the fact scan's partition filters."""
-    plan = plan_of(spark, "join_dynamic_partition_pruning")
-    assert "dynamicpruning" in plan or "DynamicPruning" in plan
+    assert _dpp_scans(physical(spark, "join_dynamic_partition_pruning"))
+
+
+def test_walker_reaches_dpp_subquery_scan(spark):
+    """``nodes`` must follow expression subqueries, as explain prints
+    them: the DPP filter's build plan, with its own dimension scan,
+    hangs off the fact scan's partition filter, outside the children
+    tree.  A registry-wide lint that skipped it would quietly check
+    less than the text it replaced."""
+    plan = physical(spark, "join_dynamic_partition_pruning")
+    (fact,) = _dpp_scans(plan)
+    (sub,) = seq(fact.subqueries())
+    assert "FileSourceScanExec" in kinds(sub)
+    walked = [kind(n) for n in nodes(plan)]
+    assert kind(sub) in walked, walked
+    assert walked.count("FileSourceScanExec") == 3, walked  # fact, dim, DPP build
 
 
 def test_exact_substring_no_cartesian_no_python(spark):
-    plan = plan_of(spark, "dedup_exact_substring")
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
-    assert "PushedFilters" in plan or "Scan parquet" in plan
+    k = kinds(physical(spark, "dedup_exact_substring"))
+    assert "FileSourceScanExec" in k
+    assert not {"CartesianProductExec", "BatchEvalPythonExec"} & set(k), k
 
 
-def _window_arg_groups(plan: str):
-    """For each `(n) Window` node, the count of top-level `[...]` groups
-    on its Arguments line: partitioned windows have 3 (exprs,
-    partition, order), global windows only 2 (exprs, order)."""
-    import re
-
-    lines = plan.splitlines()
-    out = []
-    for i, line in enumerate(lines):
-        # exact node name: "(n) WindowGroupLimit" has a different
-        # Arguments format and must not be parsed as a Window node
-        if re.fullmatch(r"\(\d+\) Window", line.strip()):
-            for j in range(i + 1, min(i + 4, len(lines))):
-                arg = lines[j].strip()
-                if arg.startswith("Arguments:"):
-                    depth = 0
-                    groups = 0
-                    for ch in arg:
-                        if ch == "[":
-                            if depth == 0:
-                                groups += 1
-                            depth += 1
-                        elif ch == "]":
-                            depth -= 1
-                    out.append(groups)
-                    break
-    return out
+def _window_specs(plan) -> list[tuple[set, set]]:
+    """(partition-spec columns, order-spec columns) of each WindowExec."""
+    return [
+        (
+            set().union(*map(names, seq(w.partitionSpec()))),
+            set().union(*map(names, seq(w.orderSpec()))),
+        )
+        for w in of_kind(plan, "WindowExec")
+    ]
 
 
-def test_window_arg_group_parser_detects_global_window(spark):
-    """Negative control: a deliberately global ntile must show 2 arg
-    groups, a partitioned one 3 — otherwise the ccnet pin is vacuous."""
+def test_window_partition_spec_detects_global_window(spark):
+    """Negative control: a deliberately global ntile must read as an
+    empty partitionSpec, a partitioned one as non-empty — otherwise the
+    ccnet pin is vacuous."""
     from pyspark.sql import Window as W, functions as F
 
     df = spark.range(10).withColumn("r", F.ntile(3).over(W.orderBy("id")))
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    assert _window_arg_groups(buf.getvalue()) == [2]
+    assert [w.partitionSpec().isEmpty() for w in of_kind(plan_of(df), "WindowExec")] == [True]
     df2 = spark.range(10).withColumn(
         "r", F.ntile(3).over(W.partitionBy((F.col("id") % 2)).orderBy("id"))
     )
-    buf2 = io.StringIO()
-    with redirect_stdout(buf2):
-        df2.explain("formatted")
-    assert _window_arg_groups(buf2.getvalue()) == [3]
+    assert [w.partitionSpec().isEmpty() for w in of_kind(plan_of(df2), "WindowExec")] == [False]
 
 
 def test_ccnet_buckets_has_no_global_window(spark):
     """Every Window in the distributed-ntile plan must carry partition
     expressions — no single-task global window stage."""
-    groups = _window_arg_groups(plan_of(spark, "llm_ccnet_buckets"))
-    assert groups, "expected at least one Window node"
-    assert all(g == 3 for g in groups), f"global window present: {groups}"
+    plan = physical(spark, "llm_ccnet_buckets")
+    windows = of_kind(plan, "WindowExec")
+    assert windows, "expected at least one Window node"
+    assert not [w for w in windows if w.partitionSpec().isEmpty()], _window_specs(plan)
 
 
 def test_market_basket_broadcasts_counts_and_takes_ordered(spark):
-    plan = plan_of(spark, "q_market_basket_lift")
-    assert "TakeOrderedAndProject" in plan
-    assert "BroadcastHashJoin" in plan
+    k = kinds(physical(spark, "q_market_basket_lift"))
+    assert "TakeOrderedAndProjectExec" in k and "BroadcastHashJoinExec" in k, k
 
 
 def test_minhash_md5_band_join_is_hash_join(spark):
-    plan = plan_of(spark, "dedup_minhash_md5")
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    assert not NESTED_LOOPS & set(kinds(physical(spark, "dedup_minhash_md5")))
 
 
 def test_temporal_scd2_join_is_keyed_not_cartesian(spark):
-    plan = plan_of(spark, "join_temporal_scd2")
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    assert not NESTED_LOOPS & set(kinds(physical(spark, "join_temporal_scd2")))
 
 
 def test_semantic_ivf_codebook_broadcasts(spark):
-    plan = plan_of(spark, "dedup_semantic_ivf")
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
+    k = kinds(physical(spark, "dedup_semantic_ivf"))
+    assert "BroadcastNestedLoopJoinExec" in k or "BroadcastHashJoinExec" in k
+    assert "CartesianProductExec" not in k
+
+
+def _raw_windows_carry_bucket(spark, name, row_col, bucket_col):
+    """Every window that orders by the row-level column ``row_col``
+    partitions by ``bucket_col`` too; there is at least one."""
+    specs = _window_specs(physical(spark, name))
+    row_specs = [(part, order) for part, order in specs if row_col in order]
+    assert row_specs, f"{name}: no window orders by {row_col}?"
+    for part, order in row_specs:
+        assert bucket_col in part, (
+            f"{name}: raw-data window lost its {bucket_col} de-skew key: {part} / {order}"
+        )
 
 
 def test_two_phase_ranks_never_funnel_raw_data(spark):
@@ -318,43 +319,26 @@ def test_two_phase_ranks_never_funnel_raw_data(spark):
     low-cardinality key alone — only the tiny per-bucket offset tables
     may window on the bare key.  Pinned by asserting the spec that
     orders by the row-level sort column also carries its bucket key."""
-    import re
-
-    cases = [
+    for case in [
         ("event_time_to_convert", "latency_sec", "bkt"),
         ("llm_microbatch_padding", "doc_id", "sub"),
         ("agg_approx_percentile_bound", "l_extendedprice", "bucket"),
         ("agg_weighted_median", "l_extendedprice", "bkt"),
-    ]
-    for name, row_col, bucket_col in cases:
-        plan = plan_of(spark, name)
-        specs = re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
-        row_specs = [s for s in specs if row_col in s]
-        assert row_specs, f"{name}: no window orders by {row_col}?"
-        for s in row_specs:
-            assert bucket_col in s, (
-                f"{name}: raw-data window lost its {bucket_col} de-skew key: {s}"
-            )
+    ]:
+        _raw_windows_carry_bucket(spark, *case)
 
 
 def test_round6_late_bucketed_windows_carry_bucket_key(spark):
     """Batches 27/28/33: raw-data adjacent-diff / rank windows must
-    carry their bucket key (same de-skew rule as the two-phase ranks)."""
-    import re
-
-    cases = [
+    carry their bucket key (same de-skew rule as the two-phase ranks);
+    the only bare-key windows allowed are over the tiny bucket-summary
+    frame (those order by bucket, not the row column)."""
+    for case in [
         ("sample_systematic_stride", "hv", "bucket"),
         ("dq_sequence_gap_audit", "key", "bucket"),
         ("ts_stream_gap_audit", "us", "bucket"),
-    ]
-    for name, row_col, bucket_col in cases:
-        plan = plan_of(spark, name)
-        specs = re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
-        row_specs = [s for s in specs if row_col in s and bucket_col not in s]
-        # every window ordering by the row column must carry the bucket
-        # key; the only bare-key windows allowed are over the tiny
-        # bucket-summary frame (those order by bucket, not the row col)
-        assert not row_specs, f"{name}: raw window lost its bucket key: {row_specs}"
+    ]:
+        _raw_windows_carry_bucket(spark, *case)
 
 
 def test_round6_late_joins_never_cartesian(spark):
@@ -366,40 +350,23 @@ def test_round6_late_joins_never_cartesian(spark):
         "graph_degree_assortativity",
         "event_time_decay_attribution",
     ):
-        plan = plan_of(spark, name)
-        assert "CartesianProduct" not in plan, name
+        assert "CartesianProductExec" not in kinds(physical(spark, name)), name
 
 
 def test_fim_split_plan_is_shuffle_free(spark):
     """llm_fim_split_plan is pure per-row expression work — the plan
     must contain NO exchange and NO Python evaluation at all."""
-    plan = plan_of(spark, "llm_fim_split_plan")
-    assert "Exchange" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    walked = list(nodes(physical(spark, "llm_fim_split_plan")))
+    assert not [kind(n) for n in walked if kind(n).endswith("ExchangeExec") or is_python(n)]
 
 
 def test_phash_and_signal_use_arrow_not_rowwise(spark):
     for name, marker in (
-        ("mm_phash_dedup", "MapInPandas"),
-        ("udf_grouped_agg_median", "ArrowAggregatePython"),
+        ("mm_phash_dedup", "MapInPandasExec"),
+        ("udf_grouped_agg_median", "ArrowAggregatePythonExec"),
     ):
-        plan = plan_of(spark, name)
-        assert "BatchEvalPython" not in plan, name
-        assert marker in plan, f"{name}: expected {marker} in plan"
-
-
-
-# ---- shared bounded-subtree heuristic for the registry-wide lints ----------
-# SF_MARKERS / subtree_bounded moved to plans/lint.py (single source of
-# truth shared with bench.py's global-window warning attribution, so
-# the lint and the bench tail can't drift apart); marker semantics are
-# documented there.
-from project_fauna_spark.plans.lint import (
-    GLOBAL_WINDOW_ALLOWED,
-    SF_MARKERS,
-    global_windows,
-    subtree_bounded,
-)
+        k = kinds(physical(spark, name))
+        assert marker in k and "BatchEvalPythonExec" not in k, (name, k)
 
 
 def test_no_forced_broadcast_of_sf_scaling_tables(spark):
@@ -422,23 +389,15 @@ def test_no_forced_broadcast_of_sf_scaling_tables(spark):
     no SF-scaling TPC-H base column at all.  nation/region columns are
     not markers — those tables are fixed-size by construction.
     """
-    offenders = []
-    for name, (analyzed, _, _) in _registry_plans(spark).items():
-        stack = [analyzed]
-        while stack:
-            node = stack.pop()
-            if node.getClass().getSimpleName() == "ResolvedHint" and (
-                "broadcast" in node.hints().toString().lower()
-            ):
-                sub = node.child().toString()
-                if any(m in sub for m in SF_MARKERS) and not subtree_bounded(
-                    node.child()
-                ):
-                    offenders.append(name)
-            cs = node.children()
-            for i in range(cs.size()):
-                stack.append(cs.apply(i))
-    assert sorted(set(offenders)) == [], sorted(set(offenders))
+    offenders = {
+        name
+        for name, (analyzed, _, _) in _registry_plans(spark).items()
+        for node in nodes(analyzed)
+        if kind(node) == "ResolvedHint"
+        and "broadcast" in node.hints().toString().lower()
+        and sf_scaling(node.child())
+    }
+    assert sorted(offenders) == [], sorted(offenders)
 
 
 def test_no_global_window_over_sf_scaling_data(spark):
@@ -458,30 +417,22 @@ def test_no_global_window_over_sf_scaling_data(spark):
     This converts the per-query pins (`test_ccnet_buckets_has_no_
     global_window`, docstring promises in several operator modules) into a
     registry-wide lint, the same template as
-    test_no_forced_broadcast_of_sf_scaling_tables.
+    test_no_forced_broadcast_of_sf_scaling_tables.  plans.lint.
+    global_windows IS the detection logic, shared with bench.py's
+    warning attribution; window_ntile's SF-invariant global slice is
+    the one allowed name (GLOBAL_WINDOW_ALLOWED).
     """
-    # window_ntile's global ntile runs over the SF-invariant
-    # `o_orderkey < 5000` slice (the partitioned variant is computed
-    # alongside as the at-scale shape — see relational.py docstring);
-    # the slice references o_orderkey, so the marker heuristic can't
-    # see its boundedness.
-    # Single walk: plans.lint.global_windows IS the detection logic,
-    # shared verbatim with bench.py's warning attribution (ADVICE r9) —
-    # this test only applies it registry-wide and asserts zero offenders.
-    allowed = GLOBAL_WINDOW_ALLOWED
-    offenders = []
-    for name, (analyzed, _, _) in _registry_plans(spark).items():
-        if name in allowed:
-            continue
-        _, unbounded = global_windows(analyzed)
-        if unbounded:
-            offenders.append(name)
-    assert sorted(set(offenders)) == [], sorted(set(offenders))
+    offenders = [
+        name
+        for name, (analyzed, _, _) in _registry_plans(spark).items()
+        if name not in GLOBAL_WINDOW_ALLOWED and global_windows(analyzed)[1]
+    ]
+    assert offenders == [], offenders
 
 
 def test_no_full_width_scans_of_wide_tables(spark):
     """Repo invariant (round-8): every parquet scan of a WIDE table
-    (≥5 columns) must be column-pruned — ``ReadSchema`` narrower than
+    (≥5 columns) must be column-pruned — scan output narrower than
     the table — unless the operator provably consumes every column.
     At 100 TB an unpruned lineitem scan reads ~2× the bytes of the
     typical 5-6 column analytical projection; pruning is free when the
@@ -489,17 +440,15 @@ def test_no_full_width_scans_of_wide_tables(spark):
     projection (e.g. a ``select('*')`` passthrough before a join).
 
     This converts the ad-hoc end-of-round scan-width audits (CLAUDE.md
-    round-8 notes) into a registry-wide lint, parsing the cached
-    formatted physical plans: each ``Scan parquet`` block's
-    ``Output [N]`` against the table width from its ``Location`` line.
+    round-8 notes) into a registry-wide lint over the cached physical
+    plans: each scan's ``output()`` width against the width of the
+    table named by its ``relation().location()``.
 
     Allowlist — operators whose semantics consume the full row:
     - link_blocked_records: Fellegi-Sunter linkage blocks on
       (p_brand, p_size) and compares p_type/p_name/p_retailprice with
       p_partkey as the pair id — all 6 of part's 6 columns.
     """
-    import re
-
     # Widths come from the LIVE parquet schemas, not a hard-coded map:
     # the driver regenerates /root/testdata between rounds, and a table
     # that gained or lost a column would make a frozen map silently
@@ -513,19 +462,16 @@ def test_no_full_width_scans_of_wide_tables(spark):
     }
     widths = {t: n for t, n in all_widths.items() if n >= 5}
     allowed = {("link_blocked_records", "part")}
-    loc_pat = re.compile(r"Location:.*?/(\w+)\.parquet")
-    offenders = []
+    offenders = set()
     for name, (_, _, plan) in _registry_plans(spark).items():
-        for m in re.finditer(r"\(\d+\) Scan parquet[^\n]*\n((?:[^\n]+\n)+)", plan):
-            block = m.group(1)
-            loc = loc_pat.search(block)
-            out = re.search(r"Output \[(\d+)\]", block)
-            if not (loc and out):
-                continue
-            table, n = loc.group(1), int(out.group(1))
-            if table in widths and n >= widths[table] and (name, table) not in allowed:
-                offenders.append((name, table, n))
-    assert sorted(set(offenders)) == [], sorted(set(offenders))
+        for scan in of_kind(plan, "FileSourceScanExec"):
+            root = seq(scan.relation().location().rootPaths())
+            m = re.search(r"/(\w+)\.parquet", root[0].toString()) if root else None
+            n = scan.output().size()
+            if m and m.group(1) in widths and n >= widths[m.group(1)]:
+                if (name, m.group(1)) not in allowed:
+                    offenders.add((name, m.group(1), n))
+    assert sorted(offenders) == [], sorted(offenders)
 
 
 def test_no_cartesian_of_two_sf_scaling_frames(spark):
@@ -537,20 +483,15 @@ def test_no_cartesian_of_two_sf_scaling_frames(spark):
     generalizes the per-query CartesianProduct pins to the whole
     registry, with the same bounded-subtree rule as the broadcast and
     global-window lints."""
-    def scaling(side):
-        return any(m in side.toString() for m in SF_MARKERS) and not subtree_bounded(side)
-
-    offenders = []
-    for name, (_, optimized, _) in _registry_plans(spark).items():
-        stack = [optimized]
-        while stack:
-            node = stack.pop()
-            if node.getClass().getSimpleName() == "Join":
-                jt = node.joinType().toString()
-                if jt == "Cross" or (jt == "Inner" and node.condition().isEmpty()):
-                    if scaling(node.left()) and scaling(node.right()):
-                        offenders.append(name)
-            cs = node.children()
-            for i in range(cs.size()):
-                stack.append(cs.apply(i))
-    assert sorted(set(offenders)) == [], sorted(set(offenders))
+    offenders = {
+        name
+        for name, (_, optimized, _) in _registry_plans(spark).items()
+        for node in of_kind(optimized, "Join")
+        if (
+            node.joinType().toString() == "Cross"
+            or (node.joinType().toString() == "Inner" and node.condition().isEmpty())
+        )
+        and sf_scaling(node.left())
+        and sf_scaling(node.right())
+    }
+    assert sorted(offenders) == [], sorted(offenders)

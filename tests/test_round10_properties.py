@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from project_fauna_spark.plans import QUERIES
+from project_fauna_spark.plans.lint import expressions, kind, literal_aliases, plan_of
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
@@ -41,13 +42,12 @@ def test_percentile_bound_true_at_every_sf(spark):
 
 
 def test_percentile_bound_not_literal_in_plan(spark):
-    """Plan honesty: no boolean column may be a constant-folded
-    ``true AS <col>``, and the sketch must actually be computed."""
-    df = QUERIES["semi_percentile_approx"](spark, SF_SMOKE)
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    for col in ("p50_in_bounds", "p95_in_bounds", "p99_in_bounds"):
-        assert f"true AS {col}" not in plan, col
-    assert "approx_percentile" in plan or "percentile_approx" in plan
+    """Plan honesty: no boolean column may be a constant-folded alias
+    over a literal, and the sketch must actually be computed."""
+    plan = plan_of(QUERIES["semi_percentile_approx"](spark, SF_SMOKE), "optimizedPlan")
+    cols = {"p50_in_bounds", "p95_in_bounds", "p99_in_bounds"}
+    assert not literal_aliases(plan) & cols
+    assert "ApproximatePercentile" in {kind(e) for e in expressions(plan)}
 
 
 def test_percentile_bound_flips_on_estimator_corruption(spark):

@@ -18,15 +18,11 @@ changed for performance; results must be provably unchanged):
 
 from __future__ import annotations
 
-import io
-import re
-from contextlib import redirect_stdout
-
 import duckdb
 from pyspark.sql import functions as F
 
 from project_fauna_spark.plans import QUERIES
-from project_fauna_spark.plans.lint import physical_nodes
+from project_fauna_spark.plans.lint import kind, kinds, names, nodes, plan_of, tree
 from project_fauna_spark.plans.registry import ORACLE
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -36,15 +32,6 @@ def _release():
     from project_fauna_spark.cache import release_cached
 
     release_cached()
-
-
-def _plan_of(spark, name: str) -> str:
-    df = QUERIES[name](spark, SF_SMOKE)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    _release()
-    return buf.getvalue()
 
 
 def _typed(rows):
@@ -85,11 +72,11 @@ def _pins(df) -> list:
     by several consumers is scanned once per read, all sharing one
     cache builder)."""
     pins = []
-    for node in physical_nodes(df._jdf.queryExecution().executedPlan()):
-        if node.getClass().getSimpleName() == "InMemoryTableScanExec":
-            rel = node.relation()
-            if not any(rel.cacheBuilder().equals(p.cacheBuilder()) for p in pins):
-                pins.append(rel)
+    for rel in nodes(plan_of(df)):
+        if kind(rel) == "InMemoryRelation" and not any(
+            rel.cacheBuilder().equals(p.cacheBuilder()) for p in pins
+        ):
+            pins.append(rel)
     return pins
 
 
@@ -116,27 +103,39 @@ def test_survivorship_ratio_prune_in_join_condition(spark):
     aggregation), not as a post-filter: the candidate-pair shuffle is
     what it exists to shrink."""
     df = QUERIES["llm_dedup_survivorship_report"](spark, SF_SMOKE)
-    optimized = df._jdf.queryExecution().optimizedPlan().toString()
-    _release()
-    joins = [
-        b for b in re.split(r"(?=Join )", optimized) if b.startswith("Join ")
+    conditions = [
+        j.condition().get()
+        for j in nodes(plan_of(df, "optimizedPlan"))
+        if kind(j) == "Join" and j.condition().isDefined()
     ]
+    _release()
     assert any(
-        "<=" in b.splitlines()[0] and "doc_id" in b.splitlines()[0]
-        for b in joins
-    ), optimized[:4000]
+        "LessThanOrEqual" in {kind(e) for e in tree(c)} and "doc_id" in names(c)
+        for c in conditions
+    ), [c.toString() for c in conditions]
 
 
 def test_decontaminate_no_pin_split_below_explode(spark):
     """No cached frame anywhere (the corpus-sized explode pin is gone)
-    and the eval/train modulo filters must appear under BOTH parquet
-    scans (pushed below the explode), so each side shingles only its
-    own partition of the corpus."""
-    plan = _plan_of(spark, "llm_decontaminate")
-    assert "InMemoryTableScan" not in plan
-    assert "InMemoryRelation" not in plan
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 2
-    assert len(re.findall(r"% 10\)", plan)) >= 2
+    and the eval/train modulo filters must sit in filters over BOTH
+    parquet scans (pushed below the explode), so each side shingles
+    only its own partition of the corpus."""
+    plan = plan_of(QUERIES["llm_decontaminate"](spark, SF_SMOKE))
+    _release()
+    k = kinds(plan)
+    assert "InMemoryRelation" not in k and "InMemoryTableScanExec" not in k, k
+    assert k["FileSourceScanExec"] == 2, k
+    mod10 = [
+        f
+        for f in nodes(plan)
+        if kind(f) == "FilterExec"
+        and kind(f.child()) == "FileSourceScanExec"
+        and any(
+            kind(e) == "Remainder" and kind(e.right()) == "Literal" and e.right().value() == 10
+            for e in tree(f.condition())
+        )
+    ]
+    assert len(mod10) == 2, k
 
 
 def test_decontaminate_repeat_invocation_stable(spark):

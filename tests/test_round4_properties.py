@@ -4,6 +4,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from project_fauna_spark.plans.lint import kind, kinds, names, nodes, plan_of, seq
+
 
 def test_drop_hot_shingles_removes_only_hot_hashes(spark):
     """A hash appearing in > MAX_SHINGLE_DF docs leaves the index; every
@@ -64,50 +66,51 @@ def test_release_cached_unpersists_tracked_frames(spark):
     assert not _TRACKED
 
 
-def _plan(spark, name):
-    import io
-    from contextlib import redirect_stdout
-
+def _physical(spark, name):
     from project_fauna_spark.plans import QUERIES
 
     df = QUERIES[name](spark, "/root/testdata/sf0.001")
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+    return plan_of(df)
 
 
 def test_df_cap_is_broadcast_anti_join(spark):
     """The hot-shingle removal must not reshuffle the index: the df>K
     set joins in as a broadcast LeftAnti."""
-    plan = _plan(spark, "dedup_ngram_jaccard")
-    assert "BroadcastHashJoin LeftAnti BuildRight" in plan
-    assert "CartesianProduct" not in plan
+    plan = _physical(spark, "dedup_ngram_jaccard")
+    assert ("LeftAnti", "BuildRight") in {
+        (n.joinType().toString(), n.buildSide().toString())
+        for n in nodes(plan)
+        if kind(n) == "BroadcastHashJoinExec"
+    }
+    assert "CartesianProductExec" not in kinds(plan)
 
 
 def test_contamination_broadcasts_eval_grams(spark):
-    plan = _plan(spark, "llm_contamination_overlap")
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
+    k = kinds(_physical(spark, "llm_contamination_overlap"))
+    assert "BroadcastHashJoinExec" in k
+    assert "CartesianProductExec" not in k
 
 
 def test_cluster_representative_no_cartesian_no_python(spark):
-    plan = _plan(spark, "dedup_cluster_representative")
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
+    k = kinds(_physical(spark, "dedup_cluster_representative"))
+    assert "CartesianProductExec" not in k
+    assert "BatchEvalPythonExec" not in k
 
 
 def test_incremental_dedup_shuffles_digests_only(spark):
     """The join key is the 16-byte md5 digest; text must be pruned out
-    before any exchange (ReadSchema carries doc_id + text only at the
-    scan, and no exchange row carries the text column)."""
-    plan = _plan(spark, "dedup_incremental_base_vs_new")
-    assert "CartesianProduct" not in plan
-    # Every Exchange in the plan happens after the digest projection.
-    import re
-
-    for m in re.finditer(r"Exchange hashpartitioning\((\w+)", plan):
-        assert m.group(1) in ("dg", "doc_id"), plan[m.start() : m.start() + 120]
+    before any exchange: every hash exchange partitions on the digest
+    (or doc_id), and no exchange row carries the text column."""
+    plan = _physical(spark, "dedup_incremental_base_vs_new")
+    assert "CartesianProductExec" not in kinds(plan)
+    exchanges = [n for n in nodes(plan) if kind(n) == "ShuffleExchangeExec"]
+    assert exchanges
+    for x in exchanges:
+        assert "text" not in {a.name() for a in seq(x.output())}
+        part = x.outputPartitioning()
+        if kind(part) == "HashPartitioning":
+            key = seq(part.expressions())[0]
+            assert kind(key) == "AttributeReference" and key.name() in ("dg", "doc_id"), key
 
 
 def test_no_complex_types_at_graded_edges(spark):
@@ -134,9 +137,10 @@ def test_no_complex_types_at_graded_edges(spark):
 def test_partitioned_read_prunes_partitions(spark):
     """The lang filter must land in PartitionFilters (directory pruning),
     not as a post-scan data filter."""
-    plan = _plan(spark, "ingest_partitioned_pruning")
-    assert "PartitionFilters" in plan
-    import re
-
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and "lang" in m.group(1), plan[:2000]
+    scans = [
+        n
+        for n in nodes(_physical(spark, "ingest_partitioned_pruning"))
+        if kind(n) == "FileSourceScanExec"
+    ]
+    pruned = {c for s in scans for f in seq(s.partitionFilters()) for c in names(f)}
+    assert "lang" in pruned, pruned

@@ -12,38 +12,26 @@
 
 from __future__ import annotations
 
-import io
-import re
-from contextlib import redirect_stdout
-
 from pyspark.sql import functions as F
 
 from project_fauna_spark.plans import QUERIES
+from project_fauna_spark.plans.lint import kind, kinds, names, nodes, plan_of
 
 SF = "/root/testdata/sf0.01"
 SF_SMOKE = "/root/testdata/sf0.001"
 
 
-def plan_of(spark, name: str) -> str:
-    df = QUERIES[name](spark, SF)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
-
-
 def test_bucketed_join_has_no_exchange_at_join(spark):
-    plan = plan_of(spark, "join_bucketed_colocate")
-    assert "SortMergeJoin" in plan
-    assert plan.count("Bucketed: true") == 2, "both scans must use bucketing"
+    plan = plan_of(QUERIES["join_bucketed_colocate"](spark, SF))
+    assert "SortMergeJoinExec" in kinds(plan)
+    scans = [n for n in nodes(plan) if kind(n) == "FileSourceScanExec"]
+    assert [s.bucketedScan() for s in scans] == [True, True], "both scans must use bucketing"
     # Exactly one Exchange node — the post-join partial-agg shuffle on
     # o_orderpriority; the join inputs themselves are satisfied by the
     # bucketed layout.
-    nodes = re.findall(r"\(\d+\) Exchange", plan)
-    assert len(set(nodes)) == 1, plan
-    exchange_detail = plan.split("Exchange")[-1][:200]
-    assert "o_orderkey" not in exchange_detail
-    assert "l_orderkey" not in exchange_detail
+    (exchange,) = [n for n in nodes(plan) if kind(n) == "ShuffleExchangeExec"]
+    keys = names(exchange.outputPartitioning())
+    assert keys == {"o_orderpriority"}, keys
 
 
 def test_pca_covariance_matches_numpy(spark):

@@ -9,9 +9,6 @@ rule audit's rates reconcile with its own counts.
 
 from __future__ import annotations
 
-import io
-from contextlib import redirect_stdout
-
 from project_fauna_spark.operators.llm_pipeline import _CURRICULUM_BUDGET
 from project_fauna_spark.operators.similarity import (
     _pq_codeword,
@@ -20,6 +17,7 @@ from project_fauna_spark.operators.similarity import (
     _PQ_M,
 )
 from project_fauna_spark.plans import QUERIES
+from project_fauna_spark.plans.lint import kinds, plan_of
 
 SF = "/root/testdata/sf0.01"
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -176,10 +174,6 @@ def test_cross_field_rules_reconcile(spark):
 
 
 def test_pq_plan_broadcasts_codebook(spark):
-    df = QUERIES["sim_pq_adc"](spark, SF_SMOKE)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
+    k = kinds(plan_of(QUERIES["sim_pq_adc"](spark, SF_SMOKE)))
+    assert "BroadcastHashJoinExec" in k
+    assert "CartesianProductExec" not in k

@@ -2,25 +2,13 @@
 
 from __future__ import annotations
 
-import io
-import re
-from contextlib import redirect_stdout
-
-import pytest
-
 from pyspark.sql import functions as F
 
 from project_fauna_spark.io import load_table
 from project_fauna_spark.operators.skew import key_skew_profile, salted_join
+from project_fauna_spark.plans.lint import kinds, plan_of
 
 SF = "/root/testdata/sf0.01"
-
-
-def _plan(df) -> str:
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
 
 
 def test_salted_join_matches_plain_join(spark):
@@ -66,8 +54,8 @@ def test_bucketed_join_is_exchange_free(spark, tmp_path):
         bo = spark.table("b_orders")
         bc = spark.table("b_customer")
         joined = bo.join(bc, bo.o_custkey == bc.c_custkey).select("o_orderkey", "c_name")
-        plan = _plan(joined)
-        assert not re.findall(r"\(\d+\) Exchange", plan), plan
+        k = kinds(plan_of(joined))
+        assert "ShuffleExchangeExec" not in k, k
         assert joined.count() == orders.join(cust, orders.o_custkey == cust.c_custkey).count()
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")

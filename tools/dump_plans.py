@@ -9,15 +9,18 @@ for each headline query (or the subset given).  The explain output is the INITIA
 re-planning; Exchange counts, join strategies, PushedFilters and
 Python-eval nodes are all visible at this stage.
 
-Also prints a one-line plan summary per query (exchanges, joins,
-python-eval nodes) so before/after diffs are quick to read.
+Also prints a one-line plan summary per query — how many nodes of
+each physical class ``plans.lint.nodes`` walks, subqueries and cached
+plans included — so before/after diffs are quick to read.  The
+registry-wide audit is the same run over every name:
+
+    python tools/dump_plans.py OUT_DIR audit $(python -m project_fauna_spark --list-queries)
 """
 
 from __future__ import annotations
 
 import io
 import os
-import re
 import sys
 from contextlib import redirect_stdout
 
@@ -26,34 +29,16 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from project_fauna_spark.session import get_spark
 from project_fauna_spark.cache import release_cached
 from project_fauna_spark.plans import QUERIES
+from project_fauna_spark.plans.lint import kinds, plan_of
 from bench import HEADLINE
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def summarize(text: str) -> str:
-    counts = {}
-    for pat, label in [
-        (r"\bExchange\b", "Exchange"),
-        (r"\bReusedExchange\b", "ReusedExchange"),
-        (r"\bBroadcastExchange\b", "BroadcastExchange"),
-        (r"\bSortMergeJoin\b", "SMJ"),
-        (r"\bBroadcastHashJoin\b", "BHJ"),
-        (r"\bShuffledHashJoin\b", "SHJ"),
-        (r"\bBroadcastNestedLoopJoin\b", "BNLJ"),
-        (r"\bCartesianProduct\b", "Cartesian"),
-        (r"\bBatchEvalPython\b", "BatchEvalPython"),
-        (r"\bArrowEvalPython\b", "ArrowEvalPython"),
-        (r"\bMapInArrow\b|\bMapInPandas\b|\bPythonMapInArrow\b", "MapInArrow/Pandas"),
-        (r"\bWindowGroupLimit\b", "WindowGroupLimit"),
-        (r"\bWindow\b", "Window"),
-        (r"\bSort\b", "Sort"),
-        (r"\bInMemoryTableScan\b", "InMemoryScan"),
-    ]:
-        n = len(re.findall(pat, text))
-        if n:
-            counts[label] = n
-    return ", ".join(f"{k}={v}" for k, v in counts.items())
+def summarize(plan) -> str:
+    """``Class=count`` for every physical node class in ``plan``, most
+    frequent first."""
+    return ", ".join(f"{k}={v}" for k, v in kinds(plan).most_common())
 
 
 def main() -> None:
@@ -72,15 +57,15 @@ def main() -> None:
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")
-            text = buf.getvalue()
+            text, summary = buf.getvalue(), summarize(plan_of(df))
         except Exception as exc:  # noqa: BLE001
-            text = f"PLAN FAILED: {exc}\n"
+            text, summary = f"PLAN FAILED: {exc}\n", "PLAN FAILED"
         finally:
             release_cached()
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(text)
-        print(f"{name}: {summarize(text)}", flush=True)
+        print(f"{name}: {summary}", flush=True)
     spark.stop()
 
 
