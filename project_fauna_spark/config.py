@@ -12,12 +12,20 @@ import argparse
 import os
 
 
+def _positive_int(text: str) -> int:
+    n = int(text)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be at least 1, got {n}")
+    return n
+
+
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(
         prog="fauna-spark-etl", description="Spark Animals ETL (distributed)"
     )
     p.add_argument("--base-url", default=os.getenv("API_BASE_URL", "http://localhost:3123"))
-    p.add_argument("--concurrency", type=int, default=int(os.getenv("CONCURRENCY", "8")))
+    # A string default goes through ``type`` too, so CONCURRENCY is checked.
+    p.add_argument("--concurrency", type=_positive_int, default=os.getenv("CONCURRENCY", "8"))
     p.add_argument("--batch-size", type=int, default=int(os.getenv("BATCH_SIZE", "100")))
     p.add_argument("--retries", type=int, default=int(os.getenv("MAX_RETRIES", "6")))
     p.add_argument(

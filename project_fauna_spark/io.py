@@ -47,16 +47,24 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+def repair_ts(df: DataFrame, col: str) -> DataFrame:
+    """``df`` with timestamp column ``col`` as a session-UTC
+    ``TimestampType``, whichever encoding the reader resolved it to
+    (batch or streaming): ``bigint`` nanoseconds or ``timestamp_ntz``."""
+    dtype = dict(df.dtypes).get(col)
+    if dtype == "bigint":
+        return df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
+    if dtype == "timestamp_ntz":
+        return df.withColumn(col, F.col(col).cast("timestamp"))
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one harness table, repairing nanosecond timestamp columns."""
     configure_session(spark)
     df = spark.read.parquet(table_path(sf_dir, name))
     for col in _NANOS_TS_COLS.get(name, []):
-        dtype = dict(df.dtypes).get(col)
-        if dtype == "bigint":
-            df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
-        elif dtype == "timestamp_ntz":
-            df = df.withColumn(col, F.col(col).cast("timestamp"))
+        df = repair_ts(df, col)
     return df
 
 

@@ -1,2 +1,2 @@
 """Operator library: each module registers named queries into
-:mod:`project_fauna_spark.plans.registry`."""
+:mod:`project_fauna_spark.registry`."""

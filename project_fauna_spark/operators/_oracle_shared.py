@@ -1,7 +1,10 @@
 """Oracle-SQL fragments shared across operator modules.
 
-Registers no queries: operator modules share SQL fragments through
-this module instead of importing one another.
+Registers no queries: operator modules share SQL through this module
+instead of importing one another.  That includes whole oracles other
+oracles splice (``SQL_NGRAM_JACCARD``, ``SQL_ANN_IVF``,
+``SQL_CC_COMPONENTS``), so every oracle is a plain string when its
+query registers and each operator module imports on its own.
 
 DuckDB rendering of the reference epoch→ISO pipeline
 (/root/reference/src/animals_etl/utils.py:20-48): float-seconds
@@ -100,6 +103,30 @@ SQL_RARE_SHINGLES = f"""
 """
 
 
+# The exact df-capped 3-gram Jaccard near-dup pairs (the
+# dedup_ngram_jaccard oracle); the dedup, LLM-quality and ML operators
+# that grade against the same ground truth splice this text.
+SQL_NGRAM_JACCARD = f"""
+    WITH sh AS ({SQL_SHINGLES}),
+    {SQL_RARE_SHINGLES},
+    inter AS (
+      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+             len(list_intersect(ar.rsgl, br.rsgl)) AS n_inter_rare,
+             len(list_intersect(a.sgl, b.sgl)) AS n_inter,
+             len(a.sgl) AS n_a, len(b.sgl) AS n_b
+      FROM sh a JOIN sh b ON a.doc_id < b.doc_id
+      JOIN rare ar ON ar.doc_id = a.doc_id
+      JOIN rare br ON br.doc_id = b.doc_id
+      WHERE len(list_intersect(ar.rsgl, br.rsgl)) > 0
+    )
+    SELECT doc_a, doc_b,
+           CAST(n_inter AS DOUBLE) / (n_a + n_b - n_inter) AS jaccard
+    FROM inter
+    WHERE CAST(n_inter_rare AS DOUBLE) / (n_a + n_b - n_inter_rare) >= 0.5
+      AND CAST(n_inter AS DOUBLE) / (n_a + n_b - n_inter) >= 0.5
+    """
+
+
 # Full connected-components-of-the-near-dup-graph oracle (the
 # dedup_connected_components output), shared so downstream operators
 # (cluster canonicalization) can grade against the exact same component
@@ -174,6 +201,46 @@ def _ivf_sql_values() -> str:
         lits = ", ".join(repr(x) for x in _ivf_centroid(k))
         rows.append(f"({k}, [{lits}])")
     return ", ".join(rows)
+
+
+# IVF approximate nearest neighbors (the sim_ann_ivf oracle), spliced
+# by the recall and nDCG audits of the same retriever.
+SQL_ANN_IVF = f"""
+    WITH cents(k, c) AS (VALUES {_ivf_sql_values()}),
+    e AS (
+      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
+      FROM embeddings
+    ),
+    scored AS (
+      SELECT e.vec_id, e.emb, cents.k,
+             list_reduce(list_transform(range(1, len(e.emb)+1),
+                                        i -> e.emb[i] * cents.c[i]),
+                         (s, v) -> s + v) AS dp
+      FROM e CROSS JOIN cents
+    ),
+    assigned AS (
+      SELECT vec_id, emb, k AS cell FROM (
+        SELECT *, row_number() OVER (PARTITION BY vec_id
+                                     ORDER BY dp DESC, k DESC) AS rn
+        FROM scored) WHERE rn = 1
+    ),
+    probes AS (
+      SELECT vec_id AS query_id, emb AS qemb, k AS cell FROM (
+        SELECT *, row_number() OVER (PARTITION BY vec_id
+                                     ORDER BY dp DESC, k DESC) AS rn
+        FROM scored WHERE vec_id % 50 = 0) WHERE rn <= {_IVF_NPROBE}
+    ),
+    cand AS (
+      SELECT p.query_id, a.vec_id AS neighbor_id, a.cell,
+             {SQL_COS.format(a='p.qemb', b='a.emb')} AS cos
+      FROM probes p JOIN assigned a USING (cell)
+      WHERE a.vec_id <> p.query_id
+    )
+    SELECT query_id, neighbor_id, cell, cos, rank FROM (
+      SELECT *, CAST(row_number() OVER (PARTITION BY query_id
+                                        ORDER BY cos DESC, neighbor_id) AS INT) AS rank
+      FROM cand) WHERE rank <= 5
+    """
 
 
 def sql_h32(expr: str, salt: str) -> str:

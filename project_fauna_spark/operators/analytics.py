@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from project_fauna_spark.io import load_table
-from project_fauna_spark.plans.registry import dsum, register, sql_dsum
+from project_fauna_spark.registry import dsum, register, sql_dsum
 
 
 @register(

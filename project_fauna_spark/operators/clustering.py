@@ -30,7 +30,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions 
 from project_fauna_spark.functions.centroids import FOLD_K as _FOLD_K
 from project_fauna_spark.io import load_table
 from project_fauna_spark.operators._oracle_shared import _IVF_K, _ivf_centroid, _ivf_sql_values
-from project_fauna_spark.plans.registry import register
+from project_fauna_spark.registry import register
 
 _SQL_ZIPADD = "list_transform(range(1, len(a)+1), k -> a[k] + b[k])"
 _SQL_SQDIST = """

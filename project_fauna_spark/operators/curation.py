@@ -23,7 +23,7 @@ these, they extend the north star's LLM-pipeline surface):
 * ``link_blocked_records`` — Fellegi–Sunter-shaped record linkage:
   blocked candidate generation + integer agreement-weight scoring.
 
-Float-parity per ``plans/registry``: integer or decimal-accumulated
+Float-parity per ``registry``: integer or decimal-accumulated
 aggregates at compared edges, per-row IEEE double arithmetic only,
 index-ordered vector folds, unique tie-breaks on every window.
 """
@@ -36,7 +36,7 @@ from project_fauna_spark.cache import cached
 from project_fauna_spark.io import load_table
 from project_fauna_spark.operators._oracle_shared import sql_token_grams_cte
 from project_fauna_spark.operators._oracle_shared import _IVF_K, _ivf_centroid
-from project_fauna_spark.plans.registry import register, sql_davg
+from project_fauna_spark.registry import register, sql_davg
 
 # Shared k-token-gram helper lives in functions/shingles (non-registering);
 # aliased here for the existing call sites and oracle f-strings.

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from project_fauna_spark.cache import cached
 from project_fauna_spark.functions.shingles import (
+    GRAM_K as _GRAM_K,
     drop_hot_shingles,
     shingle_hashes,
     shingles,
@@ -39,11 +40,13 @@ from project_fauna_spark.io import load_table
 from project_fauna_spark.operators._oracle_shared import (
     SQL_CC_COMPONENTS,
     SQL_COS,
+    SQL_NGRAM_JACCARD,
     SQL_RARE_SHINGLES as _SQL_RARE_SHINGLES,
     SQL_SHINGLES as _SQL_SHINGLES,
     sql_h32 as _sql_h32,
+    sql_token_grams_cte,
 )
-from project_fauna_spark.plans.registry import register
+from project_fauna_spark.registry import register
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -110,25 +113,7 @@ def dedup_exact_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_ngram_jaccard",
-    oracle=f"""
-    WITH sh AS ({_SQL_SHINGLES}),
-    {_SQL_RARE_SHINGLES},
-    inter AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             len(list_intersect(ar.rsgl, br.rsgl)) AS n_inter_rare,
-             len(list_intersect(a.sgl, b.sgl)) AS n_inter,
-             len(a.sgl) AS n_a, len(b.sgl) AS n_b
-      FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-      JOIN rare ar ON ar.doc_id = a.doc_id
-      JOIN rare br ON br.doc_id = b.doc_id
-      WHERE len(list_intersect(ar.rsgl, br.rsgl)) > 0
-    )
-    SELECT doc_a, doc_b,
-           CAST(n_inter AS DOUBLE) / (n_a + n_b - n_inter) AS jaccard
-    FROM inter
-    WHERE CAST(n_inter_rare AS DOUBLE) / (n_a + n_b - n_inter_rare) >= 0.5
-      AND CAST(n_inter AS DOUBLE) / (n_a + n_b - n_inter) >= 0.5
-    """,
+    oracle=SQL_NGRAM_JACCARD,
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram Jaccard near-dup pairs (threshold 0.5).
@@ -220,11 +205,8 @@ N_BANDS = N_PERM // BAND_SIZE
 
 
 def _minhash_lsh_bound_oracle() -> str:
-    from project_fauna_spark.plans.registry import ORACLE
-
-    truth_sql = ORACLE["dedup_ngram_jaccard"]
     return f"""
-    SELECT CAST((SELECT COUNT(*) FROM ({truth_sql}) t) AS BIGINT) AS n_true_pairs,
+    SELECT CAST((SELECT COUNT(*) FROM ({SQL_NGRAM_JACCARD}) t) AS BIGINT) AS n_true_pairs,
            TRUE AS lsh_all_verified,
            TRUE AS lsh_recall_ge_half,
            TRUE AS minhash_est_bounded
@@ -341,7 +323,7 @@ def _lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("jaccard") >= 0.5)
 
 
-@register("dedup_minhash_lsh", oracle_builder=_minhash_lsh_bound_oracle)
+@register("dedup_minhash_lsh", oracle=_minhash_lsh_bound_oracle())
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(32 perms) + LSH(8 bands × 4 rows) near-dup candidates.
 
@@ -879,7 +861,10 @@ def _minhash_md5_oracle() -> str:
     """
 
 
-@register("dedup_minhash_md5", oracle=_minhash_md5_oracle())
+_SQL_MINHASH_MD5 = _minhash_md5_oracle()
+
+
+@register("dedup_minhash_md5", oracle=_SQL_MINHASH_MD5)
 def dedup_minhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup candidates on a PORTABLE hash — the
     oracle-checkable twin of ``dedup_minhash_lsh`` (which uses
@@ -1201,18 +1186,13 @@ def dedup_incremental_base_vs_new(spark: SparkSession, sf_dir: str) -> DataFrame
 # Recall audit composes the two dedup oracles verbatim — candidate
 # generation (MinHash band collisions) scored against the exact
 # df-capped Jaccard ground truth.  Both oracle strings are WITH-queries
-# (DuckDB accepts them as FROM-subqueries); the oracle is built via
-# oracle_builder once the whole registry has loaded.
+# (DuckDB accepts them as FROM-subqueries).
 
 
 def _recall_audit_oracle() -> str:
-    from project_fauna_spark.plans.registry import ORACLE
-
-    exact_sql = ORACLE["dedup_ngram_jaccard"]
-    mh_sql = ORACLE["dedup_minhash_md5"]
     return f"""
-    WITH exact_pairs AS (SELECT doc_a, doc_b FROM ({exact_sql}) x),
-    cand_pairs AS (SELECT DISTINCT doc_a, doc_b FROM ({mh_sql}) m)
+    WITH exact_pairs AS (SELECT doc_a, doc_b FROM ({SQL_NGRAM_JACCARD}) x),
+    cand_pairs AS (SELECT DISTINCT doc_a, doc_b FROM ({_SQL_MINHASH_MD5}) m)
     SELECT (SELECT COUNT(*) FROM exact_pairs) AS n_exact,
            (SELECT COUNT(*) FROM cand_pairs) AS n_candidates,
            (SELECT COUNT(*) FROM exact_pairs e
@@ -1229,7 +1209,7 @@ def _recall_audit_oracle() -> str:
 
 @register(
     "dedup_minhash_recall_audit",
-    oracle_builder=_recall_audit_oracle,
+    oracle=_recall_audit_oracle(),
 )
 def dedup_minhash_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH tuning audit: what fraction of the exact near-dup pairs does
@@ -1280,9 +1260,37 @@ def dedup_minhash_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
+def _threshold_sweep_oracle() -> str:
+    return f"""
+    WITH sh AS ({_SQL_SHINGLES}),
+    {_SQL_RARE_SHINGLES},
+    inter AS (
+      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+             len(list_intersect(ar.rsgl, br.rsgl)) AS n_inter_rare,
+             len(list_intersect(a.sgl, b.sgl)) AS ni,
+             len(a.sgl) + len(b.sgl) - len(list_intersect(a.sgl, b.sgl)) AS nu,
+             len(a.sgl) AS n_a, len(b.sgl) AS n_b
+      FROM sh a JOIN sh b ON a.doc_id < b.doc_id
+      JOIN rare ar ON ar.doc_id = a.doc_id
+      JOIN rare br ON br.doc_id = b.doc_id
+      WHERE len(list_intersect(ar.rsgl, br.rsgl)) > 0
+    ),
+    verified AS (
+      SELECT doc_a, doc_b, ni, nu FROM inter
+      WHERE n_inter_rare * 10 >= (n_a + n_b - n_inter_rare) * 3
+    ),
+    sweep(t) AS (VALUES (3), (5), (7))
+    SELECT CAST(t AS DOUBLE) / 10.0 AS threshold,
+           CAST(COUNT(*) AS BIGINT) AS n_pairs,
+           CAST(COUNT(DISTINCT doc_b) AS BIGINT) AS n_docs_dropped
+    FROM sweep JOIN verified ON ni * 10 >= nu * t
+    GROUP BY t
+    """
+
+
 @register(
     "dedup_threshold_sweep",
-    oracle_builder=lambda: _threshold_sweep_oracle(),
+    oracle=_threshold_sweep_oracle(),
 )
 def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup policy sweep: exact near-dup pair count and documents-
@@ -1375,39 +1383,6 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _threshold_sweep_oracle() -> str:
-    from project_fauna_spark.operators._oracle_shared import (
-        SQL_RARE_SHINGLES as _RARE,
-        SQL_SHINGLES as _SH,
-    )
-
-    return f"""
-    WITH sh AS ({_SH}),
-    {_RARE},
-    inter AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             len(list_intersect(ar.rsgl, br.rsgl)) AS n_inter_rare,
-             len(list_intersect(a.sgl, b.sgl)) AS ni,
-             len(a.sgl) + len(b.sgl) - len(list_intersect(a.sgl, b.sgl)) AS nu,
-             len(a.sgl) AS n_a, len(b.sgl) AS n_b
-      FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-      JOIN rare ar ON ar.doc_id = a.doc_id
-      JOIN rare br ON br.doc_id = b.doc_id
-      WHERE len(list_intersect(ar.rsgl, br.rsgl)) > 0
-    ),
-    verified AS (
-      SELECT doc_a, doc_b, ni, nu FROM inter
-      WHERE n_inter_rare * 10 >= (n_a + n_b - n_inter_rare) * 3
-    ),
-    sweep(t) AS (VALUES (3), (5), (7))
-    SELECT CAST(t AS DOUBLE) / 10.0 AS threshold,
-           CAST(COUNT(*) AS BIGINT) AS n_pairs,
-           CAST(COUNT(DISTINCT doc_b) AS BIGINT) AS n_docs_dropped
-    FROM sweep JOIN verified ON ni * 10 >= nu * t
-    GROUP BY t
-    """
-
-
 # --------------------------------------------------------------------------
 # dedup_family_size_histogram — how big are the duplicate families?
 # --------------------------------------------------------------------------
@@ -1468,9 +1443,6 @@ _BP_TOP = 20
 
 
 def _boilerplate_oracle() -> str:
-    from project_fauna_spark.functions.shingles import GRAM_K as _GRAM_K
-    from project_fauna_spark.operators._oracle_shared import sql_token_grams_cte
-
     return f"""
     WITH g AS ({sql_token_grams_cte(_GRAM_K)}),
     agg AS (
@@ -1487,7 +1459,7 @@ def _boilerplate_oracle() -> str:
     """
 
 
-@register("dedup_boilerplate_ngrams", oracle_builder=_boilerplate_oracle)
+@register("dedup_boilerplate_ngrams", oracle=_boilerplate_oracle())
 def dedup_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The top-20 BOILERPLATE n-grams: 8-token windows ranked by how
     many distinct documents contain them — headers, footers, license
@@ -1546,7 +1518,7 @@ def _component_histogram_oracle() -> str:
 
 
 @register(
-    "dedup_component_size_histogram", oracle_builder=_component_histogram_oracle
+    "dedup_component_size_histogram", oracle=_component_histogram_oracle()
 )
 def dedup_component_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Size distribution of the NEAR-dup connected components — the
@@ -1558,7 +1530,7 @@ def dedup_component_size_histogram(spark: SparkSession, sf_dir: str) -> DataFram
     before/after picture every dedup design review starts from.
 
     Composes ``dedup_connected_components`` and its shared oracle SQL
-    (deferred builder over ``_oracle_shared.SQL_CC_COMPONENTS``), so
+    (``_oracle_shared.SQL_CC_COMPONENTS``), so
     the histogram can never disagree with the clustering it
     summarizes.  Two tiny aggregates on top of the component table.
     """
@@ -1576,12 +1548,9 @@ def dedup_component_size_histogram(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 def _incremental_oracle() -> str:
-    from project_fauna_spark.plans.registry import ORACLE
-
-    pairs_sql = ORACLE["dedup_ngram_jaccard"]
     return f"""
     WITH split AS (SELECT (4 * MAX(doc_id)) // 5 AS s FROM documents),
-    pairs AS ({pairs_sql}),
+    pairs AS ({SQL_NGRAM_JACCARD}),
     blame AS (
       SELECT doc_b AS doc_id, MIN(doc_a) AS blame_doc
       FROM pairs GROUP BY doc_b
@@ -1596,7 +1565,7 @@ def _incremental_oracle() -> str:
     """
 
 
-@register("dedup_incremental_new_batch", oracle_builder=_incremental_oracle)
+@register("dedup_incremental_new_batch", oracle=_incremental_oracle())
 def dedup_incremental_new_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental dedup of a new document batch against the corpus.
 
@@ -1639,11 +1608,8 @@ def dedup_incremental_new_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _component_representative_oracle() -> str:
-    from project_fauna_spark.plans.registry import ORACLE
-
-    cc_sql = ORACLE["dedup_connected_components"]
     return f"""
-    WITH comp AS ({cc_sql}),
+    WITH comp AS ({SQL_CC_COMPONENTS}),
     d AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS len FROM documents),
     j AS (
       SELECT c.component_id, c.n_members, c.doc_id, d.len
@@ -1690,7 +1656,7 @@ def _component_representative_oracle() -> str:
 
 @register(
     "dedup_component_representative",
-    oracle_builder=_component_representative_oracle,
+    oracle=_component_representative_oracle(),
 )
 def dedup_component_representative(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keep-policy contrast over the near-dup component graph: for

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from project_fauna_spark.io import load_table
 from project_fauna_spark.operators._oracle_shared import AS_OF, _sql_epoch_to_iso
 from project_fauna_spark.pipeline import transform_details
-from project_fauna_spark.plans.registry import register
+from project_fauna_spark.registry import register
 from project_fauna_spark.sinks.batch_post import post_batches_globally_indexed
 from project_fauna_spark.sources.http import (
     FileBackedTransport,

@@ -30,7 +30,7 @@ from project_fauna_spark.cache import cached
 from project_fauna_spark.functions.moments import dec19
 from project_fauna_spark.io import load_table
 from project_fauna_spark.operators._oracle_shared import TS_FMT_US, _fmt_ts
-from project_fauna_spark.plans.registry import register, sql_dsum
+from project_fauna_spark.registry import register, sql_dsum
 
 
 @register(

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from project_fauna_spark.cache import cached
 from project_fauna_spark.io import load_table
-from project_fauna_spark.plans.registry import register
+from project_fauna_spark.registry import register
 
 _SCALE = 1_000_000_000  # rank 1.0 == 1e9 (integer PageRank scale)
 _DAMP_NUM, _DAMP_DEN = 85, 100  # damping 0.85 as an exact ratio

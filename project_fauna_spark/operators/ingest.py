@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from project_fauna_spark.cache import cached
 from project_fauna_spark.io import load_table, read_csv, read_json
-from project_fauna_spark.plans.registry import register
+from project_fauna_spark.registry import register
 
 
 def _roundtrip_dir(sf_dir: str, tag: str) -> str:

@@ -26,7 +26,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from project_fauna_spark.cache import cached
 from project_fauna_spark.io import load_table
-from project_fauna_spark.plans.registry import register
+from project_fauna_spark.operators._oracle_shared import sql_h32
+from project_fauna_spark.registry import register
 
 _ZBITS = 10  # 10 bits per dimension → 20-bit Morton code
 _ZBUCKET_SHIFT = 14  # 2^20 codes / 2^14 = 64 buckets ("files")
@@ -632,9 +633,7 @@ _H32_RANGE = 1 << 32
 
 
 def _kmv_oracle() -> str:
-    from project_fauna_spark.operators._oracle_shared import sql_h32 as _sql_h32
-
-    hv = _sql_h32("CAST(l_partkey AS VARCHAR)", "kmv:")
+    hv = sql_h32("CAST(l_partkey AS VARCHAR)", "kmv:")
     return f"""
     WITH u AS (SELECT DISTINCT l_partkey FROM lineitem),
     h AS (SELECT DISTINCT {hv} AS hv FROM u),
@@ -656,7 +655,7 @@ def _kmv_oracle() -> str:
     """
 
 
-@register("sketch_kmv_distinct", oracle_builder=_kmv_oracle)
+@register("sketch_kmv_distinct", oracle=_kmv_oracle())
 def sketch_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV (k-minimum-values / bottom-k) distinct-count sketch over
     the parts referenced by lineitem, judged against the exact count:

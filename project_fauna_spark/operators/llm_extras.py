@@ -36,14 +36,13 @@ from project_fauna_spark.functions.vectors import cosine_sim
 from project_fauna_spark.functions.wordhash import h32
 from project_fauna_spark.io import load_table
 from project_fauna_spark.operators._oracle_shared import (
-    SQL_COS as _SQL_COS,
+    SQL_ANN_IVF,
     _IVF_K,
     _IVF_NPROBE,
     _ivf_centroid,
-    _ivf_sql_values,
     sql_h32,
 )
-from project_fauna_spark.plans.registry import register, sql_davg
+from project_fauna_spark.registry import register, sql_davg
 
 
 @register(
@@ -98,42 +97,7 @@ def llm_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sim_ann_ivf",
-    oracle=f"""
-    WITH cents(k, c) AS (VALUES {_ivf_sql_values()}),
-    e AS (
-      SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-      FROM embeddings
-    ),
-    scored AS (
-      SELECT e.vec_id, e.emb, cents.k,
-             list_reduce(list_transform(range(1, len(e.emb)+1),
-                                        i -> e.emb[i] * cents.c[i]),
-                         (s, v) -> s + v) AS dp
-      FROM e CROSS JOIN cents
-    ),
-    assigned AS (
-      SELECT vec_id, emb, k AS cell FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id
-                                     ORDER BY dp DESC, k DESC) AS rn
-        FROM scored) WHERE rn = 1
-    ),
-    probes AS (
-      SELECT vec_id AS query_id, emb AS qemb, k AS cell FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id
-                                     ORDER BY dp DESC, k DESC) AS rn
-        FROM scored WHERE vec_id % 50 = 0) WHERE rn <= {_IVF_NPROBE}
-    ),
-    cand AS (
-      SELECT p.query_id, a.vec_id AS neighbor_id, a.cell,
-             {_SQL_COS.format(a='p.qemb', b='a.emb')} AS cos
-      FROM probes p JOIN assigned a USING (cell)
-      WHERE a.vec_id <> p.query_id
-    )
-    SELECT query_id, neighbor_id, cell, cos, rank FROM (
-      SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-                                        ORDER BY cos DESC, neighbor_id) AS INT) AS rank
-      FROM cand) WHERE rank <= 5
-    """,
+    oracle=SQL_ANN_IVF,
 )
 def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate nearest neighbor: coarse-quantize the corpus
@@ -458,9 +422,8 @@ def llm_mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
 _STOPWORDS = ["the", "a", "of", "and", "to", "in", "is"]
 
 
-@register(
-    "llm_quality_classifier",
-    oracle=f"""
+# Also the score side of llm_classifier_calibration's oracle.
+_SQL_QUALITY_CLASSIFIER = f"""
     WITH f AS (
       SELECT doc_id, lang,
              CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
@@ -479,8 +442,10 @@ _STOPWORDS = ["the", "a", "of", "and", "to", "in", "is"]
              + 1.5 * (CAST(long_n AS DOUBLE) / n_words)
              - 3.0 * (CAST(punct_n AS DOUBLE) / n_words)) > 0.35 AS keep
     FROM f WHERE n_words > 0
-    """,
-)
+    """
+
+
+@register("llm_quality_classifier", oracle=_SQL_QUALITY_CLASSIFIER)
 def llm_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """fastText-style linear quality gate: engineered per-document
     features (stopword / long-word / punctuation ratios) under fixed
@@ -779,11 +744,8 @@ def llm_bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _calibration_oracle() -> str:
-    from project_fauna_spark.plans.registry import ORACLE
-
-    cls_sql = ORACLE["llm_quality_classifier"]
     return f"""
-    WITH cls AS (SELECT * FROM ({cls_sql}) _c),
+    WITH cls AS (SELECT * FROM ({_SQL_QUALITY_CLASSIFIER}) _c),
     b AS (
       SELECT CAST(floor(score * 10) AS INT) AS score_bin,
              n_words >= 50 AS gate, keep, score
@@ -801,7 +763,7 @@ def _calibration_oracle() -> str:
 
 @register(
     "llm_classifier_calibration",
-    oracle_builder=_calibration_oracle,
+    oracle=_calibration_oracle(),
 )
 def llm_classifier_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Calibration table for the linear quality classifier: per
@@ -811,8 +773,8 @@ def llm_classifier_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is the audit run before trusting any cheap model-based filter
     with corpus-wide keep/drop power.
 
-    Builds on the classifier's own output plan (oracle composed via
-    oracle_builder).
+    Builds on the classifier's own output plan (oracle composed from
+    the classifier's oracle text).
     Scores are per-row IEEE doubles identical in both engines, so the
     bin = floor(score·10) assignment is deterministic; the per-bin mean
     score is decimal-accumulated (order-independent).  One

@@ -33,8 +33,9 @@ from project_fauna_spark.io import load_table
 from project_fauna_spark.operators._oracle_shared import (
     SQL_RARE_SHINGLES as _SQL_RARE_SHINGLES,
     SQL_SHINGLES as _SQL_SHINGLES,
+    sql_h32,
 )
-from project_fauna_spark.plans.registry import register
+from project_fauna_spark.registry import register
 
 
 @register(
@@ -1064,10 +1065,8 @@ def llm_span_corruption_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _fim_oracle() -> str:
-    from project_fauna_spark.operators._oracle_shared import sql_h32 as _sql_h32
-
-    ha = _sql_h32("CAST(doc_id AS VARCHAR)", "fim_a:")
-    hb = _sql_h32("CAST(doc_id AS VARCHAR)", "fim_b:")
+    ha = sql_h32("CAST(doc_id AS VARCHAR)", "fim_a:")
+    hb = sql_h32("CAST(doc_id AS VARCHAR)", "fim_b:")
     return f"""
     WITH t AS (
       SELECT doc_id, string_split(text, ' ') AS ws,
@@ -1093,7 +1092,7 @@ def _fim_oracle() -> str:
     """
 
 
-@register("llm_fim_split_plan", oracle_builder=_fim_oracle)
+@register("llm_fim_split_plan", oracle=_fim_oracle())
 def llm_fim_split_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fill-in-the-middle (FIM/PSM) training-split plan: two
     hash-derived cut points per document define prefix / middle /

@@ -28,9 +28,10 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from project_fauna_spark.functions.shingles import word_bigrams
 from project_fauna_spark.io import load_table
 from project_fauna_spark.operators._oracle_shared import (
+    SQL_NGRAM_JACCARD,
     SQL_RARE_SHINGLES as _SQL_RARE_SHINGLES,
 )
-from project_fauna_spark.plans.registry import register
+from project_fauna_spark.registry import register
 
 # RE2-and-Java-compatible patterns (no backrefs, no lookaround) so the
 # Spark (java.util.regex) and DuckDB (RE2) sides match the same spans.
@@ -594,11 +595,8 @@ def llm_dedup_survivorship_report(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 def _near_dup_rate_oracle() -> str:
-    from project_fauna_spark.plans.registry import ORACLE
-
-    pairs_sql = ORACLE["dedup_ngram_jaccard"]
     return f"""
-    WITH pairs AS (SELECT doc_a, doc_b FROM ({pairs_sql}) p),
+    WITH pairs AS (SELECT doc_a, doc_b FROM ({SQL_NGRAM_JACCARD}) p),
     involved AS (
       SELECT doc_a AS doc_id FROM pairs UNION SELECT doc_b FROM pairs
     )
@@ -615,7 +613,7 @@ def _near_dup_rate_oracle() -> str:
 
 @register(
     "llm_near_dup_rate_by_source",
-    oracle_builder=_near_dup_rate_oracle,
+    oracle=_near_dup_rate_oracle(),
 )
 def llm_near_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate rate per ingestion source: which feeds are
@@ -626,8 +624,7 @@ def llm_near_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     The pair set is corpus-linear (df-capped candidates, verified
     pairs); involved doc ids are a tiny broadcast against the
     documents scan, and the rollup is one map-combined aggregate per
-    source.  Oracle composed from the Jaccard oracle via
-    oracle_builder (rotation-safe).
+    source.  Oracle composed from the Jaccard oracle text.
     """
     from project_fauna_spark.operators.dedup import dedup_ngram_jaccard
 
@@ -730,16 +727,13 @@ def llm_judge_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dedup_mixture_oracle() -> str:
-    from project_fauna_spark.plans.registry import ORACLE
-
-    truth_sql = ORACLE["dedup_ngram_jaccard"]
     return f"""
     WITH raw AS (SELECT doc_id, lang, text FROM documents),
     exact_kept AS (
       SELECT MIN(doc_id) AS doc_id FROM raw GROUP BY text
     ),
     near_drops AS (
-      SELECT DISTINCT doc_b AS doc_id FROM ({truth_sql}) t
+      SELECT DISTINCT doc_b AS doc_id FROM ({SQL_NGRAM_JACCARD}) t
     ),
     final_kept AS (
       SELECT e.doc_id FROM exact_kept e
@@ -764,7 +758,7 @@ def _dedup_mixture_oracle() -> str:
     """
 
 
-@register("llm_dedup_impact_on_mixture", oracle_builder=_dedup_mixture_oracle)
+@register("llm_dedup_impact_on_mixture", oracle=_dedup_mixture_oracle())
 def llm_dedup_impact_on_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup bias audit: per language, the corpus share BEFORE and
     AFTER the dedup stack (exact min-id survivorship, then the
@@ -777,7 +771,7 @@ def llm_dedup_impact_on_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     per text; near drops = distinct higher-id members of the exact
     df-capped Jaccard pair set (composed lazily from
     ``dedup_ngram_jaccard`` — its oracle text is spliced into this
-    oracle by the deferred builder).  Counts are exact; shares are one
+    oracle).  Counts are exact; shares are one
     division each; the shift is a difference of two identically-derived
     doubles.  Scale: the pair plan is the df-capped inverted index;
     everything else is hash aggregates and an anti-join.
@@ -836,9 +830,6 @@ def llm_dedup_impact_on_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dedup_token_savings_oracle() -> str:
-    from project_fauna_spark.plans.registry import ORACLE
-
-    truth_sql = ORACLE["dedup_ngram_jaccard"]
     return f"""
     WITH raw AS (
       SELECT doc_id, source,
@@ -847,7 +838,7 @@ def _dedup_token_savings_oracle() -> str:
     ),
     exact_kept AS (SELECT MIN(doc_id) AS doc_id FROM raw GROUP BY text),
     near_drops AS (
-      SELECT DISTINCT doc_b AS doc_id FROM ({truth_sql}) t
+      SELECT DISTINCT doc_b AS doc_id FROM ({SQL_NGRAM_JACCARD}) t
     ),
     final_kept AS (
       SELECT e.doc_id FROM exact_kept e
@@ -869,7 +860,7 @@ def _dedup_token_savings_oracle() -> str:
     """
 
 
-@register("llm_dedup_token_savings", oracle_builder=_dedup_token_savings_oracle)
+@register("llm_dedup_token_savings", oracle=_dedup_token_savings_oracle())
 def llm_dedup_token_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-compute savings from the dedup stack, measured in
     TOKENS per source — docs-dropped counts
@@ -881,8 +872,8 @@ def llm_dedup_token_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     Stages are the repo's canonical dedup ones: exact survivors =
     min(doc_id) per text; near drops = distinct higher-id members of
     the df-capped exact-Jaccard pair set, composed LAZILY from
-    ``dedup_ngram_jaccard`` (its oracle text spliced by the deferred
-    builder; its DataFrame reused via the lazy-import convention).
+    ``dedup_ngram_jaccard`` (its oracle text spliced in; its
+    DataFrame reused via the lazy-import convention).
     Token counts are exact whitespace-split integers computed in the
     scan projection; the save fraction is one integer division.
     Scale: the pair plan is the df-capped inverted index; the rest is

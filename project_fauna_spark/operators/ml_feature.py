@@ -24,8 +24,13 @@ from project_fauna_spark.functions.moments import int_pearson_moments, pearson_t
 from project_fauna_spark.functions.ranks import bucket_offsets_multi
 from project_fauna_spark.functions.wordhash import h32
 from project_fauna_spark.io import load_table
-from project_fauna_spark.operators._oracle_shared import SQL_COS, sql_h32
-from project_fauna_spark.plans.registry import davg, dsum, register, sql_davg, sql_dsum
+from project_fauna_spark.operators._oracle_shared import (
+    SQL_ANN_IVF,
+    SQL_COS,
+    SQL_NGRAM_JACCARD,
+    sql_h32,
+)
+from project_fauna_spark.registry import davg, dsum, register, sql_davg, sql_dsum
 
 
 def _tokenized(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -93,18 +98,15 @@ def ml_tfidf_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ml_minhash_bound_oracle() -> str:
-    from project_fauna_spark.plans.registry import ORACLE
-
-    truth_sql = ORACLE["dedup_ngram_jaccard"]
     return f"""
-    SELECT CAST((SELECT COUNT(*) FROM ({truth_sql}) t WHERE t.jaccard > 0.5)
+    SELECT CAST((SELECT COUNT(*) FROM ({SQL_NGRAM_JACCARD}) t WHERE t.jaccard > 0.5)
                 AS BIGINT) AS n_true_pairs,
            TRUE AS pairs_within_threshold,
            TRUE AS recall_ge_half
     """
 
 
-@register("ml_minhash_lsh", oracle_builder=_ml_minhash_bound_oracle)
+@register("ml_minhash_lsh", oracle=_ml_minhash_bound_oracle())
 def ml_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ml.feature.MinHashLSH near-dup pairs over hashed-token sets.
 
@@ -627,7 +629,7 @@ def _cov_oracle() -> str:
     """
 
 
-@register("ml_pca_covariance", oracle_builder=_cov_oracle)
+@register("ml_pca_covariance", oracle=_cov_oracle())
 def ml_pca_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact sample covariance of the leading 8 embedding dimensions —
     the distributed half of PCA (the driver-side eigendecomposition of
@@ -973,9 +975,6 @@ for _w in _NDCG_W:
 
 
 def _ndcg_oracle() -> str:
-    from project_fauna_spark.plans.registry import ORACLE
-
-    base = ORACLE["sim_ann_ivf"]
     dcg = " + ".join(
         f"(CASE WHEN r{i} = 1 THEN CAST('{_NDCG_W[i - 1]!r}' AS DOUBLE)"
         " ELSE CAST('0.0' AS DOUBLE) END)"
@@ -988,7 +987,7 @@ def _ndcg_oracle() -> str:
         for n in range(1, _NDCG_K + 1)
     )
     return f"""
-    WITH base AS ({base}),
+    WITH base AS ({SQL_ANN_IVF}),
     lab AS (SELECT vec_id, label FROM embeddings),
     rel AS (
       SELECT b.query_id, b.rank,
@@ -1017,7 +1016,7 @@ def _ndcg_oracle() -> str:
     """
 
 
-@register("ml_ndcg_eval", oracle_builder=_ndcg_oracle)
+@register("ml_ndcg_eval", oracle=_ndcg_oracle())
 def ml_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """nDCG@5 of the IVF retriever with label-match relevance — the
     standard offline ranking-quality metric for a search/recsys/RAG
@@ -1733,9 +1732,7 @@ def ml_first_order_ltv_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _group_split_oracle() -> str:
-    from project_fauna_spark.operators._oracle_shared import sql_h32 as _sql_h32
-
-    h = _sql_h32("CAST(user_id AS VARCHAR)", "grp:")
+    h = sql_h32("CAST(user_id AS VARCHAR)", "grp:")
     return f"""
     WITH e AS (
       SELECT user_id, event_type,
@@ -1755,7 +1752,7 @@ def _group_split_oracle() -> str:
     """
 
 
-@register("ml_group_aware_split", oracle_builder=_group_split_oracle)
+@register("ml_group_aware_split", oracle=_group_split_oracle())
 def ml_group_aware_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUP-aware train/val/test split of the event stream: every
     USER hashes wholly into one split (8/1/1 by the portable md5

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from project_fauna_spark.cache import cached
 from project_fauna_spark.io import load_table, register_views
-from project_fauna_spark.plans.registry import register
+from project_fauna_spark.registry import register
 
 
 @register(

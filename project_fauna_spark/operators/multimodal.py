@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F, ty
 
 from project_fauna_spark.cache import cached
 from project_fauna_spark.io import load_table
-from project_fauna_spark.plans.registry import register
+from project_fauna_spark.registry import register
 
 
 def _payloads(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -30,7 +30,7 @@ from project_fauna_spark.functions.moments import dec19
 from project_fauna_spark.functions.ranks import bucket_offsets_multi
 from project_fauna_spark.io import load_table
 from project_fauna_spark.operators._oracle_shared import TS_FMT_US
-from project_fauna_spark.plans.registry import dsum, register, sql_dsum
+from project_fauna_spark.registry import dsum, register, sql_dsum
 
 
 @register(
@@ -1780,7 +1780,7 @@ def _corr_matrix_oracle() -> str:
     """
 
 
-@register("dq_numeric_corr_matrix", oracle_builder=_corr_matrix_oracle)
+@register("dq_numeric_corr_matrix", oracle=_corr_matrix_oracle())
 def dq_numeric_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise Pearson correlation matrix of lineitem's four numeric
     measures (quantity, price cents, discount bp, tax bp) — the

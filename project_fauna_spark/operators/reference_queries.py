@@ -23,7 +23,7 @@ from project_fauna_spark.functions import (
     validate_iso8601_utc,
 )
 from project_fauna_spark.io import load_table
-from project_fauna_spark.plans.registry import register
+from project_fauna_spark.registry import register
 
 from project_fauna_spark.operators._oracle_shared import AS_OF, _sql_epoch_to_iso
 

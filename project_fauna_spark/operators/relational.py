@@ -34,8 +34,9 @@ from project_fauna_spark.operators._oracle_shared import (
     SQL_TS_FMT_US,
     TS_FMT_US,
     _fmt_ts,
+    sql_h32,
 )
-from project_fauna_spark.plans.registry import davg, dsum, register, sql_davg, sql_dsum
+from project_fauna_spark.registry import davg, dsum, register, sql_davg, sql_dsum
 
 
 # ---------------------------------------------------------------------------
@@ -1701,13 +1702,11 @@ _BLOOM_K = 3  # hash functions
 
 
 def _bloom_oracle() -> str:
-    from project_fauna_spark.operators._oracle_shared import sql_h32 as _sql_h32
-
     pos = lambda i: (  # noqa: E731
-        f"({_sql_h32('CAST(c_custkey AS VARCHAR)', f'bloom{i}:')} % {_BLOOM_M})"
+        f"({sql_h32('CAST(c_custkey AS VARCHAR)', f'bloom{i}:')} % {_BLOOM_M})"
     )
     opos = lambda i: (  # noqa: E731
-        f"({_sql_h32('CAST(o_custkey AS VARCHAR)', f'bloom{i}:')} % {_BLOOM_M})"
+        f"({sql_h32('CAST(o_custkey AS VARCHAR)', f'bloom{i}:')} % {_BLOOM_M})"
     )
     return f"""
     WITH s AS (
@@ -1752,7 +1751,7 @@ def _bloom_oracle() -> str:
     """
 
 
-@register("join_bloom_semi_prefilter", oracle_builder=_bloom_oracle)
+@register("join_bloom_semi_prefilter", oracle=_bloom_oracle())
 def join_bloom_semi_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filter semi-join prefilter: build an 8192-position, 3-hash
     Bloom set over the selective dimension keys (BUILDING-segment

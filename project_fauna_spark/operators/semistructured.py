@@ -12,7 +12,8 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from project_fauna_spark.cache import cached
 from project_fauna_spark.functions.ranks import bucket_offsets
 from project_fauna_spark.io import load_table
-from project_fauna_spark.plans.registry import register, sql_dsum
+from project_fauna_spark.operators._oracle_shared import sql_h32
+from project_fauna_spark.registry import register, sql_dsum
 
 
 @register(
@@ -782,9 +783,7 @@ _SYS_BUCKETS_SHIFT = 24  # bucket = h >> 24: 256 range-ordered buckets
 
 
 def _systematic_oracle() -> str:
-    from project_fauna_spark.operators._oracle_shared import sql_h32 as _sql_h32
-
-    hv = _sql_h32("CAST(o_orderkey AS VARCHAR)", "sys:")
+    hv = sql_h32("CAST(o_orderkey AS VARCHAR)", "sys:")
     return f"""
     WITH h AS (SELECT o_orderkey, {hv} AS hv FROM orders),
     r AS (
@@ -797,7 +796,7 @@ def _systematic_oracle() -> str:
     """
 
 
-@register("sample_systematic_stride", oracle_builder=_systematic_oracle)
+@register("sample_systematic_stride", oracle=_systematic_oracle())
 def sample_systematic_stride(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Systematic 1-in-100 sample in PORTABLE hash order: rank every
     order by its salted 32-bit md5 hash (ties broken by key) and keep
@@ -951,9 +950,7 @@ def cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sample_accuracy_oracle() -> str:
-    from project_fauna_spark.operators._oracle_shared import sql_h32 as _sql_h32
-
-    h = _sql_h32("CAST(l_orderkey AS VARCHAR) || '_' || CAST(l_linenumber AS VARCHAR)", "acc:")
+    h = sql_h32("CAST(l_orderkey AS VARCHAR) || '_' || CAST(l_linenumber AS VARCHAR)", "acc:")
     return f"""
     WITH t AS (
       SELECT CAST(l_quantity AS BIGINT) AS qty,
@@ -982,7 +979,7 @@ def _sample_accuracy_oracle() -> str:
     """
 
 
-@register("sample_estimate_accuracy", oracle_builder=_sample_accuracy_oracle)
+@register("sample_estimate_accuracy", oracle=_sample_accuracy_oracle())
 def sample_estimate_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Honest sampling-error audit: a deterministic 1-in-10 hash
     sample of lineitem, its scaled-up quantity and revenue estimates,

@@ -39,12 +39,13 @@ from project_fauna_spark.functions.centroids import (
 from project_fauna_spark.functions.vectors import cosine_sim, euclidean_dist
 from project_fauna_spark.io import load_table
 from project_fauna_spark.operators._oracle_shared import (
+    SQL_ANN_IVF,
     SQL_COS,
     _IVF_K,
     _ivf_centroid,
     _ivf_sql_values,
 )
-from project_fauna_spark.plans.registry import davg, register, sql_davg
+from project_fauna_spark.registry import davg, register, sql_davg
 
 _SQL_EMB_D = "list_transform(embedding, x -> CAST(x AS DOUBLE))"
 
@@ -439,7 +440,7 @@ def _nprobe_sweep_oracle() -> str:
     """
 
 
-@register("sim_ivf_nprobe_sweep", oracle_builder=_nprobe_sweep_oracle)
+@register("sim_ivf_nprobe_sweep", oracle=_nprobe_sweep_oracle())
 def sim_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF tuning curve: exact recall@5 against brute-force truth for
     nprobe = 1..4 — the measurement that picks an index's operating
@@ -692,9 +693,6 @@ def sim_mmr_diversified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ann_recall_oracle() -> str:
-    from project_fauna_spark.plans.registry import ORACLE
-
-    ivf_sql = ORACLE["sim_ann_ivf"]
     return f"""
     WITH e AS (
       SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
@@ -714,7 +712,7 @@ def _ann_recall_oracle() -> str:
         FROM q JOIN e ON e.vec_id <> q.query_id
       ) WHERE rk <= 5
     ),
-    ivf AS (SELECT query_id, neighbor_id FROM ({ivf_sql}) WHERE rank <= 5),
+    ivf AS (SELECT query_id, neighbor_id FROM ({SQL_ANN_IVF}) WHERE rank <= 5),
     hits AS (
       SELECT b.query_id, COUNT(i.neighbor_id) AS n_hits
       FROM brute b
@@ -727,7 +725,7 @@ def _ann_recall_oracle() -> str:
     """
 
 
-@register("sim_ann_recall_audit", oracle_builder=_ann_recall_oracle)
+@register("sim_ann_recall_audit", oracle=_ann_recall_oracle())
 def sim_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN quality evaluation: recall@5 of the IVF index
     (``sim_ann_ivf``, nprobe=2) against exact brute-force top-5 for
@@ -949,7 +947,7 @@ def _pq_oracle() -> str:
     """
 
 
-@register("sim_pq_adc", oracle_builder=_pq_oracle)
+@register("sim_pq_adc", oracle=_pq_oracle())
 def sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN (Jégou et al. IVFADC layout): encode
     the leading 16 embedding dims as 4 one-byte codes (4 subspaces × an
@@ -1127,7 +1125,7 @@ def _ivfpq_oracle() -> str:
     """
 
 
-@register("sim_ivf_pq_search", oracle_builder=_ivfpq_oracle)
+@register("sim_ivf_pq_search", oracle=_ivfpq_oracle())
 def sim_ivf_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVFADC (Jégou et al.): IVF coarse cells generate candidates,
     PQ asymmetric distance ranks them — the composition that serves

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from project_fauna_spark.io import load_table
 from project_fauna_spark.operators._oracle_shared import SQL_TS_OUT, TS_OUT
-from project_fauna_spark.plans.registry import register
+from project_fauna_spark.registry import register
 
 
 @register(

@@ -28,7 +28,7 @@ from project_fauna_spark.cache import cached
 from project_fauna_spark.functions.moments import int_pearson_moments, pearson_terms
 from project_fauna_spark.functions.shingles import word_bigrams
 from project_fauna_spark.io import load_table
-from project_fauna_spark.plans.registry import register
+from project_fauna_spark.registry import register
 
 STOPWORDS = ["the", "a", "of", "and", "in"]
 _SQL_STOP = "['" + "', '".join(STOPWORDS) + "']"
@@ -120,9 +120,8 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "text_langid_ngram",
-    oracle=f"""
+# Also the prediction side of text_langid_confusion's oracle.
+_SQL_LANGID_NGRAM = f"""
     WITH votes AS (
       SELECT doc_id, {_SQL_LANGS}[(ascii(substr(word, 1, 1)) % 5) + 1] AS vote
       FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents)
@@ -136,8 +135,10 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
            d.lang AS actual_lang, (t.vote = d.lang) AS agree
     FROM tallied t JOIN documents d ON t.doc_id = d.doc_id
     WHERE t.rn = 1
-    """,
-)
+    """
+
+
+@register("text_langid_ngram", oracle=_SQL_LANGID_NGRAM)
 def text_langid_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Character-heuristic language ID: each word votes a language by
     its first character's class; majority wins (tiebreak by language).
@@ -1082,11 +1083,8 @@ def text_tvd_language_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _langid_confusion_oracle() -> str:
-    from project_fauna_spark.plans.registry import ORACLE
-
-    pred_sql = ORACLE["text_langid_ngram"]
     return f"""
-    WITH pred AS ({pred_sql}),
+    WITH pred AS ({_SQL_LANGID_NGRAM}),
     c AS (
       SELECT actual_lang, guessed_lang, CAST(COUNT(*) AS BIGINT) AS n_docs
       FROM pred GROUP BY 1, 2
@@ -1099,7 +1097,7 @@ def _langid_confusion_oracle() -> str:
     """
 
 
-@register("text_langid_confusion", oracle_builder=_langid_confusion_oracle)
+@register("text_langid_confusion", oracle=_langid_confusion_oracle())
 def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Confusion matrix of the language-ID heuristic against the
     labeled ``lang`` column: per (actual, guessed) cell, document
@@ -1109,7 +1107,7 @@ def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold tuning and mixture re-weighting in a multilingual
     corpus pipeline).
 
-    Composes the langid query and its oracle SQL (deferred builder).
+    Composes the langid query and its oracle SQL.
     The matrix is |langs|²-bounded; each row
     share is ONE IEEE division of exact counts.
     """

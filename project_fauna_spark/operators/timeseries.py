@@ -25,7 +25,7 @@ from project_fauna_spark.cache import cached
 from project_fauna_spark.functions.moments import int_pearson_moments, pearson_terms
 from project_fauna_spark.io import load_table
 from project_fauna_spark.operators._oracle_shared import _WILSON_HI, _WILSON_LO
-from project_fauna_spark.plans.registry import register
+from project_fauna_spark.registry import register
 
 
 @register(

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.functions import pandas_udf
 
 from project_fauna_spark.io import load_table
-from project_fauna_spark.plans.registry import register
+from project_fauna_spark.registry import register
 
 
 @pandas_udf(T.LongType())

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from project_fauna_spark.io import load_table
 from project_fauna_spark.operators._oracle_shared import SQL_TS_FMT, TS_FMT, _fmt_ts
-from project_fauna_spark.plans.registry import register
+from project_fauna_spark.registry import register
 
 
 def merge_upsert(target: DataFrame, updates: DataFrame, key: str) -> DataFrame:

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from project_fauna_spark.cache import cached
 from project_fauna_spark.io import load_table
 from project_fauna_spark.operators._oracle_shared import _WILSON_HI, _WILSON_LO
-from project_fauna_spark.plans.registry import davg, dsum, register, sql_davg, sql_dsum
+from project_fauna_spark.registry import davg, dsum, register, sql_davg, sql_dsum
 
 
 @register(
@@ -1888,7 +1888,7 @@ def _brand_return_oracle() -> str:
     """
 
 
-@register("q_brand_return_rate", oracle_builder=_brand_return_oracle)
+@register("q_brand_return_rate", oracle=_brand_return_oracle())
 def q_brand_return_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Return rate per part brand with 95 % Wilson score bounds — the
     merchandising quality scoreboard where the ERROR BAR is the

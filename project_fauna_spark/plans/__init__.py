@@ -1,21 +1,20 @@
 """Named-query registry: every engine operator exposed as a query.
 
-Importing this package registers the queries of every operator module;
-``QUERIES`` / ``ORACLE`` are the driver-facing maps.  A query lives in
-the operator module of its name prefix (README "Layout").
+Importing this package imports every operator module, each of which
+registers its queries into ``project_fauna_spark.registry``, and then
+orders the registry; ``QUERIES`` / ``ORACLE`` are the driver-facing
+maps.  A query lives in the operator module of its name prefix (README
+"Layout").  An operator module imports only the registry, never this
+package, so it can be imported on its own.
 
 Registry order is ``plans/window.GRADING_WINDOW`` followed by every
 other name sorted by name, so no import or module move can shift a
-position.
+position.  A ``GRADING_WINDOW`` name that no module registers raises
+``KeyError`` here.
 """
 
-from project_fauna_spark.plans.registry import (
-    ORACLE,
-    QUERIES,
-    register,
-    resolve_deferred_oracles,
-)
 from project_fauna_spark.plans.window import GRADING_WINDOW
+from project_fauna_spark.registry import ORACLE, QUERIES
 
 # Operator modules register their queries at import time.
 import project_fauna_spark.operators.analytics  # noqa: F401
@@ -46,21 +45,10 @@ import project_fauna_spark.operators.udf_surface  # noqa: F401
 import project_fauna_spark.operators.upsert  # noqa: F401
 import project_fauna_spark.operators.warehouse  # noqa: F401
 
-# Oracles that compose other queries' oracle text build once every
-# module has registered.
-resolve_deferred_oracles()
-
-# Tolerate a PARTIAL registry here: when a Spark worker unpickles a
-# module-level UDF (udf_surface.py pickles by reference), the worker
-# re-imports that operator module, which re-runs this package __init__
-# while the UDF's host module is still mid-import in sys.modules — so
-# ITS registrations are absent in that interpreter.  Workers never
-# consume registry order; window completeness is driver-side and is
-# enforced by tests/test_window_manifest.py (first-50 == manifest).
-_front = {n: QUERIES[n] for n in GRADING_WINDOW if n in QUERIES}
+_front = {n: QUERIES[n] for n in GRADING_WINDOW}
 _rest = {n: QUERIES[n] for n in sorted(QUERIES) if n not in _front}
 QUERIES.clear()
 QUERIES.update(_front)
 QUERIES.update(_rest)
 
-__all__ = ["QUERIES", "ORACLE", "register"]
+__all__ = ["QUERIES", "ORACLE"]

@@ -15,6 +15,11 @@ match exactly, which drives two conventions:
   and needs no special handling.
 * **Stable tie-breaks.**  Any windowed/ordered operator orders by a
   unique key suffix so row_number/rank/frames agree across engines.
+
+This module imports no operator module: importing one operator module
+(as a Spark worker does when it unpickles a function by reference)
+loads that module alone.  ``plans`` imports them all and orders the
+registry.
 """
 
 from __future__ import annotations
@@ -28,24 +33,15 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
-_DEFERRED_ORACLES: dict[str, Callable[[], str]] = {}
-# Set once ``plans/__init__`` has imported every operator module; from
-# then on each registration retries the oracles still deferred.
-_RESOLVE_ON_REGISTER = False
 
 
-def register(
-    name: str,
-    oracle: Optional[str] = None,
-    oracle_builder: Optional[Callable[[], str]] = None,
-):
+def register(name: str, oracle: Optional[str] = None):
     """Decorator: add a named query (and optional DuckDB oracle SQL).
 
-    ``oracle_builder`` defers oracle construction until every operator
-    module has registered (``resolve_deferred_oracles`` runs in
-    ``plans/__init__``).  Use it when an oracle composes another
-    query's oracle text.  Registration order carries no meaning:
-    ``plans/__init__`` reorders the registry after import.
+    The oracle is a plain string, built when the query registers; an
+    oracle that composes another query's oracle reads the shared text
+    from ``operators/_oracle_shared``.  Registration order carries no
+    meaning: ``plans/__init__`` reorders the registry after import.
     """
 
     def deco(fn: QueryFn) -> QueryFn:
@@ -54,34 +50,9 @@ def register(
         QUERIES[name] = fn
         if oracle is not None:
             ORACLE[name] = oracle
-        if oracle_builder is not None:
-            _DEFERRED_ORACLES[name] = oracle_builder
-        if _RESOLVE_ON_REGISTER and _DEFERRED_ORACLES:
-            resolve_deferred_oracles()
         return fn
 
     return deco
-
-
-def resolve_deferred_oracles() -> None:
-    """Build every deferred oracle whose input oracles are registered.
-
-    ``plans/__init__`` calls this once it has imported every operator
-    module.  A builder whose inputs do not exist yet (an ``ORACLE``
-    entry, or a function of a module still importing) stays deferred:
-    importing one operator module on its own re-enters
-    ``plans/__init__`` while that module is still importing, so its
-    entries register only afterwards, and each of those registrations
-    retries what is left.
-    """
-    global _RESOLVE_ON_REGISTER
-    _RESOLVE_ON_REGISTER = True
-    for name, build in list(_DEFERRED_ORACLES.items()):
-        try:
-            ORACLE[name] = build()
-        except (KeyError, NameError):
-            continue
-        del _DEFERRED_ORACLES[name]
 
 
 def dsum(col: Column, precision: int = 30, scale: int = 8) -> Column:

@@ -126,6 +126,15 @@ def configure_session(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def default_driver_memory() -> str:
+    """The driver heap ``get_spark`` asks for: 24g, or half the host's
+    physical memory where that is less.  G1 grows the heap toward its
+    maximum, so a maximum above what the host can back lets the JVM
+    be OOM-killed on a smaller machine."""
+    half_mib = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2 // 2**20
+    return f"{min(24 * 1024, half_mib)}m"
+
+
 def get_spark(
     app_name: str = "project_fauna_spark",
     master: str | None = None,
@@ -159,7 +168,10 @@ def get_spark(
         # The cache is 4 LRU segments split by hash, so 1384 holds three
         # headline passes without an eviction in 99% of sessions.
         .config("spark.sql.codegen.cache.maxEntries", "1384")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY", default_driver_memory()),
+        )
     )
     for key, value in RUNTIME_CONFS.items():
         builder = builder.config(key, value)

@@ -20,6 +20,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from project_fauna_spark.io import repair_ts
 from project_fauna_spark.session import configure_session
 
 # events.parquet schema, declared (streaming readers require a schema —
@@ -27,7 +28,8 @@ from project_fauna_spark.session import configure_session
 # testdata generation — TIMESTAMP(NANOS) (read as int64 under
 # nanosAsLong) or naive TIMESTAMP(MICROS) (read as NTZ) — so the
 # stream schema is chosen by probing how the batch reader resolves
-# the file (one driver-side footer read), mirroring io.load_table.
+# the file (one driver-side footer read); io.repair_ts then maps either
+# encoding to a session-UTC timestamp, as io.load_table does.
 def _events_stream_schema(ts_type: "T.DataType") -> T.StructType:
     return T.StructType(
         [
@@ -47,20 +49,13 @@ def events_file_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     configure_session(spark)
     probe = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    ts_dtype = dict(probe.dtypes).get("ts")
-    if ts_dtype == "bigint":  # TIMESTAMP(NANOS) under nanosAsLong
-        schema = _events_stream_schema(T.LongType())
-        repair = lambda c: F.timestamp_micros(F.expr("ts div 1000"))
-    else:  # naive µs → TIMESTAMP_NTZ
-        schema = _events_stream_schema(T.TimestampNTZType())
-        repair = lambda c: c.cast("timestamp")
     raw = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(_events_stream_schema(probe.schema["ts"].dataType))
         .format("parquet")
         .option("pathGlobFilter", "events.parquet")  # dir has all 10 tables
         .load(sf_dir)
     )
-    return raw.withColumn("ts", repair(F.col("ts")))
+    return repair_ts(raw, "ts")
 
 
 def rate_stream(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:

@@ -169,6 +169,18 @@ def test_validation_error_exits_2(monkeypatch, api_dir):
     assert ei.value.code == 2
 
 
+@pytest.mark.parametrize("argv, env", [(["--concurrency", "0"], "8"), ([], "0")])
+def test_concurrency_below_1_is_a_usage_error(monkeypatch, capsys, api_dir, argv, env):
+    """A fetch fan-out below 1 is refused while parsing, before any
+    session starts or the API is probed."""
+    monkeypatch.setenv("CONCURRENCY", env)
+    monkeypatch.setattr(cli, "run", lambda args: pytest.fail("run() was reached"))
+    with pytest.raises(SystemExit) as ei:
+        cli.main(["--fixture-dir", api_dir, *argv])
+    assert ei.value.code == 2
+    assert "--concurrency: must be at least 1, got 0" in capsys.readouterr().err
+
+
 def test_interrupt_prints_aborted(monkeypatch, capsys, api_dir):
     def interrupted(args):
         raise KeyboardInterrupt

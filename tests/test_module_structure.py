@@ -1,8 +1,11 @@
 """Structural checks on the operator modules, made without Spark.
 
 * Each operator module imports on its own in a fresh interpreter, as a
-  Spark worker does when it unpickles a function by reference, and the
-  registry it leaves behind has every oracle built.
+  Spark worker does when it unpickles a function by reference: it
+  loads no other operator module and not ``plans``, and every oracle
+  it registers is already a string.
+* No operator module defers an oracle or reads one back from
+  ``ORACLE``.
 * No function re-imports a name its module already binds to the same
   object at module level.
 * Tests, tools and bench.py inspect plans only through ``plans/lint``:
@@ -27,26 +30,50 @@ MODULES = sorted(p.stem for p in OPERATORS.glob("*.py") if p.stem != "__init__")
 _IMPORT_ALONE = """
 import json, sys
 import project_fauna_spark.operators.{module}
-import project_fauna_spark.plans as plans
-from project_fauna_spark.plans import registry
-json.dump({{"deferred": sorted(registry._DEFERRED_ORACLES),
-           "queries": len(plans.QUERIES), "oracles": sorted(plans.ORACLE)}}, sys.stdout)
+from project_fauna_spark.registry import ORACLE
+json.dump({{"plans_loaded": "project_fauna_spark.plans" in sys.modules,
+           "operators": sorted(m for m in sys.modules
+                               if m.startswith("project_fauna_spark.operators.")),
+           "non_str": sorted(n for n, o in ORACLE.items() if not isinstance(o, str))}},
+          sys.stdout)
 """
 
 
 @pytest.mark.parametrize("module", MODULES)
 def test_operator_module_imports_alone(module):
-    from project_fauna_spark.plans import ORACLE, QUERIES
-
     out = subprocess.run(
         [sys.executable, "-c", _IMPORT_ALONE.format(module=module)],
         cwd=REPO, capture_output=True, text=True, check=False,
     )
     assert out.returncode == 0, out.stderr[-2000:]
     got = json.loads(out.stdout)
-    assert got["deferred"] == []
-    assert got["queries"] == len(QUERIES)
-    assert got["oracles"] == sorted(ORACLE)
+    assert got["plans_loaded"] is False
+    assert set(got["operators"]) <= {
+        f"project_fauna_spark.operators.{module}",
+        "project_fauna_spark.operators._oracle_shared",
+    }
+    assert got["non_str"] == []
+
+
+def test_oracles_are_strings_at_registration():
+    """No operator module defers an oracle: ``register`` takes the
+    query name and at most an ``oracle=`` string, and no module reads
+    another query's oracle back out of ``ORACLE``."""
+    found = []
+    for path in sorted(OPERATORS.glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Name)
+                and node.func.id == "register"
+            ):
+                extra = [k.arg for k in node.keywords if k.arg != "oracle"]
+                if len(node.args) > 1 or extra:
+                    found.append(f"{path.name}:{node.lineno} register({extra})")
+            name = getattr(node, "id", None) or getattr(node, "attr", None)
+            if name == "ORACLE" or (isinstance(node, ast.alias) and node.name == "ORACLE"):
+                found.append(f"{path.name}:{node.lineno} ORACLE")
+    assert found == []
 
 
 def _bindings(node: ast.AST):

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from project_fauna_spark.plans import QUERIES
 from project_fauna_spark.plans.lint import kinds, plan_of
-from project_fauna_spark.plans.registry import ORACLE
+from project_fauna_spark.registry import ORACLE
 
 SF_SMOKE = "/root/testdata/sf0.001"
 

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from project_fauna_spark.plans import QUERIES
 from project_fauna_spark.plans.lint import kind, kinds, names, nodes, plan_of, tree
-from project_fauna_spark.plans.registry import ORACLE
+from project_fauna_spark.registry import ORACLE
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
