@@ -163,11 +163,13 @@ def etl_fetch_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
 def etl_batch_post(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S3 + T7: chunked batch-POST sink, receipt rows.
 
-    Globally-indexed distributed sink: batch boundaries follow a
-    global id-order row numbering (bucketed two-level cumsum — no
-    repartition(1) funnel), a batch_id shuffle so each task posts whole
-    batches, posts spread across executors.  Receipts are identical to a sequential
-    single-writer chunking, which is what the oracle describes.
+    Distributed sink: an id-hash shuffle hands each task a group of
+    records, which posts its full batches in id order; one final task
+    posts the groups' leftovers in id order and numbers every receipt,
+    full batches first.  So there are ``ceil(n/25)`` batches, all full
+    but the last, which is what the oracle describes; which records
+    share a batch is the sink's deterministic membership rule, not a
+    sequential chunking.
     """
     root = _fixture_dir(spark, sf_dir)
     transformed = etl_fetch_transform(spark, sf_dir)

@@ -9,14 +9,14 @@ plan nodes and the driver never holds the data.  The plan's shape:
   executors, and one ``mapInArrow`` task per partition GETs its pages
   and then the details of the ids on them, so listing and detail GETs
   fan out with no shuffle between them;
-* the sink's global row numbering shuffles by id bucket (plus a tiny
-  broadcast table of bucket offsets), and its posting shuffles by
-  batch id so each task posts whole batches, serialized to JSON by
-  the JVM;
-* one pin (``cache.cached``) holds the transformed records, because
-  the sink reads them twice — for the bucket row numbers and for the
-  bucket counts.  The pin is what makes the fetch exactly-once: each
-  listed id is GET once (plus retries), never once per sink branch.
+* the sink hashes the records on ``id`` into as many groups as there
+  are fetch partitions; each group's task posts its full batches of
+  sorted records, and one final task posts the fewer-than-batch-size
+  leftovers of every group and numbers all receipts.  The JVM
+  serializes each record to JSON.
+
+That is three shuffles and no pin: the sink reads the transformed
+records once, so each listed id is GET once (plus retries).
 """
 
 from __future__ import annotations
@@ -103,10 +103,8 @@ def run_pipeline(
     Returns the receipts DataFrame; nothing executes until it is
     consumed (the whole ETL is one lazy plan).  ``partitions`` is the
     fan-out of the listing and detail fetches — the Spark form of the
-    reference's request concurrency.  The sink pins the
-    transformed records with ``cache.cached``; a long-lived session
-    frees the pin with ``cache.release_cached()`` once the receipts
-    are consumed.
+    reference's request concurrency, and the number of groups the
+    sink posts full batches from.  The plan pins nothing.
     """
     details = fetch_listed_details_df(
         spark, transport_factory, partitions=partitions, policy=policy
@@ -114,8 +112,13 @@ def run_pipeline(
     transformed = transform_details(details, as_of)
     # Serialize arrays for the JSON sink the way the reference does.
     serializable = transformed.withColumn("friends", F.to_json("friends"))
-    # Globally-indexed chunking: batch count is ceil(n/size) exactly
-    # (reference T7/T8 semantics), posts still fan out per batch.
+    # Batch count is ceil(n/size) exactly (reference T7/T8 semantics);
+    # full batches are posted from every group in parallel.
     return post_batches_globally_indexed(
-        serializable, transport_factory, order_col="id", batch_size=batch_size, policy=policy
+        serializable,
+        transport_factory,
+        order_col="id",
+        batch_size=batch_size,
+        policy=policy,
+        partitions=partitions,
     )

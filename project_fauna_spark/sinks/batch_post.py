@@ -1,19 +1,24 @@
-"""Batch-POST sink: ≤100-record chunks with global batch boundaries.
+"""Batch-POST sink: ≤100-record chunks, posted per partition.
 
 Reference parity: S3 (pipeline.py:88-99) posts transformed records in
 chunks of ``max(1, min(100, batch_size))`` (clamp pipeline.py:93);
-T7 ``chunked`` (utils.py:9-12) becomes a global row number divided by
-the batch size; X1/X2 reliability via
-:func:`project_fauna_spark.sources.http.request_with_retry`.
+T7 ``chunked`` (utils.py:9-12) yields ``ceil(n/size)`` chunks, every
+one full but the last; X1/X2 reliability via
+:func:`project_fauna_spark.sources.http.request_with_retry`.  Which
+records share a chunk follows completion order in the reference
+(SURVEY.md X5), so only the chunk sizes and exactly-once delivery are
+part of its contract.
 
-Spark rendering: a ``batch_id`` shuffle hands each partition whole
-batches, which it posts through ``mapInArrow`` in parallel, emitting
-a receipt row per batch — the driver never materializes the data
-(the reference's sequential driver-side loop, pipeline.py:96-99,
-becomes N-way parallel).  The JVM serializes each record with
-``to_json``, so the Python side only joins strings into bodies.
-Null-vs-omitted T6: ``to_json`` drops null fields, matching
-pipeline.py:78-79.
+Spark rendering: a hash shuffle on the order column hands each of
+``partitions`` tasks a group of records, sorted; each task posts every
+full run of ``size`` rows through one transport and passes its
+fewer-than-``size`` leftover rows on.  One final task posts the
+leftovers in chunks and numbers every batch.  The driver never
+materializes the data (the reference's sequential driver-side loop,
+pipeline.py:96-99, becomes N-way parallel), and the input is read once,
+so nothing is pinned.  The JVM serializes each record with ``to_json``,
+so the Python side only joins strings into bodies.  Null-vs-omitted
+T6: ``to_json`` drops null fields, matching pipeline.py:78-79.
 """
 
 from __future__ import annotations
@@ -22,9 +27,8 @@ from collections.abc import Iterator
 
 import pyarrow as pa
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, types as T
 
-from project_fauna_spark.cache import cached
 from project_fauna_spark.functions.reference import clamp_batch_size
 from project_fauna_spark.sources.http import (
     RetryPolicy,
@@ -38,6 +42,9 @@ RECEIPT_SCHEMA = "batch_index long, n_records long, status long"
 _RECEIPT_ARROW = pa.schema(
     [("batch_index", pa.int64()), ("n_records", pa.int64()), ("status", pa.int64())]
 )
+# A full batch's receipt as the first tasks pass it on: which task
+# posted it, its place in that task's posts, and the POST status.
+_FULL_ARROW = pa.schema([("__part", pa.int64()), ("__seq", pa.int64()), ("__status", pa.int64())])
 
 
 def post_batches_globally_indexed(
@@ -46,81 +53,129 @@ def post_batches_globally_indexed(
     order_col: str,
     batch_size: int = 100,
     policy: RetryPolicy = RetryPolicy(),
-    bucket_rows: int = 1024,
+    partitions: int = 8,
 ) -> DataFrame:
-    """POST ``df`` in ≤100-record batches with GLOBALLY deterministic
-    chunk boundaries — no single-partition funnel.
+    """POST ``df`` in ``size``-record batches, ``size`` =
+    ``clamp_batch_size(batch_size)``; return one receipt row
+    ``(batch_index, n_records, status)`` per batch.
 
-    Rows get a global row number in ``order_col`` order via a bucketed
-    two-level cumsum (local window per ``order_col div bucket_rows``
-    bucket + a tiny broadcast offset table — never one task for the
-    whole sink), then ``batch_id = row_number div batch_size`` keys a
-    shuffle: each partition receives whole batches, sorted, and posts
-    each one as its run of rows ends, through one transport per
-    partition.  Receipts are identical to a sequential single-writer
-    chunking of the ``order_col``-sorted rows, so re-runs (and the
-    oracle) see the same batch set regardless of input partitioning.
+    Membership is deterministic and independent of how ``df`` is
+    partitioned (given a unique ``order_col``):
 
-    The row numbers and the bucket counts both read ``df``, so it is
-    pinned with :func:`~project_fauna_spark.cache.cached`: without the
-    pin each branch recomputes ``df`` and repeats whatever side effects
-    produced it (the pipeline's detail GETs), and a non-idempotent
-    source could then feed the two branches different rows.
+    * each record's group is ``pmod(hash(order_col), partitions)``,
+      Spark's ``HashPartitioning`` of ``repartition(partitions,
+      order_col)`` (the explicit count keeps AQE from coalescing it);
+    * within a group, the ``order_col``-sorted rows are cut into runs
+      of ``size``; each full run is one batch;
+    * the fewer-than-``size`` rows left in each group are merged and
+      cut, in ``order_col`` order, into the remaining batches.
+
+    Receipts number the full batches ``0..F-1`` by (group, run), then
+    the leftover batches, so there are ``ceil(n/size)`` batches, all of
+    ``size`` records but the last.
+
+    Plan: one projection of ``order_col`` and the record's JSON, the
+    hash shuffle, a sort within partitions, a ``mapInArrow`` whose
+    task per group posts its full runs, a ``repartition(1)``, and a
+    ``mapInArrow`` whose one task posts the leftovers and numbers the
+    receipts.
+    That single final task receives at most ``partitions·(size−1)``
+    leftover rows plus one three-long receipt per full batch.  ``df``
+    has one consumer, so each record is computed (and, in the
+    pipeline, fetched) once without a pin.
     """
-    from pyspark.sql import Window as W, functions as F
+    from pyspark import TaskContext
+    from pyspark.sql import functions as F
 
     size = clamp_batch_size(batch_size)
-    data_cols = df.columns
-
-    w_local = W.partitionBy("__bkt").orderBy(order_col)
-    w_off = W.partitionBy(F.lit(1)).orderBy("__bkt").rowsBetween(
-        W.unboundedPreceding, W.currentRow
-    )
-    rows = cached(df).withColumn("__bkt", F.expr(f"{order_col} div {bucket_rows}"))
-    offsets = (
-        rows.groupBy("__bkt")
-        .agg(F.count("*").alias("__n"))
-        .withColumn("__offset", F.sum("__n").over(w_off) - F.col("__n"))
-        .select("__bkt", "__offset")
-    )
-    keyed = (
-        rows.withColumn("__local_rn", F.row_number().over(w_local))
-        .join(F.broadcast(offsets), "__bkt")
-        .withColumn("__rn", F.col("__local_rn") + F.col("__offset") - 1)
-        .withColumn("__batch_id", F.expr(f"__rn div {size}"))
-        .drop("__bkt", "__local_rn", "__offset")
+    passed_on = T.StructType(
+        [T.StructField(f.name, T.LongType()) for f in _FULL_ARROW]
+        + [
+            T.StructField("__key", df.schema[order_col].dataType),
+            T.StructField("__json", T.StringType()),
+        ]
     )
 
-    def post_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def post(transport, hdrs: bool, docs: list[str]) -> int:
+        body = "[" + ",".join(docs) + "]"
+        status, _ = request_with_retry(transport, "POST", body, policy, takes_headers=hdrs)
+        return status
+
+    def post_full_runs(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        """Post each full ``size``-row run of this group; pass on a
+        receipt per run and the leftover rows."""
         transport = transport_factory()
         hdrs = transport_takes_headers(transport)
-        receipts: dict[str, list[int]] = {name: [] for name in _RECEIPT_ARROW.names}
-        batch_id, recs = -1, []
-
-        def post() -> None:
-            body = "[" + ",".join(recs) + "]"
-            status, _ = request_with_retry(transport, "POST", body, policy, takes_headers=hdrs)
-            receipts["batch_index"].append(batch_id)
-            receipts["n_records"].append(len(recs))
-            receipts["status"].append(status)
-
+        statuses: list[int] = []
+        run: list[str] = []  # documents of the current, unposted run
+        tail: list[pa.RecordBatch] = []  # the rows of ``run``
         for batch in batches:
-            bids, docs = batch.column(0).to_pylist(), batch.column(1).to_pylist()
-            for bid, doc in zip(bids, docs):
-                if bid != batch_id:
-                    if recs:
-                        post()
-                    batch_id, recs = bid, []
-                recs.append(doc)
-        if recs:
-            post()
+            docs, start = batch.column(1).to_pylist(), 0
+            while len(run) + len(docs) - start >= size:
+                cut = start + size - len(run)
+                statuses.append(post(transport, hdrs, run + docs[start:cut]))
+                run, tail, start = [], [], cut
+            run += docs[start:]
+            tail.append(batch.slice(start))
+        if not tail:
+            return
+        key_type, json_type = tail[0].schema.field(0).type, tail[0].schema.field(1).type
+        schema = pa.schema(list(_FULL_ARROW) + [("__key", key_type), ("__json", json_type)])
+        n = len(statuses)
+        if n:
+            pid = TaskContext.get().partitionId()
+            full = arrow_batch(
+                _FULL_ARROW, {"__part": [pid] * n, "__seq": list(range(n)), "__status": statuses}
+            )
+            nulls = [pa.nulls(n, key_type), pa.nulls(n, json_type)]
+            yield pa.RecordBatch.from_arrays(full.columns + nulls, schema=schema)
+        for rows in tail:
+            if rows.num_rows:
+                nulls = [pa.nulls(rows.num_rows, pa.int64())] * len(_FULL_ARROW)
+                yield pa.RecordBatch.from_arrays(nulls + rows.columns, schema=schema)
+
+    def post_leftovers(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        """Post the leftovers in ``order_col`` order; number every
+        receipt, full batches first."""
+        import pyarrow.compute as pc
+
+        full: list[tuple[int, int, int]] = []
+        keys, docs = [], []
+        for batch in batches:
+            is_full = pc.is_valid(batch.column(2))
+            received = batch.filter(is_full)
+            full += zip(*(received.column(i).to_pylist() for i in range(3)))
+            rest = batch.filter(pc.invert(is_full))
+            keys.append(rest.column(3))
+            docs.append(rest.column(4))
+        if not keys:
+            return
+        keys, docs = pa.concat_arrays(keys), pa.concat_arrays(docs)
+        # Arrow's stable ascending sort with nulls first is Spark's order.
+        docs = docs.take(pc.sort_indices(keys, null_placement="at_start")).to_pylist()
+        full.sort()
+        receipts = {
+            "batch_index": list(range(len(full))),
+            "n_records": [size] * len(full),
+            "status": [status for _, _, status in full],
+        }
+        if docs:
+            transport = transport_factory()
+            hdrs = transport_takes_headers(transport)
+        for i in range(0, len(docs), size):
+            chunk = docs[i : i + size]
+            receipts["batch_index"].append(len(receipts["batch_index"]))
+            receipts["n_records"].append(len(chunk))
+            receipts["status"].append(post(transport, hdrs, chunk))
         yield arrow_batch(_RECEIPT_ARROW, receipts)
 
     # T6: ``ignoreNullFields`` leaves null fields out of each record.
-    record = F.to_json(F.struct(*data_cols), {"ignoreNullFields": "true"})
+    record = F.to_json(F.struct(*df.columns), {"ignoreNullFields": "true"})
     return (
-        keyed.repartition("__batch_id")
-        .sortWithinPartitions("__batch_id", "__rn")
-        .select("__batch_id", record.alias("__json"))
-        .mapInArrow(post_partition, schema=RECEIPT_SCHEMA)
+        df.select(F.col(order_col).alias("__key"), record.alias("__json"))
+        .repartition(partitions, "__key")
+        .sortWithinPartitions("__key")
+        .mapInArrow(post_full_runs, schema=passed_on)
+        .repartition(1)
+        .mapInArrow(post_leftovers, schema=RECEIPT_SCHEMA)
     )

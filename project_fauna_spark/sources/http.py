@@ -433,10 +433,11 @@ class FileBackedTransport:
         return 405, "method not allowed"
 
     def _read(self, name: str) -> Response:
-        fp = os.path.join(self.root, name)
-        if not os.path.exists(fp):
+        try:
+            f = open(os.path.join(self.root, name), encoding="utf-8")
+        except FileNotFoundError:
             return 404, "not found"
-        with open(fp, encoding="utf-8") as f:
+        with f:
             return 200, f.read()
 
 

@@ -49,7 +49,7 @@ def api_dir(tmp_path):
 
 def test_python_m_end_to_end(api_dir):
     """``python -m project_fauna_spark`` runs the whole ETL offline."""
-    env = dict(os.environ, PYTHONPATH="/root/repo")
+    env = dict(os.environ, PYTHONPATH=REPO_ROOT)
     proc = subprocess.run(
         [
             sys.executable,
@@ -132,7 +132,6 @@ def test_concurrency_sets_fetch_fan_out(cli_spark, monkeypatch, api_dir):
     """``--concurrency N`` is the partition count of the exchange that
     feeds the detail fetch."""
     from project_fauna_spark import pipeline
-    from project_fauna_spark.cache import release_cached
     from project_fauna_spark.config import parse_args
     from project_fauna_spark.plans.lint import kind, nodes, plan_of, seq
 
@@ -140,8 +139,8 @@ def test_concurrency_sets_fetch_fan_out(cli_spark, monkeypatch, api_dir):
 
     def recording_run_pipeline(*args, **kwargs):
         receipts = real_run_pipeline(*args, **kwargs)
-        # The plan as built, before the CLI runs it.  The pinned records
-        # are read twice, so the fetch shows up once per read of the pin.
+        # The plan as built, before the CLI runs it.  The fetch is the
+        # only Arrow map with the detail columns as its output.
         fan_outs.update(
             n.child().outputPartitioning().numPartitions()
             for n in nodes(plan_of(receipts))
@@ -152,10 +151,7 @@ def test_concurrency_sets_fetch_fan_out(cli_spark, monkeypatch, api_dir):
         return receipts
 
     monkeypatch.setattr(pipeline, "run_pipeline", recording_run_pipeline)
-    try:
-        assert cli.run(parse_args(["--fixture-dir", api_dir, "--concurrency", "3"])) == 0
-    finally:
-        release_cached()
+    assert cli.run(parse_args(["--fixture-dir", api_dir, "--concurrency", "3"])) == 0
     assert fan_outs == {3}
 
 
@@ -207,7 +203,7 @@ def test_env_var_defaults(monkeypatch):
 def test_cli_list_queries_is_instant_and_complete():
     """--list-queries never builds a SparkSession and covers the whole
     registry."""
-    env = dict(os.environ, PYTHONPATH="/root/repo")
+    env = dict(os.environ, PYTHONPATH=REPO_ROOT)
     proc = subprocess.run(
         [sys.executable, "-m", "project_fauna_spark", "--list-queries"],
         capture_output=True,
@@ -223,7 +219,7 @@ def test_cli_list_queries_is_instant_and_complete():
 
 
 def test_cli_query_mode_prints_json_rows():
-    env = dict(os.environ, PYTHONPATH="/root/repo")
+    env = dict(os.environ, PYTHONPATH=REPO_ROOT)
     proc = subprocess.run(
         [
             sys.executable,
@@ -250,7 +246,7 @@ def test_cli_query_mode_prints_json_rows():
 
 
 def test_cli_unknown_query_exits_2():
-    env = dict(os.environ, PYTHONPATH="/root/repo")
+    env = dict(os.environ, PYTHONPATH=REPO_ROOT)
     proc = subprocess.run(
         [sys.executable, "-m", "project_fauna_spark", "--query", "no_such_query"],
         capture_output=True,

@@ -304,41 +304,134 @@ def test_pipeline_fetches_each_detail_once(spark, api_dir, tmp_path):
     assert len(statuses) == 100 + injected
 
 
-@pytest.mark.parametrize("batch_size", [7, 100])
-def test_globally_indexed_batches_span_buckets(spark, tmp_path, batch_size):
-    """Batch boundaries follow the global id order across many row-number
-    buckets (and straddle them), whatever the input partitioning."""
-    from project_fauna_spark.cache import release_cached
+def _groups(spark, keys, partitions):
+    """``pmod(hash(key), partitions)`` of each long ``key``, by Spark."""
+    df = spark.createDataFrame([(k,) for k in keys], "k long")
+    return dict(df.select("k", F.pmod(F.hash("k"), F.lit(partitions))).collect())
+
+
+def _membership_rule(spark, rows, order_col, batch_size, partitions):
+    """The sink's documented membership, computed apart from it: group
+    ``pmod(hash(order_col), partitions)``, sorted ``batch_size`` chunks
+    per group, then the groups' leftovers chunked in ``order_col``
+    order.  Returns the bodies, full batches first."""
+    group_of = _groups(spark, [r[order_col] for r in rows], partitions)
+    full, leftovers = [], []
+    for g in range(partitions):
+        members = sorted((r for r in rows if group_of[r[order_col]] == g), key=lambda r: r[order_col])
+        cut = len(members) - len(members) % batch_size
+        full += [members[i : i + batch_size] for i in range(0, cut, batch_size)]
+        leftovers += members[cut:]
+    leftovers.sort(key=lambda r: r[order_col])
+    return full + [leftovers[i : i + batch_size] for i in range(0, len(leftovers), batch_size)]
+
+
+def _post(tmp_path, name, df, batch_size, partitions=8):
+    """Run the sink over ``df``; return its receipts and posted bodies."""
     from project_fauna_spark.sinks.batch_post import post_batches_globally_indexed
 
-    # 150 ids over 10 buckets of 16 ids; every 4th name is NULL (T6).
+    root = str(tmp_path / name)
+    os.makedirs(root)
+    receipts = post_batches_globally_indexed(
+        df,
+        lambda: FileBackedTransport(root),
+        order_col="id",
+        batch_size=batch_size,
+        policy=FAST,
+        partitions=partitions,
+    ).collect()
+    posts = os.path.join(root, "posts")
+    bodies = _posted_bodies(root) if os.path.isdir(posts) else []
+    return sorted(tuple(r) for r in receipts), bodies
+
+
+def _sorted_bodies(bodies):
+    return sorted(bodies, key=lambda b: [r["id"] for r in b])
+
+
+@pytest.mark.parametrize("batch_size", [7, 100])
+def test_globally_indexed_batches_span_buckets(spark, tmp_path, batch_size):
+    """Receipts number the batches of every hash group (bucket) in one
+    global sequence: posted bodies follow the documented membership
+    rule whatever the input partitioning, and receipts are
+    ``(i, len, 200)`` with the only partial batch last."""
+    # 150 ids; every 4th name is NULL (T6).
     rows = [(3 * i + 1, None if i % 4 == 0 else f"n{i}") for i in range(150)]
-    expected = [
-        {"id": rid, **({"name": name} if name is not None else {})} for rid, name in rows
-    ]
+    records = [{"id": rid, **({"name": name} if name is not None else {})} for rid, name in rows]
+    expected = _membership_rule(spark, records, "id", batch_size, partitions=8)
     base = spark.createDataFrame(list(reversed(rows)), "id long, name string")
     seen = {}
     for n_parts in (1, 7):
-        root = str(tmp_path / f"sink-{n_parts}")
-        os.makedirs(root)
-        receipts_df = post_batches_globally_indexed(
-            base.repartition(n_parts),
-            lambda: FileBackedTransport(root),
-            order_col="id",
-            batch_size=batch_size,
-            policy=FAST,
-            bucket_rows=16,
-        )
-        # The pinned input is read by both the bucket row numbers and
-        # the bucket counts; no other node reads it.
-        assert kinds(plan_of(receipts_df, "optimizedPlan"))["InMemoryRelation"] == 2
-        receipts = sorted(tuple(r) for r in receipts_df.collect())
-        release_cached()
-        chunks = [expected[i : i + batch_size] for i in range(0, len(expected), batch_size)]
-        assert sorted(_posted_bodies(root), key=lambda b: b[0]["id"]) == chunks
-        assert receipts == [(i, len(c), 200) for i, c in enumerate(chunks)]
+        receipts, bodies = _post(tmp_path, f"sink-{n_parts}", base.repartition(n_parts), batch_size)
+        assert _sorted_bodies(bodies) == _sorted_bodies(expected)
+        assert receipts == [(i, len(b), 200) for i, b in enumerate(expected)]
+        assert [n for _, n, _ in receipts[:-1]] == [batch_size] * (len(receipts) - 1)
         seen[n_parts] = receipts
     assert seen[1] == seen[7]
+
+
+def test_sink_edge_cases(spark, tmp_path):
+    """Empty input posts nothing; n < size is one partial batch;
+    leftovers that fill whole batches leave no partial batch; keys that
+    all hash to one group are posted from that group."""
+    schema = "id long, name string"
+
+    def frame(ids):
+        return spark.createDataFrame([(i, f"n{i}") for i in ids], schema)
+
+    assert _post(tmp_path, "empty", frame([]), 10) == ([], [])
+
+    receipts, bodies = _post(tmp_path, "small", frame(range(5)), 10)
+    assert receipts == [(0, 5, 200)]
+    assert [[r["id"] for r in b] for b in bodies] == [list(range(5))]
+
+    # Two groups of 6 ids at size 4: each posts one full batch and
+    # leaves 2, so the 4 leftovers form one more full batch.
+    group_of = _groups(spark, range(200), 2)
+    ids = [i for i in range(200) if group_of[i] == 0][:6] + [
+        i for i in range(200) if group_of[i] == 1
+    ][:6]
+    receipts, bodies = _post(tmp_path, "exact", frame(ids), 4, partitions=2)
+    assert receipts == [(i, 4, 200) for i in range(3)]
+    assert sorted(r["id"] for b in bodies for r in b) == sorted(ids)
+
+    # Every key in group 0 of 3: all full batches come from one task.
+    group_of = _groups(spark, range(300), 3)
+    ids = [i for i in range(300) if group_of[i] == 0][:23]
+    records = [{"id": i, "name": f"n{i}"} for i in ids]
+    expected = _membership_rule(spark, records, "id", 5, partitions=3)
+    receipts, bodies = _post(tmp_path, "skew", frame(ids).repartition(4), 5, partitions=3)
+    assert _sorted_bodies(bodies) == _sorted_bodies(expected)
+    assert receipts == [(i, 5, 200) for i in range(4)] + [(4, 3, 200)]
+
+
+def test_sink_plan_has_no_pin_window_aggregate_or_broadcast(spark, tmp_path, api_dir):
+    """The sink is two shuffles and two Arrow maps over its input: no
+    pin, window, aggregate or broadcast.  ``run_pipeline`` pins nothing
+    and adds only the fetch's shuffle."""
+    from project_fauna_spark import cache
+    from project_fauna_spark.plans.lint import kind, nodes
+    from project_fauna_spark.sinks.batch_post import post_batches_globally_indexed
+
+    receipts = post_batches_globally_indexed(
+        spark.createDataFrame([(1, "a")], "id long, name string"),
+        lambda: FileBackedTransport(str(tmp_path)),
+        order_col="id",
+    )
+    for phase in ("optimizedPlan", "executedPlan"):
+        found = [kind(n) for n in nodes(plan_of(receipts, phase))]
+        assert not [
+            k
+            for k in found
+            if k in ("InMemoryRelation", "WindowExec", "Window", "BroadcastExchangeExec")
+            or "Aggregate" in k
+        ], found
+    assert kinds(plan_of(receipts))["ShuffleExchangeExec"] == 2
+
+    cache.release_cached()
+    receipts = run_pipeline(spark, lambda: FileBackedTransport(api_dir), policy=FAST)
+    assert not cache._TRACKED
+    assert kinds(plan_of(receipts))["ShuffleExchangeExec"] == 3
 
 
 def _write_api(root, records, page_size):

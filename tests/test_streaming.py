@@ -90,12 +90,13 @@ def test_stateful_user_profile(spark):
 def test_foreach_batch_to_post_sink(spark, tmp_path):
     """Stream → foreachBatch → globally-indexed batch-POST sink
     end-to-end: within each micro-batch every body but the last holds
-    exactly 100 records, and the bodies chunk the event_id order."""
-    from project_fauna_spark.cache import release_cached
+    exactly 100 records, and the bodies follow the sink's membership
+    rule on event_id."""
     from project_fauna_spark.streaming import events_file_stream
     from project_fauna_spark.streaming.pipelines import stream_to_batch_sink
     from project_fauna_spark.sinks.batch_post import post_batches_globally_indexed
     from project_fauna_spark.sources.http import FileBackedTransport, RetryPolicy
+    from tests.test_http_pipeline import _membership_rule
     import json, os
 
     api_dir = str(tmp_path / "api")
@@ -114,16 +115,16 @@ def test_foreach_batch_to_post_sink(spark, tmp_path):
             batch_size=100,
             policy=fast,
         ).collect()
-        release_cached()
         bodies = []
         for name in set(os.listdir(posts_dir)) - before:
             with open(os.path.join(posts_dir, name)) as f:
                 bodies.append([r["event_id"] for r in json.load(f)])
-        bodies.sort(key=lambda ids: ids[0])
-        assert all(len(ids) == 100 for ids in bodies[:-1]), [len(ids) for ids in bodies]
-        assert [i for ids in bodies for i in ids] == sorted(
-            r["event_id"] for r in rows.collect()
-        )
+        sizes = sorted((len(ids) for ids in bodies), reverse=True)
+        assert all(n == 100 for n in sizes[:-1]), sizes
+        assert [r["n_records"] for r in sorted(receipts)][:-1] == [100] * (len(receipts) - 1)
+        events = [{"event_id": r["event_id"]} for r in rows.collect()]
+        expected = _membership_rule(spark, events, "event_id", 100, partitions=8)
+        assert sorted(bodies) == sorted([r["event_id"] for r in b] for b in expected)
         received.append(sum(r["n_records"] for r in receipts))
 
     stream = events_file_stream(spark, SF)
